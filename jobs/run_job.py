@@ -8,8 +8,10 @@
 Jobs: pagerank | cc | lpa | triangles | partition | extract |
 metrics | scc | bfs | kcore | walks | node2vec | clustering |
 census | modularity | quantiles | topo | hll | heavy_hitters.
-All iterative jobs checkpoint per superstep and resume from the last
-complete snapshot when re-launched with the same --run-id.
+pagerank, cc and lpa checkpoint every superstep and resume from the
+last complete snapshot when re-launched with the same --run-id; the
+other iterative jobs (scc, bfs, kcore, walks, topo) recompute from the
+start.
 """
 
 from __future__ import annotations
@@ -52,22 +54,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     edges = edges_from_lineitem(spark, args.sf_dir)
 
-    if args.job == "pagerank":
-        from linkgraph.pregel import CheckpointManager, pagerank_checkpointed
+    if args.job in ("pagerank", "cc", "lpa"):
+        from linkgraph import pregel
 
-        ckpt = CheckpointManager(spark, args.checkpoint_dir, args.run_id)
-        out = pagerank_checkpointed(spark, edges, ckpt, iterations=args.iterations)
+        ckpt = pregel.CheckpointManager(spark, args.checkpoint_dir, args.run_id)
+        if args.job == "cc":
+            out = pregel.cc_checkpointed(
+                spark, edges, ckpt, max_iterations=args.iterations
+            )
+        else:
+            kernel = (pregel.pagerank_checkpointed if args.job == "pagerank"
+                      else pregel.lpa_checkpointed)
+            out = kernel(spark, edges, ckpt, iterations=args.iterations)
         print(json.dumps({"counters": ckpt.counters()[-3:]}))
-    elif args.job == "cc":
-        from linkgraph.pregel import CheckpointManager, cc_checkpointed
-
-        ckpt = CheckpointManager(spark, args.checkpoint_dir, args.run_id)
-        out = cc_checkpointed(spark, edges, ckpt, max_iterations=args.iterations)
-        print(json.dumps({"counters": ckpt.counters()[-3:]}))
-    elif args.job == "lpa":
-        from linkgraph.algos.lpa import label_propagation
-
-        out = label_propagation(edges, iterations=args.iterations)
     elif args.job == "triangles":
         from linkgraph.algos.triangles import triangle_counts
 

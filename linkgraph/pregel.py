@@ -11,13 +11,33 @@ layout (``<base>/<run_id>/superstep=N/`` + ``counters.json`` +
 ``_SUCCESS``) with the same semantics — an atomic, listable snapshot
 per superstep. The jars are absent in this environment, so the parquet
 backend is the tested path; the Iceberg adapter writes through the
-identical interface. Writing each superstep also truncates Catalyst
-lineage (the plan would otherwise double per iteration — SURVEY.md §4).
+identical interface.
+
+A snapshot commits when its ``counters.json`` appears, and that file is
+written to a temporary name and renamed into place: a driver killed
+between the data write and the rename leaves the previous superstep as
+the latest one, never a torn counter record. ``wall_ms`` is stamped
+after the snapshot write, so it times the superstep's jobs, not just
+the building of its plan.
+
+Lineage is cut in two places. Each superstep's state is read back from
+its snapshot (with the schema it was written with, so the read-back
+runs no schema-inference job), which stops the plan from growing per
+iteration (SURVEY.md §4). The static edge side is cut once at setup
+with ``localCheckpoint`` (the ``linkgraph.rolling`` idiom), so no
+superstep re-analyzes the caller's input plan (e.g. extract's Arrow
+parse and joins). ``localCheckpoint`` blocks live on the executors and
+are not fault-tolerant: if an executor holding them is lost, the run
+fails, and recovery is the resume path — rerun with the same run id and
+the loop continues from the last committed snapshot. Cached and
+checkpointed setup tables are released before a kernel returns; the
+state it returns is snapshot-backed.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 import warnings
 from pathlib import Path
@@ -57,26 +77,41 @@ class CheckpointManager:
         ]
         return max(done) if done else None
 
-    def write(self, superstep: int, state: DataFrame, counters: dict) -> DataFrame:
+    def write(
+        self, superstep: int, state: DataFrame, counters: dict,
+        t0: float | None = None,
+    ) -> DataFrame:
         """Persist state + counters; returns the read-back state (fresh
         lineage). Data lives under ``data/`` so the counter record never
-        shadows a parquet footer; the counters file is written last and
-        acts as the snapshot commit marker.
+        shadows a parquet footer; the counters file is committed last
+        (atomically, see ``_commit_json``) and acts as the snapshot
+        commit marker.
+
+        ``t0``: the ``time.perf_counter()`` reading at which the caller
+        started building this superstep. ``wall_ms`` is then stamped
+        after the parquet write, so it covers the jobs the lazy plan
+        runs, not only the plan construction.
 
         ``max_partition_skew`` is filled in from the snapshot just
         written (parquet footer row counts — one file per task
         partition) unless the caller provides it, so recording the skew
         counter costs zero extra Spark actions (it used to be a second
-        full scan of the new state every superstep)."""
+        full scan of the new state every superstep).
+
+        The read-back passes the written schema, so it launches no
+        schema-inference job."""
         d = self._dir(superstep)
         state.write.mode("overwrite").parquet(str(d / "data"))
         counters = dict(counters)
+        if t0 is not None:
+            counters["wall_ms"] = round((time.perf_counter() - t0) * 1000, 1)
         if "max_partition_skew" not in counters:
             counters["max_partition_skew"] = round(_file_skew(d / "data"), 4)
-        (d / "counters.json").write_text(
-            json.dumps({"run_id": self.run_id, "superstep": superstep, **counters})
+        _commit_json(
+            d / "counters.json",
+            {"run_id": self.run_id, "superstep": superstep, **counters},
         )
-        return self.spark.read.parquet(str(d / "data"))
+        return self.spark.read.schema(state.schema).parquet(str(d / "data"))
 
     def read(self, superstep: int) -> DataFrame:
         return self.spark.read.parquet(str(self._dir(superstep) / "data"))
@@ -86,6 +121,15 @@ class CheckpointManager:
         for p in sorted(self.base.glob("superstep=*/counters.json")):
             out.append(json.loads(p.read_text()))
         return sorted(out, key=lambda c: c["superstep"])
+
+
+def _commit_json(path: Path, rec: dict) -> None:
+    """Write ``rec`` to ``path`` through a temporary file and a rename,
+    so a reader sees either the previous file or the whole new one,
+    never a torn record (``latest()`` ignores the ``.tmp`` name)."""
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(json.dumps(rec))
+    os.replace(tmp, path)
 
 
 def _file_skew(data_dir: Path) -> float:
@@ -136,6 +180,13 @@ def pagerank_checkpointed(
     computation continues from s (kill the driver mid-run and rerun —
     the same final ranks come out; tests/test_pregel.py proves it).
 
+    Setup checkpoints one out-degree table and reads n, m2 and the
+    maximum degree off that same job. The edge list is symmetrized, so
+    the table's keys are exactly the vertex set (n = its row count,
+    edges scanned per superstep = the sum of out-degrees), and a
+    vertex's in-degree equals its out-degree. The edge side ``links``
+    is then checkpointed once; both are released before returning.
+
     ``auto_salt_skew``: the skew counter ACTS, not just records. The
     routed-message skew per aggregation key is max/avg in-degree of
     ``links`` (a hub with in-degree 10^8 concentrates one reducer's
@@ -147,91 +198,99 @@ def pagerank_checkpointed(
     tests pin 1e-6). Counters record ``msg_skew`` and ``salted`` so an
     operator can see the decision in the lineage log.
     """
-    from linkgraph.graph import symmetrize, vertices
+    from pyspark.sql import Observation
+
+    from linkgraph.graph import symmetrize
+    from linkgraph.rolling import release
 
     sym = symmetrize(edges)
-    out_deg = sym.groupBy("src").agg(F.count("*").alias("outdeg"))
-    links = sym.join(out_deg, "src").select("src", "dst", "outdeg").cache()
-    m2 = links.count()  # edges scanned per superstep (both directions)
-    verts = vertices(edges).cache()
-    n = verts.count()
-    teleport = (1.0 - damping) / n
-
-    salted = False
-    msg_skew = 0.0
-    if auto_salt_skew is not None:
-        stats = (
-            links.groupBy("dst").agg(F.count("*").alias("_in"))
-            .agg(F.max("_in").alias("mx"), F.avg("_in").alias("av"))
-            .first()
+    # n, m2 and the max degree ride the out-degree checkpoint as an
+    # Observation: zero jobs beyond the checkpoint itself
+    deg_obs = Observation()
+    out_deg = (
+        sym.groupBy("src").agg(F.count("*").alias("outdeg"))
+        .observe(
+            deg_obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("outdeg").alias("m2"),
+            F.max("outdeg").alias("mx"),
         )
-        msg_skew = float(stats["mx"] / stats["av"]) if stats["av"] else 0.0
-        if msg_skew > auto_salt_skew:
-            hub_cut = float(stats["av"]) * auto_salt_skew
-            hubs = (
-                links.groupBy("dst").agg(F.count("*").alias("_in"))
-                .where(F.col("_in") > hub_cut)
-                .select("dst")
-            )
-            links = (
-                links.join(
-                    F.broadcast(hubs.withColumn("_hot", F.lit(True))), "dst", "left"
-                )
-                .withColumn(
-                    "_salt",
-                    F.when(
-                        F.col("_hot").isNotNull(),
-                        F.pmod(F.xxhash64("src"), F.lit(n_salts)),
-                    ).otherwise(F.lit(0)).cast("int"),
-                )
-                .drop("_hot")
-                .cache()
-            )
-            links.count()
-            salted = True
+        .localCheckpoint()
+    )
+    links = None
+    try:
+        stats = deg_obs.get
+        n, m2 = stats["n"], stats["m2"]
+        teleport = (1.0 - damping) / n
 
-    start = ckpt.latest() if resume else None
-    if start is None:
-        ranks = verts.withColumn("rank", F.lit(1.0 / n))
-        ranks = ckpt.write(
-            0, ranks,
-            {"edges_scanned": 0, "messages_sent": 0,
-             "max_partition_skew": 0.0, "wall_ms": 0.0,
-             "msg_skew": round(msg_skew, 4), "salted": salted},
-        )
-        start = 0
-    else:
-        _warn_if_beyond(ckpt, start, iterations)
-        ranks = ckpt.read(start)
+        links = sym.join(out_deg, "src").select("src", "dst", "outdeg")
+        salted = False
+        msg_skew = 0.0
+        if auto_salt_skew is not None:
+            avg_in = m2 / n
+            msg_skew = stats["mx"] / avg_in
+            if msg_skew > auto_salt_skew:
+                hubs = out_deg.where(
+                    F.col("outdeg") > avg_in * auto_salt_skew
+                ).select(F.col("src").alias("dst"), F.lit(True).alias("_hot"))
+                links = (
+                    links.join(F.broadcast(hubs), "dst", "left")
+                    .withColumn(
+                        "_salt",
+                        F.when(
+                            F.col("_hot").isNotNull(),
+                            F.pmod(F.xxhash64("src"), F.lit(n_salts)),
+                        ).otherwise(F.lit(0)).cast("int"),
+                    )
+                    .drop("_hot")
+                )
+                salted = True
+        links = links.localCheckpoint()
 
-    for s in range(start + 1, iterations + 1):
-        t0 = time.time()
-        joined = links.join(ranks, links["src"] == ranks["vid"])
-        if salted:
-            msgs = joined.select(
-                F.col("dst").alias("vid"), "_salt",
-                (F.col("rank") / F.col("outdeg")).alias("c"),
+        start = ckpt.latest() if resume else None
+        if start is None:
+            ranks = ckpt.write(
+                0,
+                out_deg.select(F.col("src").alias("vid"), F.lit(1.0 / n).alias("rank")),
+                {"edges_scanned": 0, "messages_sent": 0,
+                 "max_partition_skew": 0.0, "wall_ms": 0.0,
+                 "msg_skew": round(msg_skew, 4), "salted": salted},
             )
-            partial = msgs.groupBy("vid", "_salt").agg(
-                F.sum("c").alias("_pc")
-            )
-            new_ranks = partial.groupBy("vid").agg(
-                (F.lit(teleport) + F.lit(damping) * F.sum("_pc")).alias("rank")
-            )
+            start = 0
         else:
-            msgs = joined.select(
-                F.col("dst").alias("vid"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            new_ranks = msgs.groupBy("vid").agg(
-                (F.lit(teleport) + F.lit(damping) * F.sum("c")).alias("rank")
-            )
-        ranks = ckpt.write(
-            s, new_ranks,
-            {"edges_scanned": m2, "messages_sent": m2,
-             "wall_ms": round((time.time() - t0) * 1000, 1),
-             "msg_skew": round(msg_skew, 4), "salted": salted},
-        )  # max_partition_skew folded into the snapshot write
+            _warn_if_beyond(ckpt, start, iterations)
+            ranks = ckpt.read(start)
+
+        for s in range(start + 1, iterations + 1):
+            t0 = time.perf_counter()
+            joined = links.join(ranks, links["src"] == ranks["vid"])
+            if salted:
+                msgs = joined.select(
+                    F.col("dst").alias("vid"), "_salt",
+                    (F.col("rank") / F.col("outdeg")).alias("c"),
+                )
+                partial = msgs.groupBy("vid", "_salt").agg(
+                    F.sum("c").alias("_pc")
+                )
+                new_ranks = partial.groupBy("vid").agg(
+                    (F.lit(teleport) + F.lit(damping) * F.sum("_pc")).alias("rank")
+                )
+            else:
+                msgs = joined.select(
+                    F.col("dst").alias("vid"),
+                    (F.col("rank") / F.col("outdeg")).alias("c"),
+                )
+                new_ranks = msgs.groupBy("vid").agg(
+                    (F.lit(teleport) + F.lit(damping) * F.sum("c")).alias("rank")
+                )
+            ranks = ckpt.write(
+                s, new_ranks,
+                {"edges_scanned": m2, "messages_sent": m2,
+                 "msg_skew": round(msg_skew, 4), "salted": salted},
+                t0=t0,
+            )  # max_partition_skew folded into the snapshot write
+    finally:
+        release(out_deg, links)
     return ranks
 
 
@@ -247,9 +306,6 @@ def cc_checkpointed(
     final superstep so resume does not re-iterate."""
     from linkgraph.graph import symmetrize, vertices
 
-    sym = symmetrize(edges).cache()
-    m2 = sym.count()
-
     def _label_sum(df: DataFrame) -> str:
         # Exact decimal sum of labels: unchanged between supersteps iff
         # the (monotone non-increasing) labels hit a fixpoint — replaces
@@ -260,51 +316,52 @@ def cc_checkpointed(
         )
 
     start = ckpt.latest() if resume else None
-    if start is None:
-        labels = vertices(edges).withColumn("component", F.col("vid"))
-        labels = ckpt.write(
-            0, labels,
-            {"edges_scanned": 0, "messages_sent": 0,
-             "max_partition_skew": 0.0, "wall_ms": 0.0, "converged": False},
-        )
-        start = 0
-        prev_sum = _label_sum(labels)
-    else:
-        if any(
-            c.get("converged") for c in ckpt.counters() if c["superstep"] == start
-        ):
-            return ckpt.read(start)
-        _warn_if_beyond(ckpt, start, max_iterations)
-        labels = ckpt.read(start)
+    if start is not None and any(
+        c.get("converged") for c in ckpt.counters() if c["superstep"] == start
+    ):
+        return ckpt.read(start)
+
+    sym = symmetrize(edges).cache()
+    try:
+        m2 = sym.count()
+        if start is None:
+            labels = vertices(edges).withColumn("component", F.col("vid"))
+            labels = ckpt.write(
+                0, labels,
+                {"edges_scanned": 0, "messages_sent": 0,
+                 "max_partition_skew": 0.0, "wall_ms": 0.0, "converged": False},
+            )
+            start = 0
+        else:
+            _warn_if_beyond(ckpt, start, max_iterations)
+            labels = ckpt.read(start)
         prev_sum = _label_sum(labels)
 
-    for s in range(start + 1, max_iterations + 1):
-        t0 = time.time()
-        nbr = sym.join(labels, sym["src"] == labels["vid"]).select(
-            F.col("dst").alias("vid"), "component"
-        )
-        new_labels = (
-            nbr.unionByName(labels.select("vid", "component"))
-            .groupBy("vid")
-            .agg(F.min("component").alias("component"))
-        )
-        new_labels = ckpt.write(
-            s, new_labels,
-            {"edges_scanned": m2, "messages_sent": m2,
-             "wall_ms": round((time.time() - t0) * 1000, 1),
-             "converged": False},
-        )  # max_partition_skew folded into the snapshot write
-        cur_sum = _label_sum(new_labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            # patch the just-written counter record in place — the
-            # snapshot itself is already durable
-            d = ckpt._dir(s) / "counters.json"
-            rec = json.loads(d.read_text())
-            rec["converged"] = True
-            d.write_text(json.dumps(rec))
-            break
-        prev_sum = cur_sum
+        for s in range(start + 1, max_iterations + 1):
+            t0 = time.perf_counter()
+            nbr = sym.join(labels, sym["src"] == labels["vid"]).select(
+                F.col("dst").alias("vid"), "component"
+            )
+            new_labels = (
+                nbr.unionByName(labels.select("vid", "component"))
+                .groupBy("vid")
+                .agg(F.min("component").alias("component"))
+            )
+            labels = ckpt.write(
+                s, new_labels,
+                {"edges_scanned": m2, "messages_sent": m2, "converged": False},
+                t0=t0,
+            )  # max_partition_skew folded into the snapshot write
+            cur_sum = _label_sum(labels)
+            if cur_sum == prev_sum:
+                # mark the just-committed record converged — the
+                # snapshot itself is already durable
+                d = ckpt._dir(s) / "counters.json"
+                _commit_json(d, {**json.loads(d.read_text()), "converged": True})
+                break
+            prev_sum = cur_sum
+    finally:
+        sym.unpersist()
     return labels
 
 
@@ -322,38 +379,41 @@ def lpa_checkpointed(
     from linkgraph.graph import symmetrize, vertices
 
     sym = symmetrize(edges).cache()
-    m2 = sym.count()
+    try:
+        m2 = sym.count()
 
-    start = ckpt.latest() if resume else None
-    if start is None:
-        labels = vertices(edges).withColumn("label", F.col("vid"))
-        labels = ckpt.write(
-            0, labels,
-            {"edges_scanned": 0, "messages_sent": 0,
-             "max_partition_skew": 0.0, "wall_ms": 0.0},
-        )
-        start = 0
-    else:
-        _warn_if_beyond(ckpt, start, iterations)
-        labels = ckpt.read(start)
+        start = ckpt.latest() if resume else None
+        if start is None:
+            labels = vertices(edges).withColumn("label", F.col("vid"))
+            labels = ckpt.write(
+                0, labels,
+                {"edges_scanned": 0, "messages_sent": 0,
+                 "max_partition_skew": 0.0, "wall_ms": 0.0},
+            )
+            start = 0
+        else:
+            _warn_if_beyond(ckpt, start, iterations)
+            labels = ckpt.read(start)
 
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
-    for s in range(start + 1, iterations + 1):
-        t0 = time.time()
-        counts = (
-            sym.join(labels, sym["src"] == labels["vid"])
-            .select(F.col("dst").alias("vid"), "label")
-            .groupBy("vid", "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        new_labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", "label")
-        )
-        labels = ckpt.write(
-            s, new_labels,
-            {"edges_scanned": m2, "messages_sent": m2,
-             "wall_ms": round((time.time() - t0) * 1000, 1)},
-        )  # max_partition_skew folded into the snapshot write
+        w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
+        for s in range(start + 1, iterations + 1):
+            t0 = time.perf_counter()
+            counts = (
+                sym.join(labels, sym["src"] == labels["vid"])
+                .select(F.col("dst").alias("vid"), "label")
+                .groupBy("vid", "label")
+                .agg(F.count("*").alias("cnt"))
+            )
+            new_labels = (
+                counts.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("vid", "label")
+            )
+            labels = ckpt.write(
+                s, new_labels,
+                {"edges_scanned": m2, "messages_sent": m2},
+                t0=t0,
+            )  # max_partition_skew folded into the snapshot write
+    finally:
+        sym.unpersist()
     return labels

@@ -64,3 +64,18 @@ class RollingCheckpoint:
         self._grandparent_jrdd = self._prev_jrdd
         self._prev_jrdd = _checkpointed_jrdd(out)
         return out
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free the storage each DataFrame pins: the checkpointed RDD behind
+    a ``localCheckpoint`` result, else the ``cache()`` entry (a no-op for
+    a DataFrame that holds neither). ``None`` entries are skipped, so a
+    ``finally`` block can release a table its ``try`` never built."""
+    for df in dfs:
+        if df is None:
+            continue
+        jrdd = _checkpointed_jrdd(df)
+        if jrdd is not None:
+            jrdd.unpersist(False)
+        else:
+            df.unpersist()

@@ -1,12 +1,28 @@
 """Checkpointed superstep loop: resumability (kill + rerun ⇒ identical
-final state), monotone lineage counters, convergence flags."""
+final state), monotone lineage counters, convergence flags, atomic
+snapshot commits, released storage and pinned job counts."""
+
+import os
+import time
 
 import numpy as np
 import pytest
 
 from linkgraph.oracle.numpy_ref import components_py, pagerank_np
-from linkgraph.pregel import CheckpointManager, cc_checkpointed, pagerank_checkpointed
+from linkgraph.pregel import (
+    CheckpointManager,
+    cc_checkpointed,
+    lpa_checkpointed,
+    pagerank_checkpointed,
+)
 from linkgraph.synth import graph_edges
+
+# Jobs pagerank_checkpointed launches on a cached input in the test
+# session (local[4], 8 shuffle partitions): setup (out-degree checkpoint,
+# edge-side checkpoint, superstep-0 snapshot) and each further superstep
+# (broadcast of the ranks, message shuffle, snapshot write)
+PR_SETUP_JOBS = 5
+PR_SUPERSTEP_JOBS = 3
 
 
 @pytest.fixture()
@@ -199,3 +215,151 @@ def test_warns_when_checkpoint_beyond_requested(spark, edges_df, ckpt_dir):
         w.simplefilter("always")
         pagerank_checkpointed(spark, edges_df(edges), ckpt, iterations=2)
         assert any("already holds superstep" in str(c.message) for c in caught)
+
+
+def _cached(df):
+    df = df.cache()
+    df.count()
+    return df
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_wall_ms_times_the_superstep(spark, edges_df, ckpt_dir):
+    """wall_ms is stamped after the snapshot write, so it covers the
+    jobs each superstep runs and the supersteps account for most of the
+    call's wall time."""
+    e = _cached(edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)))
+    ckpt = CheckpointManager(spark, ckpt_dir, "walls")
+    t0 = time.perf_counter()
+    pagerank_checkpointed(spark, e, ckpt, iterations=10)
+    call_ms = (time.perf_counter() - t0) * 1000
+    e.unpersist()
+    step_ms = sum(c["wall_ms"] for c in ckpt.counters())
+    assert step_ms >= 0.5 * call_ms, (step_ms, call_ms)
+
+
+def test_crash_before_counter_commit_keeps_previous_superstep(
+    spark, edges_df, ckpt_dir, monkeypatch
+):
+    """A driver killed after superstep 3's data landed but before its
+    counter record was renamed into place: latest() stays at 2, nothing
+    stays pinned, and a resume matches an uninterrupted run."""
+    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=5)
+    e = edges_df(edges)
+    full = _ranks(
+        pagerank_checkpointed(
+            spark, e, CheckpointManager(spark, ckpt_dir, "whole"), iterations=5
+        )
+    )
+
+    real_replace = os.replace
+
+    def killed_at_3(src, dst):
+        if "superstep=3" in str(dst):
+            raise RuntimeError("driver killed")
+        real_replace(src, dst)
+
+    ckpt = CheckpointManager(spark, ckpt_dir, "torn")
+    before = _persisted(spark)
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", killed_at_3)
+        with pytest.raises(RuntimeError, match="driver killed"):
+            pagerank_checkpointed(spark, e, ckpt, iterations=5)
+    assert _persisted(spark) == before
+    assert (ckpt._dir(3) / "data" / "_SUCCESS").exists()
+    assert not (ckpt._dir(3) / "counters.json").exists()
+    assert ckpt.latest() == 2
+    assert [c["superstep"] for c in ckpt.counters()] == [0, 1, 2]
+
+    resumed = _ranks(
+        pagerank_checkpointed(
+            spark, e, CheckpointManager(spark, ckpt_dir, "torn"), iterations=5
+        )
+    )
+    assert set(resumed) == set(full)
+    assert np.allclose(
+        [full[v] for v in sorted(full)],
+        [resumed[v] for v in sorted(resumed)],
+        atol=1e-12,
+    )
+    assert [c["superstep"] for c in ckpt.counters()] == list(range(6))
+
+
+def test_cc_crash_in_converged_mark_resumes(spark, edges_df, ckpt_dir, monkeypatch):
+    """The converged mark is committed like any counter record: a crash
+    while marking leaves the unmarked record readable, and a resume
+    finishes with the same components and a converged mark."""
+    edges = graph_edges("disconnected", n=80, seed=3)
+    e = edges_df(edges)
+    real_replace = os.replace
+
+    def killed_marking(src, dst):
+        if '"converged": true' in open(src).read():
+            raise RuntimeError("driver killed")
+        real_replace(src, dst)
+
+    ckpt = CheckpointManager(spark, ckpt_dir, "cc-torn")
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", killed_marking)
+        with pytest.raises(RuntimeError, match="driver killed"):
+            cc_checkpointed(spark, e, ckpt)
+    assert not any(c["converged"] for c in ckpt.counters())
+    got = {
+        r["vid"]: r["component"]
+        for r in cc_checkpointed(
+            spark, e, CheckpointManager(spark, ckpt_dir, "cc-torn")
+        ).collect()
+    }
+    assert got == components_py(edges)
+    assert ckpt.counters()[-1]["converged"]
+
+
+def test_durable_kernels_release_storage(spark, edges_df, ckpt_dir):
+    """Every durable kernel returns snapshot-backed state and releases
+    what it cached or checkpointed: the persisted-RDD count returns to
+    its starting value."""
+    star = [(0, i) for i in range(1, 60)] + [(i, i + 1) for i in range(60, 80)]
+    e = edges_df(star)
+    runs = {
+        "pagerank": lambda ck: pagerank_checkpointed(spark, e, ck, iterations=2),
+        "salted": lambda ck: pagerank_checkpointed(
+            spark, e, ck, iterations=2, auto_salt_skew=5.0
+        ),
+        "cc": lambda ck: cc_checkpointed(spark, e, ck),
+        "lpa": lambda ck: lpa_checkpointed(spark, e, ck, iterations=2),
+    }
+    for name, run in runs.items():
+        ckpt = CheckpointManager(spark, ckpt_dir, f"release-{name}")
+        before = _persisted(spark)
+        out = run(ckpt)
+        assert _persisted(spark) == before, name
+        assert out.count() == 81, name  # the returned state is still readable
+    assert CheckpointManager(spark, ckpt_dir, "release-salted").counters()[-1]["salted"]
+
+
+def test_pagerank_job_count_pinned(spark, edges_df, ckpt_dir):
+    """One superstep costs PR_SUPERSTEP_JOBS jobs and setup at most
+    PR_SETUP_JOBS: a change that adds a job to either must say why."""
+    sc = spark.sparkContext
+    e = _cached(edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)))
+
+    def jobs(iterations: int) -> int:
+        group = f"pr-jobs-{iterations}"
+        sc.setJobGroup(group, "pagerank_checkpointed job count")
+        try:
+            pagerank_checkpointed(
+                spark, e, CheckpointManager(spark, ckpt_dir, group),
+                iterations=iterations,
+            )
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    setup, two, three = jobs(0), jobs(2), jobs(3)
+    e.unpersist()
+    assert three - two == PR_SUPERSTEP_JOBS
+    assert two - setup == 2 * PR_SUPERSTEP_JOBS
+    assert setup <= PR_SETUP_JOBS

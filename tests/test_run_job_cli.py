@@ -19,7 +19,7 @@ def _zip_linkgraph(tmp_path: Path) -> Path:
     return z
 
 
-def _submit(zip_path, ckpt_dir, iterations, run_id="clirun"):
+def _submit(zip_path, ckpt_dir, iterations, run_id="clirun", job="pagerank"):
     out = subprocess.run(
         [
             "spark-submit", "--master", "local[4]",
@@ -27,7 +27,7 @@ def _submit(zip_path, ckpt_dir, iterations, run_id="clirun"):
             "--conf", "spark.ui.showConsoleProgress=false",
             "--py-files", str(zip_path),
             str(REPO / "jobs" / "run_job.py"),
-            "--job", "pagerank", "--sf-dir", "/root/testdata/sf0.001",
+            "--job", job, "--sf-dir", "/root/testdata/sf0.001",
             "--checkpoint-dir", str(ckpt_dir), "--run-id", run_id,
             "--iterations", str(iterations),
         ],
@@ -56,3 +56,16 @@ def test_spark_submit_pagerank_and_resume(tmp_path):
         int(p.name.split("=")[1]) for p in (ck / "clirun").glob("superstep=*")
     )
     assert done == [0, 1, 2, 3, 4]
+
+
+def test_spark_submit_lpa_resumes(tmp_path):
+    """--job lpa runs the durable kernel: its counters are printed and a
+    re-launch with more iterations continues from the last snapshot."""
+    z = _zip_linkgraph(tmp_path)
+    ck = tmp_path / "ck"
+    first = _submit(z, ck, iterations=1, run_id="lparun", job="lpa")
+    assert first["counters"][-1]["superstep"] == 1
+    second = _submit(z, ck, iterations=2, run_id="lparun", job="lpa")
+    assert [c["superstep"] for c in second["counters"]] == [0, 1, 2]
+    # the first launch's records are untouched by the resume
+    assert second["counters"][:2] == first["counters"]
