@@ -182,7 +182,7 @@ def run_suite(master: str | None = None) -> dict:
         # BEST-OF-2 with per-run values recorded
         from linkgraph.algos.cc import connected_components
         from linkgraph.algos.triangles import triangle_total
-        from linkgraph.csr import pagerank_csr, prepare_bucketed_edges
+        from linkgraph.csr import pagerank_csr
 
         def best_of(name: str, fn, n: int = 2):
             """Record min-of-n timing; returns the output of the
@@ -261,31 +261,21 @@ def run_suite(master: str | None = None) -> dict:
         minhash_lsh_candidates(docs).count()
         queries["minhash_lsh"] = round(time.time() - t0, 3)
 
-        # CSR-block PageRank, measured in its production shape: edges
-        # partitioned + written ONCE as a bucketed table (timed
-        # separately — at 100 TB this is a one-time cost amortized over
-        # every superstep of every run), then supersteps cogroup against
-        # the bucketed scan with zero edge-side exchanges.
-        # best-of-2 since round 5 (r4 showed a 3.4× no-code-change move)
-        best_of(
-            "csr_bucket_write",
-            lambda: prepare_bucketed_edges(edges, k=16, strategy="grid",
-                                           bucket_table="bench_csr_edges"),
-        )
-
+        # one-call in-memory CSR-block PageRank: blobs built into the
+        # cache, then 3 supersteps (best-of-2 since round 5: r4 showed a
+        # 3.4× no-code-change move)
         def run_csr():
             steps: list = []
             pagerank_csr(edges, k=16, strategy="grid", iterations=3,
-                         checkpoint_every=1, bucket_table="bench_csr_edges",
-                         prebuilt=True, superstep_times=steps).count()
+                         checkpoint_every=1, superstep_times=steps).count()
             extras.setdefault("csr_superstep_times", []).append(
                 [round(t, 3) for t in steps]
             )
 
         best_of("pagerank_csr_3steps", run_csr)
 
-        # prebuilt-CSR-blob variant: blocks built once at write time,
-        # supersteps ship k blob rows instead of |E| edge rows
+        # table-backed variant: blobs written once (timed separately —
+        # at 100 TB a one-time cost amortized over every run)
         from linkgraph.csr import pagerank_csr_blocks, prepare_csr_blocks
 
         t0 = time.time()

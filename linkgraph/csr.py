@@ -1,38 +1,43 @@
-"""Per-partition CSR adjacency blocks + CSR-block PageRank.
+"""Per-partition CSR blobs and the one gather-scatter superstep loop.
 
 The Spark mapping of the reference's ``graph_t`` prefix-sum CSR
-(/root/reference/utils/graph.hpp:57-95, build at
-/root/reference/utils/graph.cpp:5-45): each *graph partition* (from any
-``linkgraph.partition`` strategy) becomes a local CSR block
-(``indptr``/``indices`` numpy arrays) built inside an Arrow UDF.
+(``utils/graph.hpp``, built in ``utils/graph.cpp``): each *graph
+partition* (from any ``linkgraph.partition`` strategy) becomes one CSR
+block, built once by ``csr_blobs`` as a row ``(partition, uniq, indptr,
+indices)`` of raw little-endian int64 arrays. ``prepare_csr_blocks``
+writes the blobs to a table bucketed on partition (the superstep's blob
+scan then has zero exchange); ``pagerank_csr`` caches them instead.
 
-Superstep = sparse gather-scatter over the blocks:
+PageRank, CC and LPA run the same superstep (``_supersteps``):
 
-  1. ranks ⋈ mirrors(vid → partition) routes each vertex's rank to
-     every partition holding one of its edges (one shuffle, the
-     superstep's only wide dependency on the rank side);
-  2. cogroup(edges-by-partition, routed-ranks-by-partition) →
-     applyInPandas: the UDF builds/uses the local CSR and emits
-     per-destination *partial* contribution sums (map-side combine in
-     user space — a partition with 10^9 edges emits at most its local
-     vertex count, not its edge count);
-  3. global groupBy(vid).sum finalizes — the two-stage aggregation
-     that makes hub skew survivable (P23 salting semantics built in:
-     the partitioner already split hub edges across partitions, so
-     each hub's partials arrive pre-aggregated per partition).
+  1. state ⋈ routes sends each vertex's value to every partition that
+     holds one of its out-edges (one shuffle sized |V|·RF, which is why
+     partition quality matters for superstep throughput);
+  2. cogroup(blobs, routed values) by partition: one Arrow UDF per block
+     repeats the values over the block's CSR rows and folds them per
+     destination with the kernel's combine (sum, min, or (destination,
+     label) counts), so a block emits at most its local vertex count;
+  3. a per-kernel Spark finalize over the partials (teleport +
+     damping·sum, min with the own label, count sum + argmax) — the
+     second stage of a two-stage aggregation, so a hub whose edges the
+     partitioner split arrives pre-aggregated per block.
 
-At 100 TB the edges side is written once, bucketed by partition, and
-re-read per superstep; the ranks shuffle is sized by replication factor
-(RF ≈ 2-4 with grid/HDRF) — this is exactly why partition quality
-matters for superstep throughput.
+A superstep ships k blob rows through one Arrow crossing instead of |E|
+edge rows, and that crossing is its dominant cost: a removed edge-row
+cogroup that rebuilt the CSR every superstep took 0.96-1.00 s per
+superstep at sf0.1 against 0.60-0.62 s for blobs (BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
+
+import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_BLOB_SCHEMA = "partition long, uniq binary, indptr binary, indices binary"
 
 
 def build_csr(src: np.ndarray, dst: np.ndarray):
@@ -66,32 +71,38 @@ def drop_table_and_location(spark, table: str) -> None:
         pass
 
 
-def prepare_bucketed_edges(
+def _unpack(b: bytes) -> np.ndarray:
+    return np.frombuffer(b, dtype="<i8")
+
+
+def csr_blobs(
     edges: DataFrame,
     k: int,
     strategy: str = "grid",
-    bucket_table: str = "csr_edges_bucketed",
     hasher: str = "xxhash64",
-) -> None:
-    """One-time materialization of the partitioned, symmetrized edge
-    set as a table bucketed on the graph-partition column. This is the
-    'edges written once' half of the 100 TB story: every later
-    CSR-block superstep cogroups against this table with ZERO edge-side
-    exchanges. Pass the table name to ``pagerank_csr(...,
-    bucket_table=..., prebuilt=True)`` to amortize the write across
-    runs/iterations."""
+) -> DataFrame:
+    """One CSR blob row per non-empty partition of the symmetrized,
+    partitioned edge set (lazy). The prefix-sum build (lexsort +
+    unique) runs here once, never inside a superstep."""
     from linkgraph.graph import symmetrize
     from linkgraph.partition.strategies import partition_edges
 
-    spark = edges.sparkSession
     parted = partition_edges(symmetrize(edges), strategy, k, hasher=hasher)
-    drop_table_and_location(spark, bucket_table)
-    (
-        parted.write.bucketBy(k, "partition")
-        .sortBy("partition", "src")
-        .mode("overwrite")
-        .saveAsTable(bucket_table)
-    )
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        uniq, indptr, indices = build_csr(
+            pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+        )
+        return pd.DataFrame(
+            {
+                "partition": [int(pdf["partition"].iloc[0])],
+                "uniq": [uniq.astype("<i8").tobytes()],
+                "indptr": [indptr.astype("<i8").tobytes()],
+                "indices": [indices.astype("<i8").tobytes()],
+            }
+        )
+
+    return parted.groupBy("partition").applyInPandas(build, schema=_BLOB_SCHEMA)
 
 
 def prepare_csr_blocks(
@@ -101,44 +112,236 @@ def prepare_csr_blocks(
     blocks_table: str = "csr_blocks",
     hasher: str = "xxhash64",
 ) -> None:
-    """Materialize PREBUILT per-partition CSR blocks as binary blobs —
-    the SURVEY §4 'CSR block caching' design, one step beyond the
-    bucketed edge table: the prefix-sum build (lexsort + unique) runs
-    ONCE at write time, and each superstep's cogroup ships k blob rows
-    through Arrow instead of |E| edge rows (same bytes, none of the
-    per-row columnar/pandas overhead — measured ~2× faster supersteps
-    at sf0.1). Table layout: (partition, uniq, indptr, indices) with
-    the arrays as raw little-endian int64 bytes, bucketed by partition
-    so the per-superstep scan has zero exchange."""
-    from linkgraph.graph import symmetrize
-    from linkgraph.partition.strategies import partition_edges
-
+    """Write ``csr_blobs`` to ``blocks_table``, bucketed by partition so
+    the superstep's blob scan has zero exchange (SURVEY §4 'CSR block
+    caching': written once, read by every superstep of every run)."""
     spark = edges.sparkSession
-    parted = partition_edges(symmetrize(edges), strategy, k, hasher=hasher)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["partition"].iloc[0])
-        uniq, indptr, indices = build_csr(
-            pdf["src"].to_numpy(), pdf["dst"].to_numpy()
-        )
-        return pd.DataFrame(
-            {
-                "partition": [part],
-                "uniq": [uniq.astype("<i8").tobytes()],
-                "indptr": [indptr.astype("<i8").tobytes()],
-                "indices": [indices.astype("<i8").tobytes()],
-            }
-        )
-
-    blocks = parted.groupBy("partition").applyInPandas(
-        build, schema="partition long, uniq binary, indptr binary, indices binary"
-    )
     drop_table_and_location(spark, blocks_table)
     (
-        blocks.write.bucketBy(k, "partition")
+        csr_blobs(edges, k, strategy, hasher)
+        .write.bucketBy(k, "partition")
         .mode("overwrite")
         .saveAsTable(blocks_table)
     )
+
+
+def _routes(blocks: DataFrame, k: int, source: str) -> tuple[DataFrame, dict]:
+    """The run's routing table, derived from the blobs once: ``vid``,
+    ``parts`` (the partitions holding its out-edges, i.e. the blocks
+    that need its state each superstep) and ``outdeg`` (its CSR row
+    lengths summed over those blocks). The input is symmetrized, so
+    every vertex is a source in some block and the rows are the vertex
+    set. Cut with ``localCheckpoint``; the caller releases it. Returns
+    the table and its statistics ``n`` (vertices), ``m2`` (directed
+    darts) and ``mx`` (largest partition id), read off the same job.
+
+    A blobs table is built for a fixed partitioning; a caller's ``k``
+    that disagrees would silently run with the table's actual
+    partitioning (ADVICE r3), so fail loudly instead. Empty partitions
+    write no blob row, so the check is on the largest partition id: an
+    id ≥ k proves the blobs were built for a larger k."""
+    from pyspark.sql import Observation
+
+    from linkgraph.rolling import release
+
+    def routes_of(batches):
+        for pdf in batches:
+            for part, uniq_b, indptr_b in zip(
+                pdf["partition"], pdf["uniq"], pdf["indptr"]
+            ):
+                yield pd.DataFrame(
+                    {
+                        "vid": _unpack(uniq_b),
+                        "part": part,
+                        "deg_local": np.diff(_unpack(indptr_b)),
+                    }
+                )
+
+    obs = Observation()
+    routes = (
+        blocks.mapInPandas(routes_of, schema="vid long, part long, deg_local long")
+        .groupBy("vid")
+        .agg(
+            F.collect_list("part").alias("parts"),
+            F.sum("deg_local").alias("outdeg"),
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("outdeg").alias("m2"),
+            F.max(F.array_max("parts")).alias("mx"),
+        )
+        .localCheckpoint()
+    )
+    stats = obs.get
+    if stats["mx"] is not None and stats["mx"] >= k:
+        release(routes)
+        raise ValueError(
+            f"blobs {source!r} hold partition id {stats['mx']} >= k={k}; "
+            f"they were built for a larger k — rebuild with "
+            f"prepare_csr_blocks(..., k={k}) or pass the table's k"
+        )
+    return routes, stats
+
+
+def _gather(blk_pdf: pd.DataFrame, val_pdf: pd.DataFrame):
+    """The shared gather step: unpack the block's CSR, align the routed
+    values to its source vertices and repeat each over its CSR row.
+    Returns (destination, source value) per edge of the block."""
+    row = blk_pdf.iloc[0]
+    uniq, indptr, indices = (_unpack(row[c]) for c in ("uniq", "indptr", "indices"))
+    vids = val_pdf["vid"].to_numpy()
+    order = np.argsort(vids)
+    pos = np.searchsorted(vids[order], uniq)
+    values = val_pdf["value"].to_numpy()[order][pos]
+    return indices, np.repeat(values, np.diff(indptr))
+
+
+def _fold(ufunc, identity):
+    """Combine: per-destination partial ``ufunc`` fold of the gathered
+    values (``np.add`` for PageRank, ``np.minimum`` for CC)."""
+
+    def combine(dst: np.ndarray, val: np.ndarray) -> pd.DataFrame:
+        dsts, inv = np.unique(dst, return_inverse=True)
+        partial = np.full(len(dsts), identity, dtype=val.dtype)
+        ufunc.at(partial, inv, val)
+        return pd.DataFrame({"vid": dsts, "partial": partial})
+
+    return combine
+
+
+def _label_counts(dst: np.ndarray, val: np.ndarray) -> pd.DataFrame:
+    """Combine for LPA: partial count per (destination, label) — a
+    block's output is bounded by its distinct pairs, the same map-side
+    combine the join-based path gets from Spark."""
+    pairs, cnt = np.unique(np.stack([dst, val], axis=1), axis=0, return_counts=True)
+    return pd.DataFrame(
+        {"vid": pairs[:, 0], "label": pairs[:, 1], "cnt": cnt.astype(np.int64)}
+    )
+
+
+def _supersteps(
+    blocks: DataFrame,
+    routes: DataFrame,
+    state: DataFrame,
+    value,
+    combine,
+    schema: str,
+    finalize,
+    iterations: int,
+    checkpoint_every: int,
+    superstep_times: list | None = None,
+    ckpt=None,
+    resume: bool = True,
+    counters: dict | None = None,
+    converge: str | None = None,
+) -> DataFrame:
+    """The one CSR superstep loop. Each round joins ``routes`` with
+    ``state``, routes ``value`` (a column of the joined row) to the
+    blocks, runs ``_gather`` + ``combine`` per block (partials of
+    ``schema``) and builds the next state with ``finalize(partials,
+    state)``. ``routes`` and every rolled generation but the returned
+    state are released before returning.
+
+    Lineage is cut by a rolling ``localCheckpoint`` every
+    ``checkpoint_every`` rounds and after the last, or with ``ckpt`` (a
+    ``linkgraph.pregel.CheckpointManager``) by a durable snapshot per
+    round carrying ``counters``; a rerun with the same run_id then
+    resumes from the highest complete superstep. ``converge`` names a
+    state column whose exact decimal sum rides every
+    ``checkpoint_every``-th round's checkpoint or snapshot as an
+    ``Observation``: the loop stops when the sum repeats (monotone
+    hash-min labels are then at their fixpoint). ``superstep_times``
+    receives per-round wall seconds (meaningful with
+    ``checkpoint_every=1``)."""
+    from pyspark.sql import Observation
+
+    from linkgraph.pregel import _warn_if_beyond
+    from linkgraph.rolling import RollingCheckpoint, release
+
+    roll = RollingCheckpoint()
+
+    def step(key, blk_pdf: pd.DataFrame, val_pdf: pd.DataFrame) -> pd.DataFrame:
+        # both sides are never empty: routes come from the blobs, and the
+        # state keeps every vertex (each one is some edge's destination)
+        return combine(*_gather(blk_pdf, val_pdf))
+
+    out = None
+    try:
+        start = ckpt.latest() if ckpt is not None and resume else None
+        if start is not None:
+            _warn_if_beyond(ckpt, start, iterations)
+            state = ckpt.read(start)
+        elif ckpt is not None:
+            state = ckpt.write(
+                0, state,
+                {"edges_scanned": 0, "messages_sent": 0,
+                 "max_partition_skew": 0.0, "wall_ms": 0.0},
+            )
+        elif iterations == 0:
+            state = roll(state)  # outlive the routes it is derived from
+        prev_sum = None
+        for i in range(start or 0, iterations):
+            t0 = time.perf_counter()
+            routed = routes.join(state, "vid").select(
+                F.explode("parts").alias("part"), "vid", value.alias("value")
+            )
+            partials = (
+                blocks.groupby("partition")
+                .cogroup(routed.groupby("part"))
+                .applyInPandas(step, schema=schema)
+            )
+            state = finalize(partials, state)
+            at_checkpoint = (i + 1) % checkpoint_every == 0 or i == iterations - 1
+            obs = None
+            if converge is not None and at_checkpoint:
+                obs = Observation()
+                state = state.observe(
+                    obs, F.sum(F.col(converge).cast("decimal(38,0)")).alias("s")
+                )
+            if ckpt is not None:
+                # max_partition_skew is folded into the snapshot write
+                state = ckpt.write(i + 1, state, counters or {}, t0=t0)
+            elif at_checkpoint:
+                state = roll(state)
+            if superstep_times is not None:
+                superstep_times.append(time.perf_counter() - t0)
+            if obs is not None:
+                if obs.get["s"] == prev_sum:
+                    break
+                prev_sum = obs.get["s"]
+        out = state
+    finally:
+        roll.release(keep=out)
+        release(routes)
+    return out
+
+
+def _pagerank(
+    blocks: DataFrame, k: int, source: str, iterations: int, damping: float,
+    **loop,
+) -> DataFrame:
+    """PageRank over a blobs DataFrame; ``loop`` goes to ``_supersteps``."""
+    routes, stats = _routes(blocks, k, source)
+    n, m2 = stats["n"], stats["m2"]
+    teleport = (1.0 - damping) / n
+
+    def finalize(partials: DataFrame, ranks: DataFrame) -> DataFrame:
+        return partials.groupBy("vid").agg(
+            (F.lit(teleport) + F.lit(damping) * F.sum("partial")).alias("rank")
+        )
+
+    return _supersteps(
+        blocks, routes, routes.select("vid", F.lit(1.0 / n).alias("rank")),
+        # one routed double per vertex: the gather then moves a single value
+        value=F.col("rank") / F.col("outdeg"),
+        combine=_fold(np.add, 0.0),
+        schema="vid long, partial double",
+        finalize=finalize,
+        iterations=iterations,
+        counters={"edges_scanned": m2, "messages_sent": m2},
+        **loop,
+    ).select("vid", "rank")
 
 
 def pagerank_csr_blocks(
@@ -152,326 +355,19 @@ def pagerank_csr_blocks(
     ckpt=None,
     resume: bool = True,
 ) -> DataFrame:
-    """PageRank over PREBUILT CSR blobs (see ``prepare_csr_blocks``).
-    Numerically identical to ``pagerank_csr`` with the same partition
-    strategy (same gather-scatter math, same float order within a
-    block). Per superstep: routes ⋈ ranks (one shuffle) cogrouped with
-    the k-row blob scan (zero exchange) → per-destination partials →
-    global sum.
-
-    The routing table (vid → partitions holding its out-edges, with
-    static out-degree folded in) is derived from the blobs ONCE and
-    force-materialized into the cache before the loop — no superstep
-    re-derives it (the round-2 bench artifact hid this setup cost
-    inside superstep 1).
-
-    ``superstep_times``: pass a list to receive per-superstep wall
-    seconds (meaningful with ``checkpoint_every=1``, where every
-    superstep ends in an eager localCheckpoint).
-
-    ``ckpt``: a ``linkgraph.pregel.CheckpointManager`` — every
-    superstep then writes a DURABLE snapshot with lineage counters
-    (edges scanned = routed-rank rows bound, messages = partials) and
-    the run resumes from the highest complete superstep (kill + rerun
-    with the same run_id ⇒ identical final ranks,
-    tests/test_csr.py::test_pagerank_csr_checkpointed_resumes). This is
-    the north-star combination: CSR-block gather-scatter execution AND
-    per-superstep durable checkpointing in one loop."""
-    import time
-
-    from linkgraph.graph import vertices
-    from linkgraph.rolling import RollingCheckpoint
-
-    spark = edges.sparkSession
-    blocks = spark.table(blocks_table)
-    _check_blob_k(blocks, k, blocks_table)
-
-    def unpack(b: bytes) -> np.ndarray:
-        return np.frombuffer(b, dtype="<i8")
-
-    # routing (+ static outdeg) derived from the blobs themselves:
-    # outdeg of a source vertex = its CSR row length summed over blocks
-    def routes_of(batches):
-        for pdf in batches:
-            for part, uniq_b, indptr_b in zip(
-                pdf["partition"], pdf["uniq"], pdf["indptr"]
-            ):
-                uniq = unpack(uniq_b)
-                indptr = unpack(indptr_b)
-                yield pd.DataFrame(
-                    {
-                        "vid": uniq,
-                        "part": part,
-                        "deg_local": np.diff(indptr),
-                    }
-                )
-
-    local = blocks.mapInPandas(
-        routes_of, schema="vid long, part long, deg_local long"
+    """PageRank over the CSR blobs in ``blocks_table`` (see
+    ``prepare_csr_blocks``); ``edges`` only supplies the session, since
+    the blobs carry the whole graph. Numerically identical to
+    ``pagerank_csr`` with the same partition strategy. ``ckpt``: a
+    ``linkgraph.pregel.CheckpointManager``; every superstep then writes
+    a durable snapshot with lineage counters (edges scanned = messages
+    = directed darts) and a rerun with the same run_id resumes from the
+    highest complete superstep."""
+    return _pagerank(
+        edges.sparkSession.table(blocks_table), k, blocks_table, iterations,
+        damping, checkpoint_every=checkpoint_every,
+        superstep_times=superstep_times, ckpt=ckpt, resume=resume,
     )
-    out_deg = local.groupBy("vid").agg(F.sum("deg_local").alias("outdeg"))
-    routes = local.select("vid", "part").join(out_deg, "vid").cache()
-    routes.count()  # materialize the routing table OUTSIDE the loop
-    verts = vertices(edges).cache()
-    n = verts.count()
-    teleport = (1.0 - damping) / n
-
-    def step(key, blk_pdf: pd.DataFrame, ranks_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blk_pdf.empty or ranks_pdf.empty:
-            return pd.DataFrame({"vid": [], "partial": []}).astype(
-                {"vid": "int64", "partial": "float64"}
-            )
-        row = blk_pdf.iloc[0]
-        uniq = unpack(row["uniq"])
-        indptr = unpack(row["indptr"])
-        indices = unpack(row["indices"])
-        rv = ranks_pdf["vid"].to_numpy()
-        rorder = np.argsort(rv)
-        pos = np.searchsorted(rv[rorder], uniq)
-        contrib = (
-            ranks_pdf["rank"].to_numpy()[rorder][pos]
-            / ranks_pdf["outdeg"].to_numpy()[rorder][pos]
-        )
-        per_edge = np.repeat(contrib, np.diff(indptr))
-        dsts, inv = np.unique(indices, return_inverse=True)
-        partial = np.zeros(len(dsts), dtype=np.float64)
-        np.add.at(partial, inv, per_edge)
-        return pd.DataFrame({"vid": dsts, "partial": partial})
-
-    roll = RollingCheckpoint()
-    start = 0
-    if ckpt is not None:
-        m2 = 2 * edges.count()  # directed darts scanned per superstep
-        latest = ckpt.latest() if resume else None
-        if latest is None:
-            ranks = ckpt.write(
-                0, verts.withColumn("rank", F.lit(1.0 / n)),
-                {"edges_scanned": 0, "messages_sent": 0,
-                 "max_partition_skew": 0.0, "wall_ms": 0.0},
-            )
-        else:
-            from linkgraph.pregel import _warn_if_beyond
-
-            _warn_if_beyond(ckpt, latest, iterations)
-            ranks = ckpt.read(latest)
-            start = latest
-    else:
-        ranks = roll(verts.withColumn("rank", F.lit(1.0 / n)))
-    for i in range(start, iterations):
-        t0 = time.perf_counter()
-        routed = routes.join(ranks, "vid").select("part", "vid", "rank", "outdeg")
-        partials = (
-            blocks.groupby("partition")
-            .cogroup(routed.groupby("part"))
-            .applyInPandas(step, schema="vid long, partial double")
-        )
-        new_ranks = partials.groupBy("vid").agg(
-            (F.lit(teleport) + F.lit(damping) * F.sum("partial")).alias("rank")
-        )
-        if ckpt is not None:
-            new_ranks = ckpt.write(
-                i + 1, new_ranks,
-                {"edges_scanned": m2, "messages_sent": m2},
-                t0=t0,
-            )  # max_partition_skew folded into the snapshot write
-        elif (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_ranks = roll(new_ranks)
-        ranks = new_ranks
-        if superstep_times is not None:
-            superstep_times.append(time.perf_counter() - t0)
-    return ranks.select("vid", "rank")
-
-
-def _check_blob_k(blocks: DataFrame, k: int, blocks_table: str) -> None:
-    """The blobs table is built for a fixed partitioning; a caller's
-    ``k`` that disagrees would silently run with the table's actual
-    partitioning (ADVICE r3) — fail loudly instead. Empty partitions
-    write no blob row (groupBy-based build), so the robust check is on
-    the MAX partition id: an id ≥ k proves the table was built for a
-    larger k. This is a ≤ k-row aggregate."""
-    mx = blocks.select(F.max("partition")).first()[0]
-    if mx is not None and mx >= k:
-        raise ValueError(
-            f"blobs table {blocks_table!r} holds partition id {mx} >= k={k}; "
-            f"it was built for a larger k — rebuild with "
-            f"prepare_csr_blocks(..., k={k}) or pass the table's k"
-        )
-
-
-def _blob_routes(blocks: DataFrame) -> DataFrame:
-    """(vid, part) routing pairs derived from prebuilt CSR blobs —
-    which partitions hold each vertex's out-edges (= which partitions
-    need its state each superstep)."""
-
-    def routes_of(batches):
-        for pdf in batches:
-            for part, uniq_b in zip(pdf["partition"], pdf["uniq"]):
-                yield pd.DataFrame(
-                    {"vid": np.frombuffer(uniq_b, dtype="<i8"), "part": part}
-                )
-
-    return blocks.mapInPandas(routes_of, schema="vid long, part long")
-
-
-def cc_csr_blocks(
-    edges: DataFrame,
-    k: int,
-    blocks_table: str,
-    max_iterations: int = 50,
-    fixed_iterations: int | None = None,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """Hash-min connected components executed as gather-scatter over
-    prebuilt CSR blobs (the north-star execution shape for CC, same
-    machinery as ``pagerank_csr_blocks``). Per superstep: labels route
-    to the partitions holding each vertex's edges (one shuffle),
-    cogroup with the k-row blob scan (zero exchange), the UDF computes
-    per-destination PARTIAL label minima (``np.minimum.at`` segment
-    min — a partition emits its local vertex count, not its edge
-    count), and the global min folds the partials with each vertex's
-    own label. Integer min is exact, so results equal the join-based
-    ``connected_components`` bit-for-bit at the same round count
-    (tests/test_csr.py)."""
-    from linkgraph.graph import vertices
-    from linkgraph.rolling import RollingCheckpoint
-
-    spark = edges.sparkSession
-    blocks = spark.table(blocks_table)
-    _check_blob_k(blocks, k, blocks_table)
-    routes = _blob_routes(blocks).cache()
-    routes.count()
-
-    def unpack(b: bytes) -> np.ndarray:
-        return np.frombuffer(b, dtype="<i8")
-
-    def step(key, blk_pdf: pd.DataFrame, lab_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blk_pdf.empty or lab_pdf.empty:
-            return pd.DataFrame({"vid": [], "partial": []}).astype(
-                {"vid": "int64", "partial": "int64"}
-            )
-        row = blk_pdf.iloc[0]
-        uniq = unpack(row["uniq"])
-        indptr = unpack(row["indptr"])
-        indices = unpack(row["indices"])
-        lv = lab_pdf["vid"].to_numpy()
-        order = np.argsort(lv)
-        pos = np.searchsorted(lv[order], uniq)
-        src_lab = lab_pdf["component"].to_numpy()[order][pos]
-        per_edge = np.repeat(src_lab, np.diff(indptr))
-        dsts, inv = np.unique(indices, return_inverse=True)
-        partial = np.full(len(dsts), np.iinfo(np.int64).max, dtype=np.int64)
-        np.minimum.at(partial, inv, per_edge)
-        return pd.DataFrame({"vid": dsts, "partial": partial})
-
-    roll = RollingCheckpoint()
-    labels = roll(vertices(edges).withColumn("component", F.col("vid")))
-    rounds = fixed_iterations if fixed_iterations is not None else max_iterations
-    prev_sum = None
-    for i in range(rounds):
-        routed = routes.join(labels, "vid").select("part", "vid", "component")
-        partials = (
-            blocks.groupby("partition")
-            .cogroup(routed.groupby("part"))
-            .applyInPandas(step, schema="vid long, partial long")
-        )
-        new_labels = (
-            labels.select("vid", F.col("component").alias("partial"))
-            .unionByName(partials)
-            .groupBy("vid")
-            .agg(F.min("partial").alias("component"))
-        )
-        at_checkpoint = (i + 1) % checkpoint_every == 0 or i == rounds - 1
-        obs = None
-        if fixed_iterations is None and at_checkpoint:
-            # convergence sum rides the checkpoint as an Observation
-            # (zero extra jobs — the cc.py/scc.py pattern)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_labels = new_labels.observe(
-                obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-            )
-        if at_checkpoint:
-            new_labels = roll(new_labels)
-        labels = new_labels
-        if obs is not None:
-            cur_sum = obs.get["s"]
-            if prev_sum is not None and cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    return labels.select("vid", "component")
-
-
-def lpa_csr_blocks(
-    edges: DataFrame,
-    k: int,
-    blocks_table: str,
-    iterations: int = 10,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """Synchronous label propagation over prebuilt CSR blobs. Per
-    superstep the UDF emits per-(destination, label) PARTIAL counts
-    (``np.unique`` over the routed label darts — a partition's output
-    is bounded by its distinct (dst, label) pairs, the same map-side
-    combine the join-based path gets from Spark), the global aggregate
-    sums partials, and the argmax window (cnt desc, label asc — the
-    deterministic tie-break) runs over aggregated counts only.
-    Integer counts are exact ⇒ results equal ``label_propagation``
-    bit-for-bit at the same round count (tests/test_csr.py)."""
-    from pyspark.sql import Window
-
-    from linkgraph.graph import vertices
-    from linkgraph.rolling import RollingCheckpoint
-
-    spark = edges.sparkSession
-    blocks = spark.table(blocks_table)
-    _check_blob_k(blocks, k, blocks_table)
-    routes = _blob_routes(blocks).cache()
-    routes.count()
-
-    def unpack(b: bytes) -> np.ndarray:
-        return np.frombuffer(b, dtype="<i8")
-
-    def step(key, blk_pdf: pd.DataFrame, lab_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blk_pdf.empty or lab_pdf.empty:
-            return pd.DataFrame({"vid": [], "label": [], "cnt": []}).astype(
-                {"vid": "int64", "label": "int64", "cnt": "int64"}
-            )
-        row = blk_pdf.iloc[0]
-        uniq = unpack(row["uniq"])
-        indptr = unpack(row["indptr"])
-        indices = unpack(row["indices"])
-        lv = lab_pdf["vid"].to_numpy()
-        order = np.argsort(lv)
-        pos = np.searchsorted(lv[order], uniq)
-        src_lab = lab_pdf["label"].to_numpy()[order][pos]
-        per_edge = np.repeat(src_lab, np.diff(indptr))
-        pairs = np.stack([indices, per_edge], axis=1)
-        u, cnt = np.unique(pairs, axis=0, return_counts=True)
-        return pd.DataFrame(
-            {"vid": u[:, 0], "label": u[:, 1], "cnt": cnt.astype(np.int64)}
-        )
-
-    roll = RollingCheckpoint()
-    labels = roll(vertices(edges).withColumn("label", F.col("vid")))
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
-    for i in range(iterations):
-        routed = routes.join(labels, "vid").select("part", "vid", "label")
-        partials = (
-            blocks.groupby("partition")
-            .cogroup(routed.groupby("part"))
-            .applyInPandas(step, schema="vid long, label long, cnt long")
-        )
-        counts = partials.groupBy("vid", "label").agg(F.sum("cnt").alias("cnt"))
-        new_labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", "label")
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_labels = roll(new_labels)
-        labels = new_labels
-    return labels.select("vid", "label")
 
 
 def pagerank_csr(
@@ -482,110 +378,92 @@ def pagerank_csr(
     damping: float = 0.85,
     checkpoint_every: int = 3,
     hasher: str = "xxhash64",
-    bucket_table: str | None = None,
-    prebuilt: bool = False,
     superstep_times: list | None = None,
 ) -> DataFrame:
-    """PageRank executed as gather-scatter over per-partition CSR
-    blocks (north-star execution shape). Numerically equivalent to
-    ``linkgraph.algos.pagerank`` (same update rule; float sum order
-    differs ⇒ agreement to ~1e-12, well inside the 1e-6 tolerance).
+    """One-call PageRank over per-partition CSR blocks: the blobs of
+    ``edges`` under ``strategy`` are cached (no table) for the run and
+    released after it. Agrees with ``linkgraph.algos.pagerank`` to
+    ~1e-12 (same update rule, different float sum order)."""
+    from linkgraph.rolling import release
 
-    ``bucket_table``: persist the partitioned edges ONCE as a table
-    bucketed on the graph-partition column — the CSR-block-caching
-    path (SURVEY.md §4 item 4). The per-superstep cogroup then reads
-    the bucketed scan with ZERO exchanges on the edge side (verified:
-    0 Exchange nodes in the formatted plan); only the |V|·RF-sized
-    rank routing moves per superstep. This is the 100 TB shape: edge
-    blocks are written once, co-located forever."""
-    from linkgraph.graph import symmetrize, vertices
-    from linkgraph.partition.strategies import partition_edges
-
-    if bucket_table is not None and prebuilt:
-        # the bucketed table IS the symmetrized+partitioned edge set;
-        # out-degree is derivable from it (each directed dart appears
-        # exactly once), so the raw edge scan is never touched again
-        parted = edges.sparkSession.table(bucket_table)
-    else:
-        sym = symmetrize(edges)
-        parted = partition_edges(sym, strategy, k, hasher=hasher)
-        if bucket_table is not None:
-            spark = edges.sparkSession
-            drop_table_and_location(spark, bucket_table)
-            (
-                parted.write.bucketBy(k, "partition")
-                .sortBy("partition", "src")
-                .mode("overwrite")
-                .saveAsTable(bucket_table)
-            )
-            parted = spark.table(bucket_table)
-        else:
-            parted = parted.cache()
-    out_deg = parted.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # mirror routing table: which partitions need each vertex's rank
-    # (only as a *source* — gather side), i.e. distinct (src, partition),
-    # with the static out-degree FOLDED IN once — the per-superstep work
-    # is then a single join (routes ⋈ ranks) instead of two
-    routes = (
-        parted.select(
-            F.col("src").alias("vid"), F.col("partition").alias("part")
+    blobs = csr_blobs(edges, k, strategy, hasher).cache()
+    try:
+        return _pagerank(
+            blobs, k, f"{strategy} blobs", iterations, damping,
+            checkpoint_every=checkpoint_every, superstep_times=superstep_times,
         )
-        .distinct()
-        .join(out_deg.select(F.col("src").alias("vid"), "outdeg"), "vid")
-        .cache()
-    )
-    routes.count()  # materialize the routing table OUTSIDE the loop
-    verts = vertices(edges).cache()
-    n = verts.count()
-    teleport = (1.0 - damping) / n
+    finally:
+        release(blobs)
 
-    import time
 
-    from linkgraph.rolling import RollingCheckpoint
+def cc_csr_blocks(
+    edges: DataFrame,
+    k: int,
+    blocks_table: str,
+    max_iterations: int = 50,
+    fixed_iterations: int | None = None,
+    checkpoint_every: int = 1,
+) -> DataFrame:
+    """Hash-min connected components over the CSR blobs in
+    ``blocks_table``; without ``fixed_iterations`` the loop stops at the
+    fixpoint. Integer min is exact, so results equal the join-based
+    ``connected_components`` bit-for-bit at the same round count
+    (tests/test_csr.py)."""
+    blocks = edges.sparkSession.table(blocks_table)
+    routes, _ = _routes(blocks, k, blocks_table)
 
-    roll = RollingCheckpoint()
-    ranks = roll(verts.withColumn("rank", F.lit(1.0 / n)))
-
-    def step(key, edges_pdf: pd.DataFrame, ranks_pdf: pd.DataFrame) -> pd.DataFrame:
-        if edges_pdf.empty or ranks_pdf.empty:
-            return pd.DataFrame({"vid": [], "partial": []}).astype(
-                {"vid": "int64", "partial": "float64"}
-            )
-        src = edges_pdf["src"].to_numpy()
-        dst = edges_pdf["dst"].to_numpy()
-        uniq, indptr, indices = build_csr(src, dst)
-        # align routed ranks to the CSR's source vertices
-        rv = ranks_pdf["vid"].to_numpy()
-        rorder = np.argsort(rv)
-        pos = np.searchsorted(rv[rorder], uniq)
-        contrib = (
-            ranks_pdf["rank"].to_numpy()[rorder][pos]
-            / ranks_pdf["outdeg"].to_numpy()[rorder][pos]
+    def finalize(partials: DataFrame, labels: DataFrame) -> DataFrame:
+        return (
+            labels.select("vid", F.col("component").alias("partial"))
+            .unionByName(partials)
+            .groupBy("vid")
+            .agg(F.min("partial").alias("component"))
         )
-        # scatter: repeat each src's contribution across its out-edges,
-        # then segment-sum by destination (local partial aggregation)
-        per_edge = np.repeat(contrib, np.diff(indptr))
-        dsts, inv = np.unique(indices, return_inverse=True)
-        partial = np.zeros(len(dsts), dtype=np.float64)
-        np.add.at(partial, inv, per_edge)
-        return pd.DataFrame({"vid": dsts, "partial": partial})
 
-    for i in range(iterations):
-        t0 = time.time()
-        routed = routes.join(ranks, "vid").select(
-            "part", "vid", "rank", "outdeg"
+    return _supersteps(
+        blocks, routes, routes.select("vid", F.col("vid").alias("component")),
+        value=F.col("component"),
+        combine=_fold(np.minimum, np.iinfo(np.int64).max),
+        schema="vid long, partial long",
+        finalize=finalize,
+        iterations=max_iterations if fixed_iterations is None else fixed_iterations,
+        checkpoint_every=checkpoint_every,
+        converge="component" if fixed_iterations is None else None,
+    ).select("vid", "component")
+
+
+def lpa_csr_blocks(
+    edges: DataFrame,
+    k: int,
+    blocks_table: str,
+    iterations: int = 10,
+    checkpoint_every: int = 1,
+) -> DataFrame:
+    """Synchronous label propagation over the CSR blobs in
+    ``blocks_table``: the argmax window (cnt desc, label asc — the
+    deterministic tie-break) runs over the summed partial counts only.
+    Integer counts are exact ⇒ results equal ``label_propagation``
+    bit-for-bit at the same round count (tests/test_csr.py)."""
+    from pyspark.sql import Window
+
+    blocks = edges.sparkSession.table(blocks_table)
+    routes, _ = _routes(blocks, k, blocks_table)
+    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
+
+    def finalize(partials: DataFrame, labels: DataFrame) -> DataFrame:
+        counts = partials.groupBy("vid", "label").agg(F.sum("cnt").alias("cnt"))
+        return (
+            counts.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select("vid", "label")
         )
-        partials = (
-            parted.groupby("partition")
-            .cogroup(routed.groupby("part"))
-            .applyInPandas(step, schema="vid long, partial double")
-        )
-        new_ranks = partials.groupBy("vid").agg(
-            (F.lit(teleport) + F.lit(damping) * F.sum("partial")).alias("rank")
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_ranks = roll(new_ranks)
-        ranks = new_ranks
-        if superstep_times is not None:
-            superstep_times.append(time.time() - t0)
-    return ranks.select("vid", "rank")
+
+    return _supersteps(
+        blocks, routes, routes.select("vid", F.col("vid").alias("label")),
+        value=F.col("label"),
+        combine=_label_counts,
+        schema="vid long, label long, cnt long",
+        finalize=finalize,
+        iterations=iterations,
+        checkpoint_every=checkpoint_every,
+    ).select("vid", "label")

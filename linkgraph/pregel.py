@@ -164,6 +164,35 @@ def _warn_if_beyond(ckpt: CheckpointManager, start: int, requested: int) -> None
         )
 
 
+def _degree_setup(edges: DataFrame) -> tuple[DataFrame, DataFrame, dict]:
+    """Setup shared by the durable kernels: the symmetrized edge list
+    (lazy), its out-degree table ``(src, outdeg)`` cut with
+    ``localCheckpoint`` (the caller releases it), and that table's
+    statistics ``n``, ``m2`` and ``mx`` (the maximum degree), which ride
+    the checkpoint as an Observation: zero jobs beyond the checkpoint
+    itself. The edge list is symmetrized, so the table's keys are
+    exactly the vertex set (n = its row count), the sum of out-degrees
+    is the number of directed darts a superstep scans, and a vertex's
+    in-degree equals its out-degree."""
+    from pyspark.sql import Observation
+
+    from linkgraph.graph import symmetrize
+
+    sym = symmetrize(edges)
+    obs = Observation()
+    out_deg = (
+        sym.groupBy("src").agg(F.count("*").alias("outdeg"))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("outdeg").alias("m2"),
+            F.max("outdeg").alias("mx"),
+        )
+        .localCheckpoint()
+    )
+    return sym, out_deg, obs.get
+
+
 def pagerank_checkpointed(
     spark: SparkSession,
     edges: DataFrame,
@@ -180,12 +209,10 @@ def pagerank_checkpointed(
     computation continues from s (kill the driver mid-run and rerun —
     the same final ranks come out; tests/test_pregel.py proves it).
 
-    Setup checkpoints one out-degree table and reads n, m2 and the
-    maximum degree off that same job. The edge list is symmetrized, so
-    the table's keys are exactly the vertex set (n = its row count,
-    edges scanned per superstep = the sum of out-degrees), and a
-    vertex's in-degree equals its out-degree. The edge side ``links``
-    is then checkpointed once; both are released before returning.
+    Setup is ``_degree_setup``: one out-degree checkpoint with n, m2
+    and the maximum degree read off that same job. The edge side
+    ``links`` is then checkpointed once; both are released before
+    returning.
 
     ``auto_salt_skew``: the skew counter ACTS, not just records. The
     routed-message skew per aggregation key is max/avg in-degree of
@@ -198,28 +225,11 @@ def pagerank_checkpointed(
     tests pin 1e-6). Counters record ``msg_skew`` and ``salted`` so an
     operator can see the decision in the lineage log.
     """
-    from pyspark.sql import Observation
-
-    from linkgraph.graph import symmetrize
     from linkgraph.rolling import release
 
-    sym = symmetrize(edges)
-    # n, m2 and the max degree ride the out-degree checkpoint as an
-    # Observation: zero jobs beyond the checkpoint itself
-    deg_obs = Observation()
-    out_deg = (
-        sym.groupBy("src").agg(F.count("*").alias("outdeg"))
-        .observe(
-            deg_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum("outdeg").alias("m2"),
-            F.max("outdeg").alias("mx"),
-        )
-        .localCheckpoint()
-    )
+    sym, out_deg, stats = _degree_setup(edges)
     links = None
     try:
-        stats = deg_obs.get
         n, m2 = stats["n"], stats["m2"]
         teleport = (1.0 - damping) / n
 
@@ -303,17 +313,18 @@ def cc_checkpointed(
 ) -> DataFrame:
     """Hash-min connected components with per-superstep snapshots;
     stops at fixpoint. A ``converged`` flag in the counters marks the
-    final superstep so resume does not re-iterate."""
-    from linkgraph.graph import symmetrize, vertices
+    final superstep so resume does not re-iterate.
 
-    def _label_sum(df: DataFrame) -> str:
-        # Exact decimal sum of labels: unchanged between supersteps iff
-        # the (monotone non-increasing) labels hit a fixpoint — replaces
-        # a per-superstep join+count with one partial-agg scan over the
-        # snapshot just written.
-        return str(
-            df.agg(F.sum(F.col("component").cast("decimal(38,0)"))).first()[0]
-        )
+    Fixpoint test: the exact decimal sum of the labels is unchanged
+    between supersteps iff the (monotone non-increasing) labels stopped
+    moving. The sum rides each snapshot write as an Observation, so it
+    costs no job; a resumed run sums its starting snapshot once."""
+    from pyspark.sql import Observation
+
+    from linkgraph.rolling import release
+
+    def label_sum():
+        return F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
 
     start = ckpt.latest() if resume else None
     if start is not None and any(
@@ -321,21 +332,26 @@ def cc_checkpointed(
     ):
         return ckpt.read(start)
 
-    sym = symmetrize(edges).cache()
+    sym, out_deg, stats = _degree_setup(edges)
+    sym = sym.cache()
     try:
-        m2 = sym.count()
+        m2 = stats["m2"]
         if start is None:
-            labels = vertices(edges).withColumn("component", F.col("vid"))
+            obs = Observation()
             labels = ckpt.write(
-                0, labels,
+                0,
+                out_deg.select(
+                    F.col("src").alias("vid"), F.col("src").alias("component")
+                ).observe(obs, label_sum()),
                 {"edges_scanned": 0, "messages_sent": 0,
                  "max_partition_skew": 0.0, "wall_ms": 0.0, "converged": False},
             )
+            prev_sum = obs.get["s"]
             start = 0
         else:
             _warn_if_beyond(ckpt, start, max_iterations)
             labels = ckpt.read(start)
-        prev_sum = _label_sum(labels)
+            prev_sum = labels.agg(label_sum()).first()[0]
 
         for s in range(start + 1, max_iterations + 1):
             t0 = time.perf_counter()
@@ -347,12 +363,13 @@ def cc_checkpointed(
                 .groupBy("vid")
                 .agg(F.min("component").alias("component"))
             )
+            obs = Observation()
             labels = ckpt.write(
-                s, new_labels,
+                s, new_labels.observe(obs, label_sum()),
                 {"edges_scanned": m2, "messages_sent": m2, "converged": False},
                 t0=t0,
             )  # max_partition_skew folded into the snapshot write
-            cur_sum = _label_sum(labels)
+            cur_sum = obs.get["s"]
             if cur_sum == prev_sum:
                 # mark the just-committed record converged — the
                 # snapshot itself is already durable
@@ -361,7 +378,7 @@ def cc_checkpointed(
                 break
             prev_sum = cur_sum
     finally:
-        sym.unpersist()
+        release(out_deg, sym)
     return labels
 
 
@@ -376,17 +393,20 @@ def lpa_checkpointed(
     snapshots + counters; resumable like pagerank_checkpointed."""
     from pyspark.sql import Window
 
-    from linkgraph.graph import symmetrize, vertices
+    from linkgraph.rolling import release
 
-    sym = symmetrize(edges).cache()
+    sym, out_deg, stats = _degree_setup(edges)
+    sym = sym.cache()
     try:
-        m2 = sym.count()
+        m2 = stats["m2"]
 
         start = ckpt.latest() if resume else None
         if start is None:
-            labels = vertices(edges).withColumn("label", F.col("vid"))
             labels = ckpt.write(
-                0, labels,
+                0,
+                out_deg.select(
+                    F.col("src").alias("vid"), F.col("src").alias("label")
+                ),
                 {"edges_scanned": 0, "messages_sent": 0,
                  "max_partition_skew": 0.0, "wall_ms": 0.0},
             )
@@ -415,5 +435,5 @@ def lpa_checkpointed(
                 t0=t0,
             )  # max_partition_skew folded into the snapshot write
     finally:
-        sym.unpersist()
+        release(out_deg, sym)
     return labels

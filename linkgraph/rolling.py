@@ -65,6 +65,16 @@ class RollingCheckpoint:
         self._prev_jrdd = _checkpointed_jrdd(out)
         return out
 
+    def release(self, keep: DataFrame | None = None) -> None:
+        """Free every generation still pinned except the one behind
+        ``keep`` (the state a loop returns; ``None`` frees all, e.g.
+        when the loop raised). Call once, when the loop is done."""
+        kept = _checkpointed_jrdd(keep) if keep is not None else None
+        for jrdd in (self._grandparent_jrdd, self._prev_jrdd):
+            if jrdd is not None and (kept is None or jrdd.id() != kept.id()):
+                jrdd.unpersist(False)
+        self._grandparent_jrdd = self._prev_jrdd = None
+
 
 def release(*dfs: DataFrame | None) -> None:
     """Free the storage each DataFrame pins: the checkpointed RDD behind

@@ -62,4 +62,12 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Releasing a localCheckpoint (linkgraph.rolling) always logs that
+    # the RDD "cannot be recomputed after unpersisting"; that is the
+    # intent, and one line per released generation buries real warnings
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

@@ -1,5 +1,6 @@
 """CSR-block gather-scatter PageRank ≡ join-based PageRank ≡ NumPy
-oracle (north-star execution shape)."""
+oracle (north-star execution shape); CC/LPA over the same blobs ≡ their
+join-based kernels; released storage and pinned job counts."""
 
 import numpy as np
 import pytest
@@ -7,6 +8,14 @@ import pytest
 from linkgraph.csr import build_csr, pagerank_csr
 from linkgraph.oracle.numpy_ref import pagerank_np
 from linkgraph.synth import graph_edges
+
+# Jobs a warm pagerank_csr_blocks call launches in the test session
+# (local[4], 8 shuffle partitions) when a noop write forces its result:
+# setup (the route table's shuffle and checkpoint, the noop write) and
+# each superstep (the state ⋈ routes, cogroup and finalize exchanges
+# plus the rolled checkpoint)
+CSR_SETUP_JOBS = 3
+CSR_SUPERSTEP_JOBS = 4
 
 
 def test_build_csr_prefix_sums():
@@ -50,31 +59,9 @@ def test_pagerank_csr_matches_join_based(spark, edges_df):
     )
 
 
-def test_pagerank_csr_bucketed_matches(spark, edges_df):
-    """CSR-block caching via a bucketed table (zero per-superstep edge
-    exchange) is numerically identical to the cached path."""
-    import numpy as np
-
-    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=21)
-    a = {
-        r["vid"]: r["rank"]
-        for r in pagerank_csr(edges_df(edges), k=4, iterations=6).collect()
-    }
-    b = {
-        r["vid"]: r["rank"]
-        for r in pagerank_csr(
-            edges_df(edges), k=4, iterations=6, bucket_table="t_pr_blocks"
-        ).collect()
-    }
-    assert np.allclose(
-        [a[v] for v in sorted(a)], [b[v] for v in sorted(b)], atol=1e-12
-    )
-    spark.sql("DROP TABLE IF EXISTS t_pr_blocks")
-
-
 def test_pagerank_csr_blocks_matches(spark, edges_df):
-    """Prebuilt-CSR-blob PageRank ≡ the cogroup-built CSR path (same
-    math, same blocks) and the blobs table round-trips the arrays."""
+    """Table-backed CSR-blob PageRank ≡ the in-memory ``pagerank_csr``
+    (same math, same blocks): the blobs table round-trips the arrays."""
     import numpy as np
 
     from linkgraph.csr import pagerank_csr_blocks, prepare_csr_blocks
@@ -217,3 +204,69 @@ def test_blob_k_mismatch_raises(spark, edges_df):
         ).collect()
     }
     assert set(got.values()) == {0}
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_csr_kernels_release_storage(spark, edges_df, tmp_path):
+    """Every CSR kernel releases its route table, its cached blobs and
+    every rolled generation but the one it returns: after a call the
+    persisted-RDD count is at most one above its start, and the
+    returned state is still readable."""
+    from linkgraph.csr import (
+        cc_csr_blocks,
+        lpa_csr_blocks,
+        pagerank_csr_blocks,
+        prepare_csr_blocks,
+    )
+    from linkgraph.pregel import CheckpointManager
+
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5))
+    prepare_csr_blocks(e, k=4, strategy="grid", blocks_table="t_csr_release")
+    runs = {
+        "in-memory": lambda: pagerank_csr(e, k=4, iterations=3),
+        "blocks": lambda: pagerank_csr_blocks(e, 4, "t_csr_release", iterations=3),
+        "blocks-0": lambda: pagerank_csr_blocks(e, 4, "t_csr_release", iterations=0),
+        "ckpt": lambda: pagerank_csr_blocks(
+            e, 4, "t_csr_release", iterations=2,
+            ckpt=CheckpointManager(spark, str(tmp_path), "csr-release"),
+        ),
+        "cc": lambda: cc_csr_blocks(e, 4, "t_csr_release"),
+        "lpa": lambda: lpa_csr_blocks(e, 4, "t_csr_release", iterations=2),
+    }
+    for name, run in runs.items():
+        before = _persisted(spark)
+        out = run()
+        assert _persisted(spark) <= before + 1, name
+        assert out.count() == 120, name
+    spark.sql("DROP TABLE IF EXISTS t_csr_release")
+
+
+def test_pagerank_csr_blocks_job_count_pinned(spark, edges_df):
+    """One CSR superstep costs CSR_SUPERSTEP_JOBS jobs and setup at most
+    CSR_SETUP_JOBS: a change that adds a job to either must say why."""
+    from linkgraph.csr import pagerank_csr_blocks, prepare_csr_blocks
+
+    sc = spark.sparkContext
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5))
+    prepare_csr_blocks(e, k=4, strategy="grid", blocks_table="t_csr_jobs")
+
+    def jobs(iterations: int, tag: str = "") -> int:
+        group = f"csr-jobs-{iterations}{tag}"
+        sc.setJobGroup(group, "pagerank_csr_blocks job count")
+        try:
+            pagerank_csr_blocks(
+                e, 4, "t_csr_jobs", iterations=iterations, checkpoint_every=1
+            ).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs(1, "-warm")  # the first read of a fresh table lists its files
+    one, two, three = jobs(1), jobs(2), jobs(3)
+    spark.sql("DROP TABLE IF EXISTS t_csr_jobs")
+    assert three - two == CSR_SUPERSTEP_JOBS
+    assert two - one == CSR_SUPERSTEP_JOBS
+    assert one - CSR_SUPERSTEP_JOBS <= CSR_SETUP_JOBS

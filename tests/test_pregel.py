@@ -23,6 +23,11 @@ from linkgraph.synth import graph_edges
 # (broadcast of the ranks, message shuffle, snapshot write)
 PR_SETUP_JOBS = 5
 PR_SUPERSTEP_JOBS = 3
+# cc_checkpointed in the same session: setup (out-degree checkpoint,
+# superstep-0 snapshot with its label sum) and each superstep (message
+# shuffle, snapshot write with the label sum riding it)
+CC_SETUP_JOBS = 4
+CC_SUPERSTEP_JOBS = 3
 
 
 @pytest.fixture()
@@ -363,3 +368,27 @@ def test_pagerank_job_count_pinned(spark, edges_df, ckpt_dir):
     assert three - two == PR_SUPERSTEP_JOBS
     assert two - setup == 2 * PR_SUPERSTEP_JOBS
     assert setup <= PR_SETUP_JOBS
+
+
+def test_cc_job_count_pinned(spark, edges_df, ckpt_dir):
+    """The fixpoint test rides the snapshot write: one CC superstep
+    costs CC_SUPERSTEP_JOBS jobs and setup at most CC_SETUP_JOBS."""
+    sc = spark.sparkContext
+    e = _cached(edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)))
+
+    def jobs(rounds: int) -> int:
+        group = f"cc-jobs-{rounds}"
+        ckpt = CheckpointManager(spark, ckpt_dir, group)
+        sc.setJobGroup(group, "cc_checkpointed job count")
+        try:
+            cc_checkpointed(spark, e, ckpt, max_iterations=rounds)
+        finally:
+            sc.setJobGroup(None, None)
+        assert ckpt.latest() == rounds  # no fixpoint yet on this graph
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, two, three = jobs(1), jobs(2), jobs(3)
+    e.unpersist()
+    assert three - two == CC_SUPERSTEP_JOBS
+    assert two - one == CC_SUPERSTEP_JOBS
+    assert one - CC_SUPERSTEP_JOBS <= CC_SETUP_JOBS

@@ -42,15 +42,14 @@ runs recorded.
 | path | 3-superstep total (best-of-2, both runs) | per-superstep (warm run) |
 |---|---|---|
 | join-based superstep (headline) | — | {join_step}s |
-| bucketed-edge cogroup (`pagerank_csr`) | {q.get('pagerank_csr_3steps')}s {runs.get('pagerank_csr_3steps')} | {d.get('csr_superstep_times', [[], []])[-1]} |
+| in-memory CSR blobs (`pagerank_csr`; an edge-row cogroup before the blob-only loop) | {q.get('pagerank_csr_3steps')}s {runs.get('pagerank_csr_3steps')} | {d.get('csr_superstep_times', [[], []])[-1]} |
 | prebuilt CSR blobs (`pagerank_csr_blocks`) | {q.get('pagerank_csr_blobs_3steps')}s {runs.get('pagerank_csr_blobs_3steps')} | {d.get('csr_blob_superstep_times', [[], []])[-1]} |
 
-One-time writes (amortized over every superstep of every run at
-100 TB): bucketed edges {q.get('csr_bucket_write')}s, CSR blobs
-{q.get('csr_blob_write')}s. Blobs ≤ bucketed ≤ ~2× the join-based
-superstep at this (overhead-bound) scale; the blob path ships k rows
-per superstep where the bucketed path re-parses |E| edge rows through
-Arrow, which is why it wins and why the gap widens with edge count.
+One-time write (amortized over every superstep of every run at
+100 TB): CSR blobs {q.get('csr_blob_write')}s. A blob superstep ships k
+rows through Arrow where the removed edge-row cogroup re-parsed |E|
+edge rows, which is why blobs won (≤ ~2× the join-based superstep at
+this overhead-bound scale) and why the gap widens with edge count.
 Other best-of-2 evidence from the same run: connected_components
 {q.get('connected_components')}s {runs.get('connected_components')},
 triangle_total {q.get('triangle_total')}s
