@@ -166,22 +166,30 @@ def _warn_if_beyond(ckpt: CheckpointManager, start: int, requested: int) -> None
 
 def _degree_setup(edges: DataFrame) -> tuple[DataFrame, DataFrame, dict]:
     """Setup shared by the durable kernels: the symmetrized edge list
-    (lazy), its out-degree table ``(src, outdeg)`` cut with
-    ``localCheckpoint`` (the caller releases it), and that table's
-    statistics ``n``, ``m2`` and ``mx`` (the maximum degree), which ride
-    the checkpoint as an Observation: zero jobs beyond the checkpoint
-    itself. The edge list is symmetrized, so the table's keys are
-    exactly the vertex set (n = its row count), the sum of out-degrees
-    is the number of directed darts a superstep scans, and a vertex's
-    in-degree equals its out-degree."""
-    from pyspark.sql import Observation
-
+    (lazy) and its ``_degree_table``. The edge list is symmetrized, so
+    the table's keys are exactly the vertex set (n = its row count), the
+    sum of out-degrees is the number of directed darts a superstep
+    scans, and a vertex's in-degree equals its out-degree."""
     from linkgraph.graph import symmetrize
 
     sym = symmetrize(edges)
+    return (sym, *_degree_table(sym))
+
+
+def _degree_table(sym: DataFrame, degree=None) -> tuple[DataFrame, dict]:
+    """The out-degree table ``(src, outdeg)`` of ``sym`` cut with
+    ``localCheckpoint`` (the caller releases it), and that table's
+    statistics ``n``, ``m2`` and ``mx`` (the maximum degree), which ride
+    the checkpoint as an Observation: zero jobs beyond the checkpoint
+    itself. ``degree`` is the per-vertex aggregate (default: the edge
+    count; ``F.sum("weight")`` gives the weighted degree)."""
+    from pyspark.sql import Observation
+
     obs = Observation()
     out_deg = (
-        sym.groupBy("src").agg(F.count("*").alias("outdeg"))
+        sym.groupBy("src").agg(
+            (F.count("*") if degree is None else degree).alias("outdeg")
+        )
         .observe(
             obs,
             F.count(F.lit(1)).alias("n"),
@@ -190,7 +198,7 @@ def _degree_setup(edges: DataFrame) -> tuple[DataFrame, DataFrame, dict]:
         )
         .localCheckpoint()
     )
-    return sym, out_deg, obs.get
+    return out_deg, obs.get
 
 
 def pagerank_checkpointed(

@@ -203,6 +203,89 @@ def test_pagerank_warm_start_converges_faster(spark, edges_df):
     assert max(abs(again[v] - target[v]) for v in target) < 1e-9
 
 
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_pagerank_kernels_release_storage(spark, edges_df):
+    """Every join PageRank mode releases its degree table, its cached
+    input copy and every rolled generation but the one it returns:
+    after a call the persisted-RDD count is at most one above its
+    start, and the returned ranks are still readable."""
+    from linkgraph.algos.pagerank import pagerank_personalized, pagerank_weighted
+
+    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=5)
+    e = edges_df(edges)
+    w = spark.createDataFrame(
+        [(s, t, 1 + (s + t) % 3) for s, t in edges], "src long, dst long, weight long"
+    )
+    warm = pagerank(e, iterations=2)
+    runs = {
+        "undirected": lambda: pagerank(e, iterations=4),
+        "directed": lambda: pagerank(e, iterations=4, directed=True),
+        "tol": lambda: pagerank(e, iterations=30, tol=1e-8),
+        "init_ranks": lambda: pagerank(e, iterations=4, init_ranks=warm),
+        "bucket_table": lambda: pagerank(
+            e, iterations=4, bucket_table="t_pr_release", n_buckets=4
+        ),
+        "weighted": lambda: pagerank_weighted(w, iterations=3),
+        "personalized": lambda: pagerank_personalized(e, [1, 2], iterations=3),
+    }
+    try:
+        for name, run in runs.items():
+            before = _persisted(spark)
+            out = run()
+            assert _persisted(spark) <= before + 1, name
+            assert out.count() == 120, name
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_pr_release")
+
+
+def test_pagerank_zero_iterations_stays_readable(spark, edges_df):
+    """``iterations=0`` returns the uniform 1/n start, and it is still
+    readable after the call has released its degree table."""
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5))
+    for kw in ({}, {"directed": True}):
+        before = _persisted(spark)
+        ranks = pagerank(e, iterations=0, **kw)
+        assert _persisted(spark) <= before + 1
+        got = ranks.collect()
+        assert len(got) == 120
+        assert all(r["rank"] == 1.0 / 120 for r in got)
+
+
+# Jobs join PageRank launches on a cached input in the test session
+# (local[4], 8 shuffle partitions): a 3-round segment ends in one rolled
+# checkpoint (per round the state's broadcast and the message shuffle,
+# then the checkpoint write), and setup is the out-degree checkpoint
+JOIN_PR_SEGMENT_JOBS = 7
+JOIN_PR_SETUP_JOBS = 2
+
+
+def test_join_pagerank_job_count_pinned(spark, edges_df):
+    """One 3-round segment costs JOIN_PR_SEGMENT_JOBS jobs and setup at
+    most JOIN_PR_SETUP_JOBS: a change that adds a job to either must
+    say why."""
+    sc = spark.sparkContext
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)).cache()
+    e.count()
+
+    def jobs(iterations: int) -> int:
+        group = f"join-pr-jobs-{iterations}"
+        sc.setJobGroup(group, "join pagerank job count")
+        try:
+            pagerank(e, iterations=iterations, checkpoint_every=3)
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    three, six, nine = jobs(3), jobs(6), jobs(9)
+    e.unpersist()
+    assert three - JOIN_PR_SEGMENT_JOBS <= JOIN_PR_SETUP_JOBS
+    assert six - three == JOIN_PR_SEGMENT_JOBS
+    assert nine - six == JOIN_PR_SEGMENT_JOBS
+
+
 def test_cc_warm_start_incremental_edges(spark, edges_df):
     """Warm-started CC over the grown graph equals a cold converged
     run (new edges only merge components; min of old-component ids
