@@ -3,17 +3,38 @@
 label(v) ← min(label(v), min_{u ∈ N(v)} label(u)) until fixpoint;
 initial label = vid; component id = min vid in the component.
 
-Scale notes: plain hash-min needs O(diameter) supersteps — fine for
-link graphs (small diameter); each superstep is one join + one
-partial-aggregated min. For adversarial long-chain graphs, enable
-``pointer_jumping=True``: after each neighbor-min round the labels are
-compressed through one label→label(label) self-join (Shiloach-Vishkin
-style halving), giving O(log n) convergence.
+Round shape: one ``sym ⋈ labels`` join on src plus one aggregate per
+vertex over the messages and the vertex's own row. The aggregate also
+carries the vertex's previous label as ``own``, so the number of labels
+the round changed, Σ(component ≠ own), rides the round's rolled
+checkpoint as an Observation: convergence costs no job beyond the
+checkpoint, and the loop stops when the count reads 0.
+
+Identity round: with no ``init_labels`` every label starts as the vertex
+id, so round 1's join would return the edge list itself. Round 1 instead
+aggregates the darts directly, label(v) = min over u→v of min(u, v):
+no join and no vertex distinct. Its Observation also counts n.
+
+Pointer jumping: plain hash-min needs O(diameter) rounds, few on a link
+graph. A jump round compresses the labels through one
+label→label(label) self-join (Shiloach-Vishkin-style halving), which
+brings a long chain to O(log n) rounds. It checkpoints the min labels
+before the self-join, so the round's aggregate runs once, and costs a
+second checkpoint per round. In convergence mode jumping switches on
+after round ⌈log2 n⌉, which a small-diameter graph has converged before.
+
+Storage: the edge side is the input's ``(src, dst)`` projection,
+symmetrized inline (cached for the call only when the caller has not
+cached it; ``linkgraph.rolling._scanned``). Every rolled generation but
+the returned one, and any cache the call made, is released on return.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+import warnings
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -41,93 +62,116 @@ def connected_components(
     without a convergence check (deterministic regardless of
     convergence — used by the SQL-oracle parity harness) and disables
     pointer jumping by default so the plain unrolled SQL oracle
-    matches; default (convergence) mode enables pointer jumping —
-    O(log n) rounds instead of O(diameter).
+    matches. The default (convergence) mode stops at the first round
+    that changes no label, jumps pointers after round ⌈log2 n⌉ (module
+    docstring), and warns if ``max_iterations`` runs out while labels
+    still change. ``pointer_jumping=True`` jumps every round,
+    ``False`` never.
 
     ``checkpoint_every=1`` is deliberate, not conservative: each
     round's plan references the previous labels TWICE (the neighbor
-    join and the fixpoint union; pointer jumping adds a third), and
-    Spark re-executes uncheckpointed subtrees per reference — cost
-    doubles per un-checkpointed round (measured at sf0.1: 80s at
-    every-3 vs 5-12s at every-1 for the same 12 rounds).
+    join and the own-label union), and Spark re-executes
+    uncheckpointed subtrees per reference — cost doubles per
+    un-checkpointed round (measured at sf0.1: 80s at every-3 vs 5-12s
+    at every-1 for the same 12 rounds).
     """
-    from linkgraph.graph import join_ready, symmetrize, vertices
+    from linkgraph.graph import symmetrize, vertices
+    from linkgraph.rolling import RollingCheckpoint, _scanned, release
 
-    if pointer_jumping is None:
-        pointer_jumping = fixed_iterations is None
-
-    from linkgraph.rolling import RollingCheckpoint
-
+    converge = fixed_iterations is None
+    rounds = max_iterations if converge else fixed_iterations
+    if pointer_jumping is None and not converge:
+        pointer_jumping = False
+    source, cached = _scanned(edges, "src", "dst")
+    sym = symmetrize(source)
     roll = RollingCheckpoint()
-    # join_ready: one upfront shuffle+sort of the static edge side so
-    # every superstep's join reuses the cached partitioning/ordering
-    # instead of re-exchanging+re-sorting |E| rows per round (§2.4)
-    sym = join_ready(symmetrize(edges), "src").cache()
-    if init_labels is not None:
-        labels = roll(
-            vertices(edges)
-            .join(
-                init_labels.select("vid", F.col("component").alias("_c0")),
-                "vid",
-                "left",
-            )
-            .select(
-                "vid", F.coalesce(F.col("_c0"), F.col("vid")).alias("component")
-            )
-        )
-    else:
-        labels = vertices(edges).withColumn("component", F.col("vid"))
-
-    rounds = fixed_iterations if fixed_iterations is not None else max_iterations
-    prev_sum = None
-    for i in range(rounds):
-        nbr = sym.join(labels, sym["src"] == labels["vid"]).select(
-            F.col("dst").alias("vid"), F.col("component")
-        )
-        new_labels = (
-            nbr.unionByName(labels.select("vid", "component"))
-            .groupBy("vid")
-            .agg(F.min("component").alias("component"))
-        )
-        if pointer_jumping:
-            # compress: component ← label(component) where known
-            lab2 = new_labels.select(
-                F.col("vid").alias("c_vid"), F.col("component").alias("c_comp")
-            )
-            new_labels = (
-                new_labels.join(
-                    lab2, new_labels["component"] == lab2["c_vid"], "left"
+    out = None
+    try:
+        labels = None  # the identity start, never materialized
+        if init_labels is not None:
+            labels = roll(
+                vertices(source)
+                .join(
+                    init_labels.select("vid", F.col("component").alias("_c0")),
+                    "vid",
+                    "left",
                 )
                 .select(
-                    "vid",
-                    F.coalesce(F.col("c_comp"), F.col("component")).alias(
-                        "component"
-                    ),
+                    "vid", F.coalesce(F.col("_c0"), F.col("vid")).alias("component")
                 )
             )
-        at_checkpoint = (i + 1) % checkpoint_every == 0 or i == rounds - 1
-        obs = None
-        if fixed_iterations is None and at_checkpoint:
-            # Convergence rides the checkpoint as an Observation (the
-            # scc.py pattern): labels are monotone non-increasing per
-            # vertex, so the exact decimal sum is unchanged between
-            # two checkpoints iff no label moved — and the eager
-            # checkpoint is already an action, so the sum costs ZERO
-            # extra jobs (previously one agg job per checkpoint).
-            # decimal(38,0): exact and overflow-safe at 10^12
-            # vertices × 64-bit ids.
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_labels = new_labels.observe(
-                obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-            )
-        if at_checkpoint:
-            new_labels = roll(new_labels)
-        labels = new_labels
-        if obs is not None:
-            cur_sum = obs.get["s"]
-            if prev_sum is not None and cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    return labels.select("vid", "component")
+        elif rounds == 0:
+            labels = roll(vertices(source).withColumn("component", F.col("vid")))
+        n = changed = None
+        for i in range(rounds):
+            if labels is None:
+                new = (
+                    sym.groupBy(F.col("dst").alias("vid"))
+                    .agg(F.min(F.least("src", "dst")).alias("component"))
+                    .withColumn("own", F.col("vid"))
+                )
+            else:
+                msgs = sym.join(labels, sym["src"] == labels["vid"]).select(
+                    F.col("dst").alias("vid"),
+                    "component",
+                    F.lit(None).cast("long").alias("own"),
+                )
+                mine = labels.select(
+                    "vid", "component", F.col("component").alias("own")
+                )
+                new = (
+                    msgs.unionByName(mine)
+                    .groupBy("vid")
+                    .agg(
+                        F.min("component").alias("component"),
+                        F.max("own").alias("own"),
+                    )
+                )
+            if pointer_jumping or (
+                pointer_jumping is None
+                and n is not None
+                and i + 1 > math.ceil(math.log2(n))
+            ):
+                # compress: component ← label(component) where known
+                new = roll(new)
+                lab2 = new.select(
+                    F.col("vid").alias("c_vid"), F.col("component").alias("c_comp")
+                )
+                new = new.join(lab2, new["component"] == lab2["c_vid"], "left").select(
+                    "vid",
+                    F.coalesce(F.col("c_comp"), F.col("component")).alias("component"),
+                    "own",
+                )
+            at_checkpoint = (i + 1) % checkpoint_every == 0 or i == rounds - 1
+            obs = None
+            if converge and at_checkpoint:
+                obs = Observation()
+                new = new.observe(
+                    obs,
+                    F.sum((F.col("component") != F.col("own")).cast("long")).alias(
+                        "changed"
+                    ),
+                    F.count(F.lit(1)).alias("n"),
+                )
+            new = new.select("vid", "component")
+            if at_checkpoint:
+                new = roll(new)
+            labels = new
+            if obs is not None:
+                n, changed = obs.get["n"], obs.get["changed"]
+                if changed == 0:
+                    break
+        else:
+            if converge and changed:
+                warnings.warn(
+                    f"connected_components ran max_iterations={rounds} rounds "
+                    f"and its last round still changed {changed} labels; the "
+                    "components are not final (raise max_iterations or pass "
+                    "pointer_jumping=True)",
+                    stacklevel=2,
+                )
+        out = labels
+    finally:
+        roll.release(keep=out)
+        release(cached)
+    return out.select("vid", "component")

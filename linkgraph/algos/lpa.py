@@ -10,7 +10,15 @@ fixed round count).
 Execution per round: (1) neighbor-label count — groupBy(vid, label)
 with map-side partial aggregation (hub-degree skew collapses per task);
 (2) argmax per vertex via a window over the *aggregated* counts (group
-size ≤ #distinct neighbor labels, not degree).
+size ≤ #distinct neighbor labels, not degree). Every label starts as
+the vertex id, so round 1's neighbor labels are the darts' sources:
+it counts ``sym.groupBy(dst, src)`` with no join and no vertex
+distinct. Later rounds join ``sym ⋈ labels`` on src.
+
+Storage: the edge side is the input's ``(src, dst)`` projection,
+symmetrized inline (cached for the call only when the caller has not
+cached it; ``linkgraph.rolling._scanned``). Every rolled generation but
+the returned one, and any cache the call made, is released on return.
 """
 
 from __future__ import annotations
@@ -23,33 +31,41 @@ def label_propagation(
     edges: DataFrame, iterations: int = 10, checkpoint_every: int = 3
 ) -> DataFrame:
     """Returns ``DataFrame[vid: long, label: long]``."""
-    from linkgraph.graph import join_ready, symmetrize, vertices
+    from linkgraph.graph import symmetrize, vertices
+    from linkgraph.rolling import RollingCheckpoint, _scanned, release
 
-    from linkgraph.rolling import RollingCheckpoint
-
+    source, cached = _scanned(edges, "src", "dst")
+    sym = symmetrize(source)
     roll = RollingCheckpoint()
-    # one upfront shuffle+sort; every round's label join then reuses
-    # the cached partitioning/ordering of the edge side (guide §2.4)
-    sym = join_ready(symmetrize(edges), "src").cache()
-    labels = vertices(edges).withColumn("label", F.col("vid"))
-
     w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
-    for i in range(iterations):
-        counts = (
-            sym.join(labels, sym["src"] == labels["vid"])
-            .select(F.col("dst").alias("vid"), "label")
-            .groupBy("vid", "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        new_labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", "label")
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_labels = roll(new_labels)
-        labels = new_labels
-    return labels.select("vid", "label")
+    out = None
+    try:
+        labels = None  # the identity start, never materialized
+        if iterations == 0:
+            labels = roll(vertices(source).withColumn("label", F.col("vid")))
+        for i in range(iterations):
+            if labels is None:
+                votes = sym.select(
+                    F.col("dst").alias("vid"), F.col("src").alias("label")
+                )
+            else:
+                votes = sym.join(labels, sym["src"] == labels["vid"]).select(
+                    F.col("dst").alias("vid"), "label"
+                )
+            counts = votes.groupBy("vid", "label").agg(F.count("*").alias("cnt"))
+            new_labels = (
+                counts.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("vid", "label")
+            )
+            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+                new_labels = roll(new_labels)
+            labels = new_labels
+        out = labels
+    finally:
+        roll.release(keep=out)
+        release(cached)
+    return out.select("vid", "label")
 
 
 def label_propagation_weighted(
@@ -62,10 +78,11 @@ def label_propagation_weighted(
     order sensitivity). Same execution shape as the unweighted LPA:
     partial-aggregated (vid, label) weight sums, then an argmax window
     over the aggregated counts (group size ≤ #distinct neighbor
-    labels). Returns ``DataFrame[vid, label]``."""
-    from linkgraph.rolling import RollingCheckpoint
-
+    labels). Its edge cache and every rolled generation but the
+    returned one are released on return. Returns
+    ``DataFrame[vid, label]``."""
     from linkgraph.graph import join_ready
+    from linkgraph.rolling import RollingCheckpoint, release
 
     roll = RollingCheckpoint()
     sym = join_ready(
@@ -82,19 +99,27 @@ def label_propagation_weighted(
         .withColumn("label", F.col("vid"))
     )
     w = Window.partitionBy("vid").orderBy(F.desc("wsum"), F.asc("label"))
-    for i in range(iterations):
-        votes = (
-            sym.join(labels, sym["src"] == labels["vid"])
-            .select(F.col("dst").alias("vid"), "label", "weight")
-            .groupBy("vid", "label")
-            .agg(F.sum("weight").cast("long").alias("wsum"))
-        )
-        new_labels = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", "label")
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_labels = roll(new_labels)
-        labels = new_labels
-    return labels.select("vid", "label")
+    out = None
+    try:
+        if iterations == 0:
+            labels = roll(labels)  # outlive the released edge cache
+        for i in range(iterations):
+            votes = (
+                sym.join(labels, sym["src"] == labels["vid"])
+                .select(F.col("dst").alias("vid"), "label", "weight")
+                .groupBy("vid", "label")
+                .agg(F.sum("weight").cast("long").alias("wsum"))
+            )
+            new_labels = (
+                votes.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("vid", "label")
+            )
+            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+                new_labels = roll(new_labels)
+            labels = new_labels
+        out = labels
+    finally:
+        roll.release(keep=out)
+        release(sym)
+    return out.select("vid", "label")

@@ -38,20 +38,8 @@ except the one rolled generation the returned ranks read.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _scanned(edges: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame | None]:
-    """``cols`` of ``edges`` as the supersteps scan them: as they are
-    when ``edges`` is cached, else cached here and also returned second,
-    for the caller to release."""
-    g = edges.select(*cols)
-    if edges.storageLevel != StorageLevel.NONE:
-        return g, None
-    g = g.cache()
-    return g, g
 
 
 def _supersteps(
@@ -152,7 +140,7 @@ def pagerank(
 
     from linkgraph.graph import vertices
     from linkgraph.pregel import _degree_setup
-    from linkgraph.rolling import release
+    from linkgraph.rolling import _scanned, release
 
     source, cached = _scanned(edges, "src", "dst")
     out_deg = links = verts = seeded = None
@@ -269,7 +257,7 @@ def pagerank_weighted(
     one aggregate per superstep. Returns ``DataFrame[vid, rank]``.
     """
     from linkgraph.pregel import _degree_table
-    from linkgraph.rolling import release
+    from linkgraph.rolling import _scanned, release
 
     # the upstream wedges derivation (an events self-join) is
     # expensive: cached, it runs once instead of once per superstep
@@ -319,7 +307,7 @@ def pagerank_personalized(
     shape as ``pagerank``: one join plus one aggregate that also counts
     the next out-degree. Returns ``DataFrame[vid, rank]``."""
     from linkgraph.pregel import _degree_setup
-    from linkgraph.rolling import release
+    from linkgraph.rolling import _scanned, release
 
     source, cached = _scanned(edges, "src", "dst")
     out_deg = None

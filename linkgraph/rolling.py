@@ -20,10 +20,15 @@ parent stays live): a localCheckpoint has no lineage to recompute
 from, and convergence checks legitimately join the new state against
 the immediately-previous one after rolling. Memory is still bounded
 at two snapshots instead of growing per iteration.
+
+``_scanned`` (the input a kernel caches for its call) and ``release``
+(what it frees on return) live here too, so one module decides what a
+kernel may cache and what it may free.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -89,3 +94,19 @@ def release(*dfs: DataFrame | None) -> None:
             jrdd.unpersist(False)
         else:
             df.unpersist()
+
+
+def _scanned(edges: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame | None]:
+    """``cols`` of ``edges`` as a kernel's supersteps scan them, and the
+    cache to release when the kernel returns (else ``None``). A cached
+    ``edges``, or a projection some caller already cached under an equal
+    plan, is borrowed as it is: ``release`` would drop every cache entry
+    with that plan, the caller's included. Otherwise the projection is
+    cached here, so an expensive derivation upstream runs once, not once
+    per superstep."""
+    g = edges.select(*cols)
+    none = StorageLevel.NONE
+    if edges.storageLevel != none or g.storageLevel != none:
+        return g, None
+    g = g.cache()
+    return g, g

@@ -13,6 +13,53 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The default driver heap is this share of the memory the process may
+# use, capped. In local mode the executors share the driver's heap, and
+# the JVM adds metaspace, code cache and off-heap buffers on top of it.
+DRIVER_MEMORY_FRACTION = 0.3
+DRIVER_MEMORY_CAP_MB = 48 * 1024
+CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2; "max" when unlimited
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def memory_budget_mb(
+    meminfo: str = "/proc/meminfo", cgroup_limits: tuple[str, ...] = CGROUP_LIMITS
+) -> int | None:
+    """The memory this process may use, in MB: the host's ``MemTotal``,
+    lowered to its cgroup's limit when one is set. ``None`` when neither
+    can be read (a host without ``/proc``). Only reads files."""
+    budget = None
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    budget = int(line.split()[1]) // 1024  # kB
+                    break
+    except OSError:
+        pass
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = int(raw) // (1024 * 1024)
+            budget = limit if budget is None else min(budget, limit)
+    return budget
+
+
+def default_driver_memory(budget_mb: int | None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    ``DRIVER_MEMORY_FRACTION`` of ``budget_mb``, at most
+    ``DRIVER_MEMORY_CAP_MB`` (also the value when the budget is
+    unknown)."""
+    if budget_mb is None:
+        return f"{DRIVER_MEMORY_CAP_MB}m"
+    return f"{min(DRIVER_MEMORY_CAP_MB, int(budget_mb * DRIVER_MEMORY_FRACTION))}m"
+
 
 def get_spark(
     app_name: str = "linkgraph",
@@ -25,6 +72,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the local core count — the right
     size for local mode; on a cluster pass total-cores instead.
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEMORY``, else sized from
+    the memory this process may use (``default_driver_memory``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -52,7 +101,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(memory_budget_mb()),
+        )
         .config("spark.ui.enabled", "false")
         # Iterative jobs re-checkpoint per superstep; keep lineage short.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")

@@ -83,6 +83,27 @@ def test_components_pointer_jumping_long_chain(spark, edges_df):
     assert got == components_py(edges)
 
 
+def test_components_long_chain_default_arguments(spark, edges_df):
+    """With default arguments a 1000-vertex path converges exactly:
+    hash-min rounds switch to pointer jumping after round ⌈log2 n⌉."""
+    edges = graph_edges("path_chain", n=1000)
+    got = {
+        r["vid"]: r["component"]
+        for r in connected_components(edges_df(edges)).collect()
+    }
+    assert got == components_py(edges)
+
+
+def test_cc_warns_when_rounds_run_out(spark, edges_df):
+    """Convergence mode says so when max_iterations ends the loop while
+    labels still change: the result is then not the components."""
+    e = edges_df(graph_edges("path_chain", n=100))
+    with pytest.warns(
+        UserWarning, match=r"max_iterations=3 rounds .* still changed \d+ labels"
+    ):
+        connected_components(e, max_iterations=3)
+
+
 @pytest.mark.parametrize("shape", ["triangle3", "two_cliques_bridge", "star_hub"])
 def test_lpa_matches_oracle(spark, edges_df, shape):
     edges = graph_edges(shape)
@@ -310,6 +331,66 @@ def test_cc_warm_start_incremental_edges(spark, edges_df):
     }
     assert warm == cold  # one warm round resolves the merge
     assert set(warm.values()) == {0}
+
+
+def test_cc_lpa_release_storage(spark, edges_df):
+    """CC in every mode, and both LPAs, release every rolled generation but
+    the returned one and any cache they made: after a call the
+    persisted-RDD count is at most one above its start, and the result
+    is still readable."""
+    from linkgraph.algos.lpa import label_propagation_weighted
+
+    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=5)
+    e = edges_df(edges)
+    w = spark.createDataFrame(
+        [(s, t, 1 + (s + t) % 3) for s, t in edges], "src long, dst long, weight long"
+    )
+    warm = connected_components(e, fixed_iterations=1)
+    runs = {
+        "default": lambda: connected_components(e),
+        "fixed_iterations": lambda: connected_components(e, fixed_iterations=3),
+        "init_labels": lambda: connected_components(e, init_labels=warm),
+        "pointer_jumping": lambda: connected_components(e, pointer_jumping=True),
+        "lpa_1": lambda: label_propagation(e, iterations=1),
+        "lpa_4": lambda: label_propagation(e, iterations=4),
+        "lpa_weighted": lambda: label_propagation_weighted(w, iterations=2),
+    }
+    for name, run in runs.items():
+        before = _persisted(spark)
+        out = run()
+        assert _persisted(spark) <= before + 1, name
+        assert out.count() == 120, name
+
+
+# Jobs connected_components launches on a cached input in the test
+# session (local[4], 8 shuffle partitions), its result forced by a noop
+# write: a round after the first is CC_ROUND_JOBS, and round 1, which
+# joins nothing, costs at most CC_FIRST_ROUND_JOBS with the write
+CC_ROUND_JOBS = 3
+CC_FIRST_ROUND_JOBS = 3
+
+
+def test_cc_job_count_pinned(spark, edges_df):
+    """A change that adds a job to a CC round must say why."""
+    sc = spark.sparkContext
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)).cache()
+    e.count()
+
+    def jobs(rounds: int) -> int:
+        group = f"cc-jobs-{rounds}"
+        sc.setJobGroup(group, "connected_components job count")
+        try:
+            out = connected_components(e, fixed_iterations=rounds)
+            out.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, two, three, four = jobs(1), jobs(2), jobs(3), jobs(4)
+    e.unpersist()
+    assert one <= CC_FIRST_ROUND_JOBS
+    assert three - two == CC_ROUND_JOBS
+    assert four - three == CC_ROUND_JOBS
 
 
 def test_k_core_clique_with_tail(spark, edges_df):

@@ -3,6 +3,7 @@
 — the JVM-side checkpointed RDD must be unpersisted), while the
 immediately-previous generation stays live for convergence joins."""
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from linkgraph.rolling import RollingCheckpoint
@@ -36,3 +37,32 @@ def test_rolling_checkpoint_values_survive(spark):
     for _ in range(4):
         df = roll(df.select((F.col("v") + 1).alias("v")))
     assert df.agg(F.sum("v")).first()[0] == sum(range(10)) + 40
+
+
+def test_kernels_keep_a_callers_equal_plan_cache(spark):
+    """A kernel borrows a ``(src, dst)`` projection its caller cached
+    and frees nothing of it: releasing a cache drops every entry with
+    an equal plan, the caller's included. The edge table has a column
+    more, so its own plan is not the cached one."""
+    from linkgraph.algos.cc import connected_components
+    from linkgraph.algos.lpa import label_propagation
+    from linkgraph.algos.pagerank import pagerank
+    from linkgraph.synth import graph_edges
+
+    e = spark.createDataFrame(
+        [(s, t, 1) for s, t in graph_edges("powerlaw_ba", n=60, m=2, seed=3)],
+        "src long, dst long, weight long",
+    )
+    mine = e.select("src", "dst").cache()
+    mine.count()
+    runs = {
+        "pagerank": lambda: pagerank(e, iterations=2),
+        "connected_components": lambda: connected_components(e),
+        "label_propagation": lambda: label_propagation(e, iterations=1),
+    }
+    try:
+        for name, run in runs.items():
+            assert run().count() == 60, name
+            assert e.select("src", "dst").storageLevel != StorageLevel.NONE, name
+    finally:
+        mine.unpersist()
