@@ -133,6 +133,37 @@ def _murmur3_long(value: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
+# Longs whose Spark ``hash`` must equal ``_murmur3_long``: zero, ±1, both
+# sides of the 32-bit sign boundary, a set high word, the largest long
+_MURMUR3_SAMPLE = (
+    0, 1, -1, 42, 7919, 2**31 - 1, 2**31, -(2**31), 2**32 + 5, -(2**53) + 1, 2**63 - 1
+)
+_murmur3_checked: set[str] = set()
+
+
+def _check_murmur3_replica(spark) -> None:
+    """Fail loudly, once per SparkContext, if Spark's ``hash`` of
+    ``_MURMUR3_SAMPLE`` differs from ``_murmur3_long``: the spread labels
+    would then collide in the shuffle again, silently. The sample is an
+    inline table, so the check runs on the driver and launches no job;
+    later calls in the same context return at once."""
+    app = spark.sparkContext.applicationId
+    if app in _murmur3_checked:
+        return
+    rows = ", ".join(f"(CAST({v} AS BIGINT))" for v in _MURMUR3_SAMPLE)
+    sample = spark.sql(f"SELECT hash(v) FROM VALUES {rows} AS t(v)")
+    got = [r[0] for r in sample.collect()]
+    want = [_murmur3_long(v) for v in _MURMUR3_SAMPLE]
+    if got != want:
+        raise AssertionError(
+            f"Spark's hash() no longer matches hdrf._murmur3_long on "
+            f"{_MURMUR3_SAMPLE}: got {got}, want {want}; _spread_group_labels "
+            "cannot spread the partitioner's groups until the replica is "
+            "brought in line"
+        )
+    _murmur3_checked.add(app)
+
+
 def _spread_group_labels(n_groups: int, n_partitions: int) -> list[int]:
     """``n_groups`` long labels whose HashPartitioning residues modulo
     ``n_partitions`` are pairwise distinct (greedy search; falls back
@@ -637,6 +668,7 @@ def _hdrf_chunked(
     cap = max(1, int(balance_ratio * m / k))
     n_tasks = DEFAULT_CHUNK_TASKS
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    _check_murmur3_replica(spark)
     spread_ids = _spread_group_labels(n_tasks, n_shuffle)
 
     if chunking == "geometric":

@@ -7,7 +7,7 @@ import pytest
 from linkgraph.algos.cc import connected_components
 from linkgraph.algos.lpa import label_propagation
 from linkgraph.algos.pagerank import pagerank
-from linkgraph.algos.triangles import triangle_counts, triangle_total
+from linkgraph.algos.triangles import triangle_counts, triangle_list, triangle_total
 from linkgraph.oracle.numpy_ref import (
     components_py,
     lpa_py,
@@ -114,22 +114,49 @@ def test_lpa_matches_oracle(spark, edges_df, shape):
     assert got == lpa_py(edges, iterations=6)
 
 
+def _brute_force_triangles(edges) -> set[tuple[int, int, int]]:
+    """Every triangle as a sorted vertex triple, from the edge set."""
+    nbrs: dict[int, set[int]] = {}
+    for s, t in edges:
+        nbrs.setdefault(s, set()).add(t)
+        nbrs.setdefault(t, set()).add(s)
+    return {
+        (a, b, c)
+        for a, b in {(min(s, t), max(s, t)) for s, t in edges}
+        for c in nbrs[a] & nbrs[b]
+        if c > b
+    }
+
+
 @pytest.mark.parametrize("shape", SHAPES + ["powerlaw_ba"])
 @pytest.mark.parametrize("oriented", [True, False])
 def test_triangles_exact(spark, edges_df, shape, oriented):
+    from linkgraph.algos.truss import edge_support
+
     edges = graph_edges(shape, n=150, seed=3)
     per, total = triangles_py(edges)
+    e = edges_df(edges)
     got = {
         r["vid"]: r["triangles"]
-        for r in triangle_counts(edges_df(edges), degree_oriented=oriented).collect()
+        for r in triangle_counts(e, degree_oriented=oriented).collect()
     }
     assert got == per
     assert (
-        triangle_total(edges_df(edges), degree_oriented=oriented).first()[
-            "n_triangles"
-        ]
-        == total
+        triangle_total(e, degree_oriented=oriented).first()["n_triangles"] == total
     )
+    listed = [
+        tuple(sorted(r)) for r in triangle_list(e, degree_oriented=oriented).collect()
+    ]
+    want = _brute_force_triangles(edges)
+    assert len(listed) == len(want) == total
+    assert set(listed) == want
+    if oriented:  # edge_support has no orientation switch
+        supp: dict[tuple[int, int], int] = {}
+        for a, b, c in want:
+            for pair in ((a, b), (a, c), (b, c)):
+                supp[pair] = supp.get(pair, 0) + 1
+        got_supp = {(r["src"], r["dst"]): r["supp"] for r in edge_support(e).collect()}
+        assert got_supp == supp
 
 
 def test_two_cliques_triangle_count(spark, edges_df):
@@ -391,6 +418,73 @@ def test_cc_job_count_pinned(spark, edges_df):
     assert one <= CC_FIRST_ROUND_JOBS
     assert three - two == CC_ROUND_JOBS
     assert four - three == CC_ROUND_JOBS
+
+
+def test_triangle_family_releases_storage(spark, edges_df):
+    """The triangle family releases its checkpointed adjacency:
+    ``triangle_total`` and ``transitivity`` leave no new persisted RDD,
+    and the kernels that return a checkpointed result leave at most
+    one: the result itself, still readable, which ``rolling.release``
+    frees."""
+    from linkgraph.algos.clustering import clustering_coefficients
+    from linkgraph.algos.triangles import transitivity
+    from linkgraph.algos.truss import k_truss
+    from linkgraph.rolling import release
+
+    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=5)
+    e = edges_df(edges)
+    n = len({v for edge in edges for v in edge})
+    n_tri = triangles_py(edges)[1]
+    runs = {
+        "triangle_total": (0, lambda: triangle_total(e), 1),
+        "transitivity": (0, lambda: transitivity(e), 1),
+        "triangle_counts": (1, lambda: triangle_counts(e), n),
+        "clustering_coefficients": (1, lambda: clustering_coefficients(e), n),
+        "triangle_list": (1, lambda: triangle_list(e), n_tri),
+        "k_truss": (1, lambda: k_truss(e, k=3, fixed_rounds=2), None),
+        "k_truss_converge": (1, lambda: k_truss(e, k=4), None),
+    }
+    # RDD ids, not counts: an earlier test's unreferenced checkpoint may
+    # be cleaned up by the JVM's garbage collection during a call
+    def persisted_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for name, (held, run, rows) in runs.items():
+        before = persisted_ids()
+        out = run()
+        left = persisted_ids() - before
+        assert len(left) <= held, name
+        got = out.count()
+        assert rows is None or got == rows, name
+        release(out)
+        assert not persisted_ids() & left, name
+
+
+def test_triangle_job_count_pinned(spark, edges_df):
+    """A change that adds a job to the triangle family must say why."""
+    from linkgraph.algos.triangles import TRI_COUNT_JOBS, TRI_TOTAL_JOBS
+
+    sc = spark.sparkContext
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)).cache()
+    e.count()
+
+    def jobs(name: str, run) -> int:
+        group = f"triangle-jobs-{name}"
+        sc.setJobGroup(group, "triangle job count")
+        try:
+            run()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    total = jobs("total", lambda: triangle_total(e).collect())
+    counts = jobs(
+        "counts",
+        lambda: triangle_counts(e).write.format("noop").mode("overwrite").save(),
+    )
+    e.unpersist()
+    assert total <= TRI_TOTAL_JOBS
+    assert counts <= TRI_COUNT_JOBS
 
 
 def test_k_core_clique_with_tail(spark, edges_df):

@@ -76,14 +76,17 @@ def main() -> None:
     edges.count()
 
     # ---- one-shot queries (plan == the claim) ------------------------
-    from linkgraph.algos.triangles import triangle_total
     from linkgraph.algos.linkpred import jaccard_topk, common_neighbor_scores
 
-    save("triangle_total", triangle_total(edges))
+    # triangle_total runs eagerly and returns a one-row local table:
+    # capture its per-edge join instead
+    from linkgraph.algos.triangles import _adjacency_rows, _edge_common
+
+    save("triangle_total", _edge_common(_adjacency_rows(edges, True)))
     save("jaccard_topk", jaccard_topk(edges))
     save("common_neighbors", common_neighbor_scores(edges))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
-    save("triangle_total_auto", triangle_total(edges))
+    save("triangle_total_auto", _edge_common(_adjacency_rows(edges, True)))
     save("jaccard_topk_auto", jaccard_topk(edges))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 

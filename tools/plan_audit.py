@@ -67,12 +67,17 @@ def main() -> int:
         ))
     )
 
-    # clustering: degree lookup broadcast (never shuffles the edges)
-    from linkgraph.algos.clustering import clustering_coefficients
+    # clustering: degree lookup broadcast (never shuffles the edges).
+    # clustering_coefficients returns a checkpoint, whose plan is a bare
+    # scan, so the check reads its lazy join over the uncheckpointed
+    # adjacency
+    from linkgraph.algos.clustering import _lcc
+    from linkgraph.algos.triangles import _adjacency_rows
 
+    ce = edges_from_lineitem(spark, SF)
     checks.append(
         ("clustering BroadcastHashJoin", "BroadcastHashJoin" in plan(
-            clustering_coefficients(edges_from_lineitem(spark, SF))
+            _lcc(_adjacency_rows(ce, True), ce)
         ))
     )
 
@@ -274,11 +279,19 @@ def main() -> int:
         ))
     )
 
-    # triangle_estimate: sampled + exact wedge joins both present, one
-    # final nested-loop on two 1-row sides
-    from linkgraph.queries import q_triangle_estimate
+    # triangle_estimate: the sampled chain partial-counts its degree
+    # aggregate map-side. Both chains run eagerly (triangle_total) and
+    # the query folds two one-row local tables, so the check reads the
+    # sampled chain's per-edge join plan over the uncheckpointed adjacency
+    from linkgraph.algos.triangles import (
+        TRI_SAMPLE_PCT,
+        _adjacency_rows,
+        _edge_common,
+        _sample_edges,
+    )
 
-    te = plan(q_triangle_estimate(spark, SF))
+    sampled = _sample_edges(edges_from_lineitem(spark, SF), TRI_SAMPLE_PCT)
+    te = plan(_edge_common(_adjacency_rows(sampled, True)))
     checks.append(("triangle_estimate partial_count", "partial_count" in te))
 
     # No MANDATORY broadcast of O(|V|) degree tables (round-5 judge
@@ -288,8 +301,11 @@ def main() -> int:
     # broadcast size. (At gate scale with the threshold back on, AQE
     # still picks broadcast from runtime stats — the clustering check
     # above pins that.)
+    # The triangle check reads the per-edge join over the uncheckpointed
+    # adjacency (both orientation joins and the join on b): the public
+    # triangle_total runs eagerly and returns a one-row local table, whose
+    # plan would pass vacuously.
     from linkgraph.algos.linkpred import jaccard_topk
-    from linkgraph.algos.triangles import triangle_total
 
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -297,7 +313,7 @@ def main() -> int:
         ed = edges_from_lineitem(spark, SF)
         checks.append(
             ("triangles no forced degree broadcast",
-             "BroadcastHashJoin" not in plan(triangle_total(ed)))
+             "BroadcastHashJoin" not in plan(_edge_common(_adjacency_rows(ed, True))))
         )
         checks.append(
             ("jaccard no forced degree broadcast",
