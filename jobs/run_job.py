@@ -12,6 +12,12 @@ pagerank, cc and lpa checkpoint every superstep and resume from the
 last complete snapshot when re-launched with the same --run-id; the
 other iterative jobs (scc, bfs, kcore, walks, topo) recompute from the
 start.
+
+The session comes from ``SparkSession.builder``, not
+``linkgraph.session.get_spark``, so the Python workers run PySpark's
+own daemon: linkgraph may arrive through ``--py-files`` only after the
+daemon has started, and a ``linkgraph.pyworker`` daemon would not find
+it.
 """
 
 from __future__ import annotations

@@ -23,9 +23,14 @@ PageRank, CC and LPA run the same superstep (``_supersteps``):
      partitioner split arrives pre-aggregated per block.
 
 A superstep ships k blob rows through one Arrow crossing instead of |E|
-edge rows, and that crossing is its dominant cost: a removed edge-row
-cogroup that rebuilt the CSR every superstep took 0.96-1.00 s per
-superstep at sf0.1 against 0.60-0.62 s for blobs (BENCH/BASELINE.md).
+edge rows: a removed edge-row cogroup that rebuilt the CSR every
+superstep took 0.96-1.00 s per superstep at sf0.1 against 0.60-0.62 s
+for blobs (BENCH/BASELINE.md). The crossing's data conversion is not
+what a small superstep pays for (``applyInArrow`` and ``applyInPandas``
+measured alike on a 400k-edge cogroup). Its fixed cost per Python task
+was: PySpark's worker re-read every zip archive on its path before each
+task, about 100 ms per task on a 4-vCPU VM, which the
+``linkgraph.pyworker`` daemon removes.
 """
 
 from __future__ import annotations

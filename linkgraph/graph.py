@@ -48,11 +48,6 @@ def edges_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def drop_self_loops(edges: DataFrame) -> DataFrame:
-    """Self-loop filter (reference conversions.hpp:52-56)."""
-    return edges.where(F.col("src") != F.col("dst"))
-
-
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected edge list stored one-direction → both directions.
 
@@ -102,15 +97,6 @@ def vertices(edges: DataFrame) -> DataFrame:
         .unionAll(edges.select(F.col("dst").alias("vid")))
         .distinct()
     )
-
-
-def shuffle_edges(edges: DataFrame, seed: int = 985) -> DataFrame:
-    """Seeded stream-order randomization — Spark analog of the
-    reference's chunked Fisher-Yates Shuffler
-    (/root/reference/converter/shuffler.cpp:15-118). Used so streaming
-    partitioners (HDRF) are exercised order-insensitively; deterministic
-    under a fixed seed (DEFAULT_SEED=985, base_graph.hpp:48)."""
-    return edges.orderBy(F.xxhash64(F.col("src"), F.col("dst"), F.lit(seed)))
 
 
 def adjacency_lists(edges: DataFrame) -> DataFrame:

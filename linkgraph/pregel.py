@@ -329,7 +329,7 @@ def cc_checkpointed(
     costs no job; a resumed run sums its starting snapshot once."""
     from pyspark.sql import Observation
 
-    from linkgraph.rolling import release
+    from linkgraph.rolling import _scanned, release
 
     def label_sum():
         return F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
@@ -340,8 +340,8 @@ def cc_checkpointed(
     ):
         return ckpt.read(start)
 
-    sym, out_deg, stats = _degree_setup(edges)
-    sym = sym.cache()
+    source, cached = _scanned(edges, "src", "dst")
+    sym, out_deg, stats = _degree_setup(source)
     try:
         m2 = stats["m2"]
         if start is None:
@@ -386,7 +386,7 @@ def cc_checkpointed(
                 break
             prev_sum = cur_sum
     finally:
-        release(out_deg, sym)
+        release(out_deg, cached)
     return labels
 
 
@@ -401,10 +401,10 @@ def lpa_checkpointed(
     snapshots + counters; resumable like pagerank_checkpointed."""
     from pyspark.sql import Window
 
-    from linkgraph.rolling import release
+    from linkgraph.rolling import _scanned, release
 
-    sym, out_deg, stats = _degree_setup(edges)
-    sym = sym.cache()
+    source, cached = _scanned(edges, "src", "dst")
+    sym, out_deg, stats = _degree_setup(source)
     try:
         m2 = stats["m2"]
 
@@ -443,5 +443,5 @@ def lpa_checkpointed(
                 t0=t0,
             )  # max_partition_skew folded into the snapshot write
     finally:
-        release(out_deg, sym)
+        release(out_deg, cached)
     return labels

@@ -4,12 +4,15 @@ Local-mode defaults mirror what a 1000-executor cluster deployment would
 set per-executor (AQE on, Arrow on, shuffle partitions ~ cores); on a
 real cluster the same builder is used with ``--master yarn|k8s`` and
 ``spark.sql.shuffle.partitions`` sized to total cores via spark-submit
-conf, so nothing here is local-only.
+conf, so nothing here is local-only. The one local-only setting, the
+Python worker daemon (``linkgraph.pyworker``), is left out elsewhere.
 """
 
 from __future__ import annotations
 
 import os
+import site
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -61,6 +64,23 @@ def default_driver_memory(budget_mb: int | None) -> str:
     return f"{min(DRIVER_MEMORY_CAP_MB, int(budget_mb * DRIVER_MEMORY_FRACTION))}m"
 
 
+def _pyworker_conf(master: str) -> dict[str, str]:
+    """Run the Python workers under ``linkgraph.pyworker``, which skips
+    PySpark's per-task re-read of every zip archive on the worker path,
+    when the daemon will be able to import it: a local master (its
+    workers inherit this process's working directory and environment)
+    and ``linkgraph`` found from the working directory, ``PYTHONPATH``
+    or site-packages. Elsewhere (a cluster, linkgraph shipped with
+    ``--py-files``) PySpark's own daemon stays."""
+    if not master.startswith("local"):
+        return {}
+    root = Path(__file__).resolve().parent.parent
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if any(d and Path(d).resolve() == root for d in dirs + site.getsitepackages()):
+        return {"spark.python.daemon.module": "linkgraph.pyworker"}
+    return {}
+
+
 def get_spark(
     app_name: str = "linkgraph",
     master: str | None = None,
@@ -74,6 +94,8 @@ def get_spark(
     size for local mode; on a cluster pass total-cores instead.
     ``spark.driver.memory`` is ``$SPARK_DRIVER_MEMORY``, else sized from
     the memory this process may use (``default_driver_memory``).
+    Python workers run under ``linkgraph.pyworker`` where it can be
+    imported (``_pyworker_conf``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -110,9 +132,8 @@ def get_spark(
         # Iterative jobs re-checkpoint per superstep; keep lineage short.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**_pyworker_conf(master), **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Releasing a localCheckpoint (linkgraph.rolling) always logs that

@@ -239,25 +239,6 @@ def degree_stream(edges: DataFrame) -> DataFrame:
     return sym.groupBy("vid").agg(F.count("*").cast("long").alias("degree"))
 
 
-def run_degree_stream_to_memory(
-    spark: SparkSession, src_path: str, query_name: str = "degrees_stream"
-) -> DataFrame:
-    """Drive the streaming degree maintenance synchronously (test/demo
-    path): read edge drops → incremental counts → memory sink."""
-    out = degree_stream(read_edge_stream(spark, src_path))
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 WEIGHTED_EDGES_SCHEMA = T.StructType(
     [
         T.StructField("src", T.LongType()),

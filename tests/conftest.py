@@ -1,9 +1,29 @@
 import sys
+from collections import defaultdict
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+# tests listed, slowest first, at the end of every run
+SLOWEST = 25
+
+
+def pytest_terminal_summary(terminalreporter):
+    """The SLOWEST tests by setup + call + teardown time, so growth of
+    the suite toward its time cap shows per test. The session-scoped
+    Spark start is charged to the first test that asks for it."""
+    total = defaultdict(float)
+    for reports in terminalreporter.stats.values():
+        for rep in reports:
+            if getattr(rep, "when", None) in ("setup", "call", "teardown"):
+                total[rep.nodeid] += rep.duration
+    if not total:
+        return
+    terminalreporter.write_sep("=", f"slowest {SLOWEST} tests (setup + call + teardown)")
+    for nodeid, s in sorted(total.items(), key=lambda kv: -kv[1])[:SLOWEST]:
+        terminalreporter.write_line(f"{s:8.2f}s {nodeid}")
 
 
 @pytest.fixture(scope="session")

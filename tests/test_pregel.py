@@ -28,6 +28,11 @@ PR_SUPERSTEP_JOBS = 3
 # shuffle, snapshot write with the label sum riding it)
 CC_SETUP_JOBS = 4
 CC_SUPERSTEP_JOBS = 3
+# lpa_checkpointed in the same session: setup (out-degree checkpoint,
+# superstep-0 snapshot) and each superstep, the first included (the
+# input is read through rolling._scanned, so no superstep fills a cache)
+LPA_SETUP_JOBS = 3
+LPA_SUPERSTEP_JOBS = 4
 
 
 @pytest.fixture()
@@ -387,8 +392,40 @@ def test_cc_job_count_pinned(spark, edges_df, ckpt_dir):
         assert ckpt.latest() == rounds  # no fixpoint yet on this graph
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    one, two, three = jobs(1), jobs(2), jobs(3)
+    setup, one, two, three = jobs(0), jobs(1), jobs(2), jobs(3)
     e.unpersist()
     assert three - two == CC_SUPERSTEP_JOBS
     assert two - one == CC_SUPERSTEP_JOBS
+    assert one - setup == CC_SUPERSTEP_JOBS
     assert one - CC_SUPERSTEP_JOBS <= CC_SETUP_JOBS
+
+
+@pytest.mark.parametrize("cached", [True, False])
+def test_lpa_job_count_pinned(spark, edges_df, ckpt_dir, cached):
+    """Superstep 1 costs what supersteps 2 and 3 cost, LPA_SUPERSTEP_JOBS
+    jobs, over a cached input and over one the kernel caches itself
+    (whose setup fills that cache); over a cached input setup costs at
+    most LPA_SETUP_JOBS."""
+    sc = spark.sparkContext
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5))
+    if cached:
+        e = _cached(e)
+
+    def jobs(iterations: int) -> int:
+        group = f"lpa-jobs-{cached}-{iterations}"
+        sc.setJobGroup(group, "lpa_checkpointed job count")
+        try:
+            lpa_checkpointed(
+                spark, e, CheckpointManager(spark, ckpt_dir, group),
+                iterations=iterations,
+            )
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    setup, one, two, three = jobs(0), jobs(1), jobs(2), jobs(3)
+    e.unpersist()
+    assert one - setup == LPA_SUPERSTEP_JOBS
+    assert two - one == LPA_SUPERSTEP_JOBS
+    assert three - two == LPA_SUPERSTEP_JOBS
+    assert setup <= LPA_SETUP_JOBS or not cached

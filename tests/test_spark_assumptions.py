@@ -2,9 +2,15 @@
 that a Spark upgrade which changes it fails here instead of showing up
 later as a slower, leakier or wrongly partitioned kernel."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
 import pytest
 from pyspark.sql import functions as F
 
+from linkgraph import pyworker
 from linkgraph.rolling import release
 
 ROWS = [(i % 5, i) for i in range(40)]
@@ -64,3 +70,88 @@ def test_murmur3_replica_checked_once_without_a_job(spark, monkeypatch):
     with pytest.raises(AssertionError, match="no longer matches"):
         hdrf._check_murmur3_replica(spark)
     assert hdrf._murmur3_checked == set()
+
+
+# what a failed pyworker assumption means
+PYWORKER_MOOT = (
+    "tasks no longer re-read every zip archive on the worker path (PySpark "
+    "stopped calling importlib.invalidate_caches() per task, or CPython "
+    "made zipimporter.invalidate_caches lazy): delete linkgraph/pyworker.py "
+    "and its spark.python.daemon.module setting in linkgraph/session.py"
+)
+
+
+def test_worker_skips_rereading_unchanged_zips(spark):
+    """Every Python task invalidates the import caches, which on CPython
+    3.11 re-reads each zip archive on the worker path; under
+    ``linkgraph.pyworker`` a reused worker's next task skips every
+    unchanged archive and re-reads none."""
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.python.daemon.module") == "linkgraph.pyworker"
+
+    def counts(rows):
+        import os
+
+        from linkgraph import pyworker
+
+        for _ in rows:  # a worker that leaves input unread is not reused
+            pass
+        yield os.getpid(), pyworker.rereads, pyworker.skips
+
+    # one-task jobs until a worker runs a second one; idle workers are
+    # handed out in turn, so that takes one job more than are idle
+    seen = {}
+    for _ in range(16):
+        pid, rereads, skips = sc.parallelize([0], 1).mapPartitions(counts).collect()[0]
+        if pid in seen:
+            break
+        seen[pid] = rereads, skips
+    else:
+        pytest.fail("no Python worker was reused across 16 one-task jobs")
+    first_rereads, first_skips = seen[pid]
+    assert rereads == first_rereads, (
+        "a task re-read an unchanged zip archive: linkgraph/pyworker.py "
+        "no longer skips it"
+    )
+    assert skips > first_skips, PYWORKER_MOOT
+
+
+def test_pyworker_rereads_a_changed_zip(tmp_path, monkeypatch):
+    """A rewritten archive is re-read: after ``importlib.invalidate_caches()``
+    a module imported from it again gets the new contents. The stock
+    invalidation reads the archive's directory eagerly, which is the
+    cost ``linkgraph.pyworker`` skips."""
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", pyworker.invalidate_caches)
+    for name, value in (("_read", {}), ("rereads", 0), ("skips", 0)):
+        monkeypatch.setattr(pyworker, name, value)
+    archive = tmp_path / "probe.zip"
+
+    def write(body: str) -> None:
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("lg_zip_probe.py", body)
+
+    write("VALUE = 1\n")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("lg_zip_probe").VALUE == 1
+
+        importlib.invalidate_caches()  # reads each archive once, stamping it
+        rereads, skips = pyworker.rereads, pyworker.skips
+        importlib.invalidate_caches()
+        assert pyworker.rereads == rereads and pyworker.skips > skips
+
+        write("VALUE = 2  # a longer file, so the archive's size changes\n")
+        importlib.invalidate_caches()
+        assert pyworker.rereads == rereads + 1
+        del sys.modules["lg_zip_probe"]
+        assert importlib.import_module("lg_zip_probe").VALUE == 2
+    finally:
+        sys.modules.pop("lg_zip_probe", None)
+
+    reads = []
+    stock_read = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda path: reads.append(path) or stock_read(path)
+    )
+    pyworker._stock_invalidate(sys.path_importer_cache[str(archive)])
+    assert reads == [str(archive)], PYWORKER_MOOT
