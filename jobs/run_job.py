@@ -14,10 +14,13 @@ other iterative jobs (scc, bfs, kcore, walks, topo) recompute from the
 start.
 
 The session comes from ``SparkSession.builder``, not
-``linkgraph.session.get_spark``, so the Python workers run PySpark's
-own daemon: linkgraph may arrive through ``--py-files`` only after the
-daemon has started, and a ``linkgraph.pyworker`` daemon would not find
-it.
+``linkgraph.session.get_spark``: spark-submit owns the master, memory
+and parallelism. The builder sets ``linkgraph.session.LAUNCH_CONF``,
+the settings every launch path shares (PySpark's per-call call-site
+capture off). The Python workers still run PySpark's own daemon, so
+each task re-reads the zip archives on the worker path: linkgraph may
+arrive through ``--py-files`` only after the daemon has started, and a
+``linkgraph.pyworker`` daemon would not find it.
 """
 
 from __future__ import annotations
@@ -55,8 +58,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from linkgraph.graph import edges_from_lineitem
+    from linkgraph.session import LAUNCH_CONF
 
-    spark = SparkSession.builder.appName(f"linkgraph-{args.job}").getOrCreate()
+    spark = (
+        SparkSession.builder.appName(f"linkgraph-{args.job}")
+        .config(map=LAUNCH_CONF)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
     edges = edges_from_lineitem(spark, args.sf_dir)
 

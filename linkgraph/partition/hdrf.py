@@ -660,12 +660,18 @@ def _hdrf_chunked(
     Deterministic: chunking, grouping, and within-group order are all
     hash-defined. Approximation vs exact HDRF = cross-group staleness
     within a chunk; RF approaches exact as C grows.
+
+    Pre-pass: ONE job (a noop write) scans (src, dst) with each row's
+    chunk id and observes the C chunk sizes; m = Σ chunk sizes unless
+    ``total_edges`` is given. A cached ``edges`` is borrowed as it is
+    and each chunk re-derives its rows from it; an uncached one is
+    cached here (``rolling._scanned``), filled by the same write (one
+    more job when its plan holds an exchange, for AQE materializes such
+    a cache as a stage of its own) and released on return.
     """
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.rolling import RollingCheckpoint, _scanned, fill_observed, release
 
     spark = edges.sparkSession
-    m = total_edges if total_edges is not None else edges.count()
-    cap = max(1, int(balance_ratio * m / k))
     n_tasks = DEFAULT_CHUNK_TASKS
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     _check_murmur3_replica(spark)
@@ -680,11 +686,16 @@ def _hdrf_chunked(
         ).cast("int")
     else:
         chunk_col = F.pmod(F.xxhash64("src", "dst", F.lit(985)), F.lit(num_chunks))
-    chunked = edges.withColumn("_chunk", chunk_col).cache()
-    chunk_sizes = {
-        r["_chunk"]: r["count"]
-        for r in chunked.groupBy("_chunk").count().collect()
-    }
+    # the pre-pass: one scan of the input, the chunk sizes riding it
+    scanned, owned = _scanned(edges, "src", "dst")
+    chunked = scanned.withColumn("_chunk", chunk_col)
+    sizes = fill_observed(
+        chunked,
+        *[F.count_if(F.col("_chunk") == c).alias(f"c{c}") for c in range(num_chunks)],
+    )
+    chunk_sizes = [sizes[f"c{c}"] for c in range(num_chunks)]
+    m = total_edges if total_edges is not None else sum(chunk_sizes)
+    cap = max(1, int(balance_ratio * m / k))
 
     roll_state = RollingCheckpoint()
     vstate: DataFrame | None = init_vstate
@@ -715,7 +726,7 @@ def _hdrf_chunked(
     state_rows_ub: int | None = 0 if init_vstate is None else None
     results = []
     for c in range(num_chunks):
-        if not chunk_sizes.get(c, 0):
+        if not chunk_sizes[c]:
             continue
         # Per-task budget: the GLOBAL cap's remaining headroom split
         # across the T parallel groups — guarantees final loads ≤
@@ -838,7 +849,7 @@ def _hdrf_chunked(
         if state_rows_ub is None:
             vstate = roll_state(vstate, eager=False)
         else:
-            state_rows_ub += 2 * chunk_sizes.get(c, 0)
+            state_rows_ub += 2 * chunk_sizes[c]
             if state_rows_ub <= bcast_rows_cap:
                 vstate = roll_state(vstate, eager=False)
             else:
@@ -853,7 +864,7 @@ def _hdrf_chunked(
         for p in range(k):
             loads[p] += chunk_loads[f"l{p}"]
 
-    chunked.unpersist()
+    release(owned)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

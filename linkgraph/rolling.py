@@ -23,13 +23,15 @@ at two snapshots instead of growing per iteration.
 
 ``_scanned`` (the input a kernel caches for its call) and ``release``
 (what it frees on return) live here too, so one module decides what a
-kernel may cache and what it may free.
+kernel may cache and what it may free. ``fill_observed`` runs a table
+once, filling its cache, and reads what a kernel needs to know about
+the rows off that same run.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 
 def _checkpointed_jrdd(df: DataFrame):
@@ -110,3 +112,17 @@ def _scanned(edges: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame | None]
         return g, None
     g = g.cache()
     return g, g
+
+
+def fill_observed(df: DataFrame, *metrics: Column) -> dict:
+    """Run ``df`` once and return the aggregate ``metrics`` observed on
+    that run, by name. The run is a ``noop`` write, which computes every
+    column of every row (nothing is pruned) and so fills a ``cache()``
+    on ``df``'s plan. It is one job, where ``count()`` takes two, unless
+    it fills a cache whose plan holds an exchange: AQE materializes such
+    a cache in a job of its own. A ``localCheckpoint`` would take one
+    job always, but holds its rows deserialized, several times the size
+    of a ``cache()``."""
+    obs = Observation()
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get

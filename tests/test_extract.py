@@ -1,11 +1,26 @@
 """Edge extraction from the synthetic source-repo corpus: ground-truth
 parity, lang filtering, sha256 invariant (and its violation path)."""
 
+import hashlib
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from linkgraph.extract import extract_edges, file_ids, parse_imports, verify_sha
+from linkgraph import extract
+from linkgraph.extract import (
+    extract_edges,
+    file_ids,
+    parse_batch,
+    parse_imports,
+    verify_sha,
+)
 from linkgraph.synth import source_repo_table
+
+# jobs extract_edges runs to parse the corpus and check every parsed
+# row's sha256: the fill of the parse's cache, with the mismatch count
+# observed on it. A change that adds one must say why.
+PARSE_AND_SHA_JOBS = 1
 
 
 @pytest.fixture(scope="module")
@@ -78,14 +93,64 @@ def test_sha_invariant_detects_corruption(spark, corpus):
     assert verify_sha(corrupted, parsed) > 0
 
 
-def test_extract_edges_raises_on_corruption(spark, corpus):
+def test_parse_batch_flags_the_mismatching_row():
+    """The UDF body flags a file whose JVM sha differs from its Python
+    sha256, once, on the file's first import row, and nothing else."""
+    contents = [
+        "import r0.a\nimport r1.b.c\n",
+        "import r2.d\nimport r0.e\n",
+        "no imports here\n",
+    ]
+    shas = [hashlib.sha256(c.encode("utf-8")).hexdigest() for c in contents]
+    shas[1] = "0" * 64
+    batch = pa.RecordBatch.from_pydict(
+        {"repo": ["r0", "r1", "r2"], "path": ["a.py", "b.py", "c.py"],
+         "content": contents, "sha_jvm": shas}
+    )
+    out = parse_batch(batch).to_pydict()
+    assert out["path"] == ["a.py", "a.py", "b.py", "b.py"]
+    assert out["imp_path"] == ["a.py", "b/c.py", "d.py", "e.py"]
+    assert out["sha_bad"] == [False, False, True, False]
+    assert out["sha_py"][2] == hashlib.sha256(contents[1].encode()).hexdigest()
+
+
+def test_extract_edges_raises_on_corruption(spark, corpus, monkeypatch):
+    """A JVM hash that differs from the Python one on one parsed file
+    fails extraction, naming the count; a clean corpus passes."""
     files, _ = corpus
-    # a content column that differs between the Python hash path and
-    # the JVM hash path cannot be constructed (both hash the same
-    # bytes); instead assert the guard wiring: enforce_sha=True runs
-    # clean on a valid corpus
     edges = extract_edges(files, enforce_sha=True)
     assert edges.count() > 0
+    victim = parse_imports(files).first()
+    stock_sha2 = F.sha2
+
+    def drifted_sha2(col, bits):
+        hit = (F.col("repo") == victim["repo"]) & (F.col("path") == victim["path"])
+        return F.when(hit, F.lit("0" * 64)).otherwise(stock_sha2(col, bits))
+
+    monkeypatch.setattr(extract.F, "sha2", drifted_sha2)
+    with pytest.raises(ValueError, match=r"sha256 invariant violated on 1 rows"):
+        extract_edges(files, enforce_sha=True)
+
+
+def test_parse_and_sha_check_job_count_pinned(spark, corpus, monkeypatch):
+    """The parse and the sha check of every parsed row run as
+    PARSE_AND_SHA_JOBS jobs together."""
+    files, _ = corpus
+    parse_imports(files).unpersist()  # an earlier test's cache, same plan
+    sc = spark.sparkContext
+    stock = extract.fill_observed
+
+    def counted(df, *metrics):
+        sc.setJobGroup("parse-and-sha", "extract_edges parse and sha check")
+        try:
+            return stock(df, *metrics)
+        finally:
+            sc.setJobGroup(None, None)
+
+    monkeypatch.setattr(extract, "fill_observed", counted)
+    extract_edges(files, enforce_sha=True)
+    jobs = sc.statusTracker().getJobIdsForGroup("parse-and-sha")
+    assert len(jobs) == PARSE_AND_SHA_JOBS
 
 
 def test_no_self_loops_and_canonical(spark, corpus):

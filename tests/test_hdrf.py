@@ -4,10 +4,19 @@ invariants (completeness, balance cap, RF better than hash)."""
 import pytest
 from pyspark.sql import functions as F
 
+from linkgraph import rolling
 from linkgraph.partition.hdrf import hdrf_oracle, hdrf_spark, stream_ord_expr, stream_ord_py
 from linkgraph.partition.metrics import assert_complete, edge_partition_metrics
 from linkgraph.partition.strategies import hash_edges
 from linkgraph.synth import graph_edges
+
+
+# jobs of hdrf_spark(exact=False) on a cached input: the pre-pass that
+# observes the chunk sizes, and one whole call with CHUNKED_CALL_CHUNKS
+# chunks on the test graph. A change that adds one must say why.
+CHUNKED_PREPASS_JOBS = 1
+CHUNKED_CALL_CHUNKS = 2
+CHUNKED_CALL_JOBS = 9
 
 
 @pytest.fixture(scope="module")
@@ -67,6 +76,38 @@ def test_chunked_invariants(spark, edges_df, powerlaw):
     mh = edge_partition_metrics(hash_edges(e, k, "xxhash64"), k).first()
     assert mc["replication_factor"] < mh["replication_factor"]
     assert mc["alpha"] <= 1.3  # budgeted-parallel slack over the 1.05 cap
+
+
+def test_chunked_job_count_pinned(spark, edges_df, powerlaw, monkeypatch):
+    """Over a cached input the pre-pass costs CHUNKED_PREPASS_JOBS jobs
+    and a whole call CHUNKED_CALL_JOBS (output forced). The input is a
+    distinct, as extraction's is: a cache over a plan with an exchange
+    is filled by a job of its own, so caching the input again would show
+    here."""
+    sc = spark.sparkContext
+    e = edges_df(powerlaw).distinct().cache()
+    e.count()
+    stock = rolling.fill_observed
+
+    def counted(df, *metrics):
+        sc.setJobGroup("hdrf-prepass", "chunked HDRF pre-pass")
+        try:
+            return stock(df, *metrics)
+        finally:
+            sc.setJobGroup("hdrf-call", "chunked HDRF call")
+
+    monkeypatch.setattr(rolling, "fill_observed", counted)
+    sc.setJobGroup("hdrf-call", "chunked HDRF call")
+    try:
+        p = hdrf_spark(e, 8, exact=False, num_chunks=CHUNKED_CALL_CHUNKS)
+        p.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(None, None)
+        e.unpersist()
+    prepass = len(sc.statusTracker().getJobIdsForGroup("hdrf-prepass"))
+    rest = len(sc.statusTracker().getJobIdsForGroup("hdrf-call"))
+    assert prepass == CHUNKED_PREPASS_JOBS
+    assert prepass + rest == CHUNKED_CALL_JOBS
 
 
 def test_chunked_deterministic(spark, edges_df, powerlaw):

@@ -1,11 +1,17 @@
 """The session factory's default driver heap fits the memory the
-process may use (the full suite runs without SPARK_DRIVER_MEMORY)."""
+process may use (the full suite runs without SPARK_DRIVER_MEMORY), and
+its sessions run without PySpark's per-call call-site capture."""
+
+from pyspark.errors.utils import is_debugging_enabled
 
 from linkgraph.session import (
     DRIVER_MEMORY_CAP_MB,
+    LAUNCH_CONF,
     default_driver_memory,
     memory_budget_mb,
 )
+
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def _mb(value: str) -> int:
@@ -31,3 +37,9 @@ def test_driver_memory_budget_follows_cgroup_limit(tmp_path):
     assert limited == 2048
     assert _mb(default_driver_memory(limited)) <= 2048
     assert _mb(default_driver_memory(10**7)) == DRIVER_MEMORY_CAP_MB
+
+
+def test_call_site_capture_off(spark):
+    assert LAUNCH_CONF[DEBUGGING] == "false"
+    assert spark.conf.get(DEBUGGING) == "false"
+    assert is_debugging_enabled() is False

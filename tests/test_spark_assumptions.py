@@ -48,6 +48,32 @@ def test_exchange_reuse_needs_a_checkpointed_source(spark):
         release(ck)
 
 
+def test_column_building_sends_no_call_site_commands(spark, monkeypatch):
+    """Building a Column sends only the py4j commands that build it: 9
+    for one load sum of the chunked partitioner. With PySpark's call-site
+    capture on, every Column and ``functions`` call also walks the Python
+    stack and sends two more commands, 49 in all."""
+    import py4j.clientserver
+
+    sent = []
+    stock = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return stock(self, command)
+
+    F.col("p")  # the first call may read the setting: not counted
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    F.sum((F.col("p") == 3).cast("long")).alias("l3")
+    monkeypatch.undo()
+    assert len(sent) <= 12, (
+        f"building one load sum sent {len(sent)} py4j commands (9 expected): "
+        "PySpark's call-site capture (_with_origin in pyspark/errors/utils.py) "
+        "is back on; check that linkgraph/session.py's LAUNCH_CONF setting "
+        "spark.python.sql.dataFrameDebugging.enabled=false still reaches it"
+    )
+
+
 def test_murmur3_replica_checked_once_without_a_job(spark, monkeypatch):
     """The HDRF spread labels trust a Python Murmur3 replica; the check
     against Spark's hash runs on first use per SparkContext, launches no
