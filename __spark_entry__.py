@@ -5,6 +5,14 @@ co-occurrence link graph at sf0.001.
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
 (SURVEY.md §2); oracles are DuckDB SQL with unrolled fixed-iteration
 CTEs for the iterative analytics.
+
+Every function here takes the caller's session as it is. A session the
+caller builds keeps Spark's default compiled-code cache of 100 classes,
+fewer than one pass over a few queries generates, so a long session
+recompiles its plans call after call, and keeps PySpark's per-call
+call-site capture on, unless its builder applies
+``linkgraph.session.LAUNCH_CONF`` (``builder.config(map=LAUNCH_CONF)``)
+before the first query.
 """
 
 from __future__ import annotations

@@ -16,11 +16,14 @@ start.
 The session comes from ``SparkSession.builder``, not
 ``linkgraph.session.get_spark``: spark-submit owns the master, memory
 and parallelism. The builder sets ``linkgraph.session.LAUNCH_CONF``,
-the settings every launch path shares (PySpark's per-call call-site
-capture off). The Python workers still run PySpark's own daemon, so
-each task re-reads the zip archives on the worker path: linkgraph may
-arrive through ``--py-files`` only after the daemon has started, and a
-``linkgraph.pyworker`` daemon would not find it.
+the two settings every launch path shares: PySpark's per-call
+call-site capture off, and Spark's compiled-code cache sized to 1000
+classes (it pays off only when a plan runs again in the same JVM,
+which a one-job submit seldom does). The Python workers still run
+PySpark's own daemon, so each task re-reads the zip archives on the
+worker path: linkgraph may arrive through ``--py-files`` only after
+the daemon has started, and a ``linkgraph.pyworker`` daemon would not
+find it.
 """
 
 from __future__ import annotations

@@ -39,7 +39,26 @@ DRIVER_MEMORY_CAP_MB = 48 * 1024
 # DataFrame error's query context no longer names the Python file and
 # line that built the failing expression. PySpark reads the setting once
 # per process, the first time an API call asks for it.
-LAUNCH_CONF = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
+#
+# spark.sql.codegen.cache.maxEntries=1000 sizes the JVM-wide LRU cache of
+# compiled operator classes (``CodeGenerator.cache``), 100 by default.
+# One warm pass of the benchmark's repo_pipeline generates 194 distinct
+# classes and one of dense_kernels 139-152, so at 100 every class is
+# evicted before the next pass asks for it again and every pass
+# Janino-compiles all of them anew (about 3 ms each with a C1-only JIT,
+# 20% of a warm pass's wall time). At 1000 a warm pass compiles none;
+# the tier-1 suite compiles 5.7k classes instead of 14.1k. An entry
+# holds about 35 KB of heap (162.6 -> 169.2 MB after GC with ~200
+# held), so a full cache costs at most ~35 MB. Only a process that runs
+# the same plans more than once gains: a long-lived session, a pipeline
+# re-run; a one-call spark-submit or a cold first pass compiles as much
+# as before. It is a static SQL conf, and CodeGenerator reads it once per
+# JVM, on the first codegen: it takes effect only when set as the
+# session is built, before any query has run.
+LAUNCH_CONF = {
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
 CGROUP_LIMITS = (
     "/sys/fs/cgroup/memory.max",  # cgroup v2; "max" when unlimited
     "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
@@ -116,7 +135,8 @@ def get_spark(
     Python workers run under ``linkgraph.pyworker`` where it can be
     imported (``_pyworker_conf``). ``LAUNCH_CONF`` turns PySpark's
     per-call call-site capture off, so DataFrame error messages carry no
-    Python file:line; ``extra_conf`` may set it back to ``"true"``.
+    Python file:line (``extra_conf`` may set it back to ``"true"``), and
+    sizes Spark's compiled-code cache to 1000 classes.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:

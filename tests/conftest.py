@@ -8,6 +8,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 # tests listed, slowest first, at the end of every run
 SLOWEST = 25
+# Spark's code generation over the session, read as the session stops
+codegen = {}
 
 
 def pytest_terminal_summary(terminalreporter):
@@ -24,6 +26,11 @@ def pytest_terminal_summary(terminalreporter):
     terminalreporter.write_sep("=", f"slowest {SLOWEST} tests (setup + call + teardown)")
     for nodeid, s in sorted(total.items(), key=lambda kv: -kv[1])[:SLOWEST]:
         terminalreporter.write_line(f"{s:8.2f}s {nodeid}")
+    if codegen:
+        terminalreporter.write_line(
+            f"spark codegen: {codegen['classes']} classes compiled, "
+            f"{codegen['ms']:.0f} ms compiling"
+        )
 
 
 @pytest.fixture(scope="session")
@@ -40,6 +47,15 @@ def spark():
         },
     )
     yield s
+    # CodegenMetrics' compile-time histogram counts the compilations but
+    # keeps only a sample of their times; the total is CodeGenerator's
+    jvm = s._jvm
+    codegen["classes"] = (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    )
+    codegen["ms"] = (
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime() / 1e6
+    )
     s.stop()
 
 

@@ -1,6 +1,7 @@
 """The session factory's default driver heap fits the memory the
 process may use (the full suite runs without SPARK_DRIVER_MEMORY), and
-its sessions run without PySpark's per-call call-site capture."""
+its sessions carry every LAUNCH_CONF setting: PySpark's per-call
+call-site capture off, Spark's compiled-code cache sized up."""
 
 from pyspark.errors.utils import is_debugging_enabled
 
@@ -39,7 +40,8 @@ def test_driver_memory_budget_follows_cgroup_limit(tmp_path):
     assert _mb(default_driver_memory(10**7)) == DRIVER_MEMORY_CAP_MB
 
 
-def test_call_site_capture_off(spark):
+def test_launch_conf_reaches_session(spark):
     assert LAUNCH_CONF[DEBUGGING] == "false"
-    assert spark.conf.get(DEBUGGING) == "false"
+    for key, value in LAUNCH_CONF.items():
+        assert spark.conf.get(key) == value, key
     assert is_debugging_enabled() is False

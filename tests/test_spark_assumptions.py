@@ -74,6 +74,33 @@ def test_column_building_sends_no_call_site_commands(spark, monkeypatch):
     )
 
 
+def test_codegen_cache_outlives_a_pass(spark):
+    """A plan run again after more than 100 other distinct plans
+    compiles nothing: Spark's LRU cache of compiled operator classes
+    holds more than one pass of the engine's working set. Each plan
+    below compiles classes of its own, as its literal is inlined into
+    the generated code."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(i: int) -> None:
+        plan = spark.range(0, 2, 1, 1).select(F.col("id") + F.lit(i))
+        plan.write.format("noop").mode("overwrite").save()
+
+    for i in range(150):
+        run(i)
+    compiled = metric.getCount()
+    for i in range(10):
+        run(i)
+    assert metric.getCount() == compiled, (
+        f"re-running 10 plans compiled {metric.getCount() - compiled} classes: "
+        "Spark's CodeGenerator cache evicted them, so a warm pass recompiles "
+        "its whole plan set. Check that linkgraph/session.py's LAUNCH_CONF "
+        "setting spark.sql.codegen.cache.maxEntries still reaches the JVM; "
+        "CodeGenerator reads it once per JVM, on its first codegen, so it "
+        "must be set when the session is built"
+    )
+
+
 def test_murmur3_replica_checked_once_without_a_job(spark, monkeypatch):
     """The HDRF spread labels trust a Python Murmur3 replica; the check
     against Spark's hash runs on first use per SparkContext, launches no
