@@ -3,12 +3,15 @@
 label(v) ← min(label(v), min_{u ∈ N(v)} label(u)) until fixpoint;
 initial label = vid; component id = min vid in the component.
 
-Round shape: one ``sym ⋈ labels`` join on src plus one aggregate per
-vertex over the messages and the vertex's own row. The aggregate also
-carries the vertex's previous label as ``own``, so the number of labels
-the round changed, Σ(component ≠ own), rides the round's rolled
-checkpoint as an Observation: convergence costs no job beyond the
-checkpoint, and the loop stops when the count reads 0.
+The rounds run in ``linkgraph.iterate.iterate``: rolled checkpoints
+here, a durable snapshot per round in ``pregel.cc_checkpointed``. Round
+shape: one ``sym ⋈ labels`` join on src plus one aggregate per vertex
+over the messages and the vertex's own row. The aggregate also carries
+the vertex's previous label as ``own``, so the number of labels the
+round changed, Σ(component ≠ own), rides the round's checkpoint as the
+loop's watch: convergence costs no job beyond the checkpoint, and the
+loop stops when the count reads 0. That is the one CC stop rule; the
+CSR kernel (``csr.cc_csr_blocks``) carries ``own`` the same way.
 
 Identity round: with no ``init_labels`` every label starts as the vertex
 id, so round 1's join would return the edge list itself. Round 1 instead
@@ -34,7 +37,7 @@ from __future__ import annotations
 import math
 import warnings
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -76,102 +79,114 @@ def connected_components(
     at every-1 for the same 12 rounds).
     """
     from linkgraph.graph import symmetrize, vertices
-    from linkgraph.rolling import RollingCheckpoint, _scanned, release
+    from linkgraph.rolling import _scanned, release
 
     converge = fixed_iterations is None
     rounds = max_iterations if converge else fixed_iterations
     if pointer_jumping is None and not converge:
         pointer_jumping = False
     source, cached = _scanned(edges, "src", "dst")
-    sym = symmetrize(source)
-    roll = RollingCheckpoint()
-    out = None
+    seeded = None
     try:
-        labels = None  # the identity start, never materialized
+        # the identity start is read only when no round runs
+        start = vertices(source).withColumn("component", F.col("vid"))
         if init_labels is not None:
-            labels = roll(
+            seeded = start = (
                 vertices(source)
-                .join(
-                    init_labels.select("vid", F.col("component").alias("_c0")),
-                    "vid",
-                    "left",
-                )
-                .select(
-                    "vid", F.coalesce(F.col("_c0"), F.col("vid")).alias("component")
-                )
+                .join(init_labels.select("vid", "component"), "vid", "left")
+                .select("vid", F.coalesce("component", "vid").alias("component"))
+                .localCheckpoint()
             )
-        elif rounds == 0:
-            labels = roll(vertices(source).withColumn("component", F.col("vid")))
-        n = changed = None
-        for i in range(rounds):
-            if labels is None:
-                new = (
-                    sym.groupBy(F.col("dst").alias("vid"))
-                    .agg(F.min(F.least("src", "dst")).alias("component"))
-                    .withColumn("own", F.col("vid"))
-                )
-            else:
-                msgs = sym.join(labels, sym["src"] == labels["vid"]).select(
-                    F.col("dst").alias("vid"),
-                    "component",
-                    F.lit(None).cast("long").alias("own"),
-                )
-                mine = labels.select(
-                    "vid", "component", F.col("component").alias("own")
-                )
-                new = (
-                    msgs.unionByName(mine)
-                    .groupBy("vid")
-                    .agg(
-                        F.min("component").alias("component"),
-                        F.max("own").alias("own"),
-                    )
-                )
-            if pointer_jumping or (
-                pointer_jumping is None
-                and n is not None
-                and i + 1 > math.ceil(math.log2(n))
-            ):
-                # compress: component ← label(component) where known
-                new = roll(new)
-                lab2 = new.select(
-                    F.col("vid").alias("c_vid"), F.col("component").alias("c_comp")
-                )
-                new = new.join(lab2, new["component"] == lab2["c_vid"], "left").select(
-                    "vid",
-                    F.coalesce(F.col("c_comp"), F.col("component")).alias("component"),
-                    "own",
-                )
-            at_checkpoint = (i + 1) % checkpoint_every == 0 or i == rounds - 1
-            obs = None
-            if converge and at_checkpoint:
-                obs = Observation()
-                new = new.observe(
-                    obs,
-                    F.sum((F.col("component") != F.col("own")).cast("long")).alias(
-                        "changed"
-                    ),
-                    F.count(F.lit(1)).alias("n"),
-                )
-            new = new.select("vid", "component")
-            if at_checkpoint:
-                new = roll(new)
-            labels = new
-            if obs is not None:
-                n, changed = obs.get["n"], obs.get["changed"]
-                if changed == 0:
-                    break
-        else:
-            if converge and changed:
-                warnings.warn(
-                    f"connected_components ran max_iterations={rounds} rounds "
-                    f"and its last round still changed {changed} labels; the "
-                    "components are not final (raise max_iterations or pass "
-                    "pointer_jumping=True)",
-                    stacklevel=2,
-                )
-        out = labels
+        labels, changed = _hash_min(
+            symmetrize(source), start, rounds, converge, pointer_jumping,
+            checkpoint_every, identity=init_labels is None,
+        )
     finally:
-        roll.release(keep=out)
-        release(cached)
-    return out.select("vid", "component")
+        release(seeded, cached)
+    if changed:
+        warnings.warn(
+            f"connected_components ran max_iterations={rounds} rounds "
+            f"and its last round still changed {changed} labels; the "
+            "components are not final (raise max_iterations or pass "
+            "pointer_jumping=True)",
+            stacklevel=2,
+        )
+    return labels
+
+
+def _hash_min(
+    sym: DataFrame, start: DataFrame, rounds: int, converge: bool,
+    pointer_jumping: bool | None, every: int, identity: bool,
+    n: int | None = None, **durable,
+) -> tuple[DataFrame, int | None]:
+    """``iterate`` hash-min rounds over ``sym`` from ``start``
+    (``identity``: every label is the vertex id, so round 1 joins
+    nothing). In convergence mode the changed-label count and n ride
+    each checkpoint and the loop stops at changed = 0; ``n``, when
+    known, gates jumping from round 1 on. ``durable`` is the loop's
+    sink arguments. Returns the labels and the last changed count
+    (``None`` when nothing was observed)."""
+    from linkgraph.iterate import iterate
+
+    seen = {"n": n, "changed": None}
+
+    def step(labels: DataFrame, s: int, cut) -> DataFrame:
+        if s == 1 and identity:
+            new = (
+                sym.groupBy(F.col("dst").alias("vid"))
+                .agg(F.min(F.least("src", "dst")).alias("component"))
+                .withColumn("own", F.col("vid"))
+            )
+        else:
+            msgs = sym.join(labels, sym["src"] == labels["vid"]).select(
+                F.col("dst").alias("vid"), "component"
+            )
+            new = _min_label(msgs, labels)
+        if pointer_jumping or (
+            pointer_jumping is None
+            and seen["n"] is not None
+            and s > math.ceil(math.log2(seen["n"]))
+        ):
+            # compress: component ← label(component) where known
+            new = cut(new)
+            lab2 = new.select(
+                F.col("vid").alias("c_vid"), F.col("component").alias("c_comp")
+            )
+            new = new.join(lab2, new["component"] == lab2["c_vid"], "left").select(
+                "vid",
+                F.coalesce(F.col("c_comp"), F.col("component")).alias("component"),
+                "own",
+            )
+        return new
+
+    def until(values: dict) -> bool:
+        seen.update(values)
+        return values["changed"] == 0
+
+    labels = iterate(
+        start, step, rounds, every, _watch() if converge else None, until,
+        **durable,
+    )
+    return labels.select("vid", "component"), seen["changed"]
+
+
+def _min_label(msgs: DataFrame, labels: DataFrame) -> DataFrame:
+    """A hash-min round's aggregate: each vertex's minimum over its
+    messages ``(vid, component)`` and its own label, which it also
+    carries as ``own`` for ``_watch``'s changed count."""
+    mine = labels.select("vid", "component", F.col("component").alias("own"))
+    return (
+        msgs.withColumn("own", F.lit(None).cast("long"))
+        .unionByName(mine)
+        .groupBy("vid")
+        .agg(F.min("component").alias("component"), F.max("own").alias("own"))
+    )
+
+
+def _watch() -> list[Column]:
+    """The one CC stop test, observed on a round's checkpoint: the
+    labels the round changed (the loop stops at 0) and n."""
+    return [
+        F.sum((F.col("component") != F.col("own")).cast("long")).alias("changed"),
+        F.count(F.lit(1)).alias("n"),
+    ]

@@ -13,12 +13,19 @@ with map-side partial aggregation (hub-degree skew collapses per task);
 size ≤ #distinct neighbor labels, not degree). Every label starts as
 the vertex id, so round 1's neighbor labels are the darts' sources:
 it counts ``sym.groupBy(dst, src)`` with no join and no vertex
-distinct. Later rounds join ``sym ⋈ labels`` on src.
+distinct. Later rounds join ``sym ⋈ labels`` on src. The rounds run in
+``linkgraph.iterate.iterate``: rolled checkpoints here, a durable
+snapshot per round in ``pregel.lpa_checkpointed``, whose superstep 1 is
+the same identity round.
 
-Storage: the edge side is the input's ``(src, dst)`` projection,
-symmetrized inline (cached for the call only when the caller has not
-cached it; ``linkgraph.rolling._scanned``). Every rolled generation but
-the returned one, and any cache the call made, is released on return.
+Weighted LPA runs the same rounds; a label's vote is its summed
+incident edge weight instead of its count.
+
+Storage: the edge side is the input's ``(src, dst)`` (weighted: ``(src,
+dst, weight)``) projection, symmetrized inline (cached for the call only
+when the caller has not cached it; ``linkgraph.rolling._scanned``).
+Every rolled generation but the returned one, and any cache the call
+made, is released on return.
 """
 
 from __future__ import annotations
@@ -31,41 +38,7 @@ def label_propagation(
     edges: DataFrame, iterations: int = 10, checkpoint_every: int = 3
 ) -> DataFrame:
     """Returns ``DataFrame[vid: long, label: long]``."""
-    from linkgraph.graph import symmetrize, vertices
-    from linkgraph.rolling import RollingCheckpoint, _scanned, release
-
-    source, cached = _scanned(edges, "src", "dst")
-    sym = symmetrize(source)
-    roll = RollingCheckpoint()
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
-    out = None
-    try:
-        labels = None  # the identity start, never materialized
-        if iterations == 0:
-            labels = roll(vertices(source).withColumn("label", F.col("vid")))
-        for i in range(iterations):
-            if labels is None:
-                votes = sym.select(
-                    F.col("dst").alias("vid"), F.col("src").alias("label")
-                )
-            else:
-                votes = sym.join(labels, sym["src"] == labels["vid"]).select(
-                    F.col("dst").alias("vid"), "label"
-                )
-            counts = votes.groupBy("vid", "label").agg(F.count("*").alias("cnt"))
-            new_labels = (
-                counts.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select("vid", "label")
-            )
-            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-                new_labels = roll(new_labels)
-            labels = new_labels
-        out = labels
-    finally:
-        roll.release(keep=out)
-        release(cached)
-    return out.select("vid", "label")
+    return _in_memory(edges, iterations, checkpoint_every)
 
 
 def label_propagation_weighted(
@@ -75,51 +48,62 @@ def label_propagation_weighted(
     (src < dst): each round a vertex adopts the label with the largest
     summed incident edge weight among its neighbors; ties break to the
     minimum label (deterministic — integer weight sums, no float
-    order sensitivity). Same execution shape as the unweighted LPA:
-    partial-aggregated (vid, label) weight sums, then an argmax window
-    over the aggregated counts (group size ≤ #distinct neighbor
-    labels). Its edge cache and every rolled generation but the
-    returned one are released on return. Returns
-    ``DataFrame[vid, label]``."""
-    from linkgraph.graph import join_ready
-    from linkgraph.rolling import RollingCheckpoint, release
+    order sensitivity). Same rounds as ``label_propagation``, the
+    identity round 1 included. Returns ``DataFrame[vid, label]``."""
+    return _in_memory(wedges, iterations, checkpoint_every, weighted=True)
 
-    roll = RollingCheckpoint()
-    sym = join_ready(
-        wedges.select("src", "dst", "weight").unionByName(
-            wedges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-            )
-        ),
-        "src",
-    ).cache()
-    labels = (
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .withColumn("label", F.col("vid"))
-    )
-    w = Window.partitionBy("vid").orderBy(F.desc("wsum"), F.asc("label"))
-    out = None
+
+def _in_memory(
+    edges: DataFrame, iterations: int, every: int, weighted: bool = False
+) -> DataFrame:
+    """``_propagate`` over the input's projection (module docstring),
+    symmetrized; the identity start is read only when no round runs."""
+    from linkgraph.graph import vertices
+    from linkgraph.rolling import _scanned, release
+
+    carry = ("weight",) if weighted else ()
+    source, cached = _scanned(edges, "src", "dst", *carry)
     try:
-        if iterations == 0:
-            labels = roll(labels)  # outlive the released edge cache
-        for i in range(iterations):
-            votes = (
-                sym.join(labels, sym["src"] == labels["vid"])
-                .select(F.col("dst").alias("vid"), "label", "weight")
-                .groupBy("vid", "label")
-                .agg(F.sum("weight").cast("long").alias("wsum"))
-            )
-            new_labels = (
-                votes.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select("vid", "label")
-            )
-            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-                new_labels = roll(new_labels)
-            labels = new_labels
-        out = labels
+        sym = source.unionByName(
+            source.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *carry)
+        )
+        start = vertices(source).withColumn("label", F.col("vid"))
+        return _propagate(sym, start, iterations, every, carry)
     finally:
-        roll.release(keep=out)
-        release(sym)
-    return out.select("vid", "label")
+        release(cached)
+
+
+def _adopt(counts: DataFrame) -> DataFrame:
+    """Each vertex's label with the largest ``cnt`` over ``(vid, label,
+    cnt)``, ties to the minimum label."""
+    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
+    return (
+        counts.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("vid", "label")
+    )
+
+
+def _propagate(
+    sym: DataFrame, start: DataFrame, iterations: int, every: int,
+    carry: tuple[str, ...] = (), **durable,
+) -> DataFrame:
+    """``iterate`` LPA rounds over ``sym`` from the identity labels
+    ``start``; ``carry=("weight",)`` votes with the summed weight instead
+    of the count. ``durable`` is the loop's sink arguments."""
+    from linkgraph.iterate import iterate
+
+    vote = F.sum("weight").cast("long") if carry else F.count("*")
+
+    def step(labels: DataFrame, s: int, _) -> DataFrame:
+        if s == 1:
+            votes = sym.select(
+                F.col("dst").alias("vid"), F.col("src").alias("label"), *carry
+            )
+        else:
+            votes = sym.join(labels, sym["src"] == labels["vid"]).select(
+                F.col("dst").alias("vid"), "label", *carry
+            )
+        return _adopt(votes.groupBy("vid", "label").agg(vote.alias("cnt")))
+
+    return iterate(start, step, iterations, every, **durable).select("vid", "label")

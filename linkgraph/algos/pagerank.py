@@ -12,7 +12,7 @@ is ``(src, rank, outdeg)``, keyed by the join column, and the edge side
 is the bare symmetrized edge list: no ``edges ⋈ outdeg`` table is built
 or cached, and no vertex distinct is run. Setup is one out-degree
 checkpoint with n riding it as an Observation
-(``linkgraph.pregel._degree_setup``), and the state starts from that
+(``linkgraph.graph._degree_table``), and the state starts from that
 table. ``pagerank_weighted`` carries Σ weight the same way and
 ``pagerank_personalized`` the degree. Directed PageRank keeps a cached
 ``edges ⋈ outdeg`` table, since there in-degree ≠ out-degree.
@@ -26,9 +26,12 @@ Execution shape per superstep (the scale-critical part):
   sum per task before the shuffle; explicit salting
   (``linkgraph.partition.salt``) is available when the *join* itself
   skews.
-- lineage truncated every ``checkpoint_every`` supersteps via a rolling
-  localCheckpoint (or durable checkpoints via ``linkgraph.pregel``) —
-  without it the Catalyst plan doubles per iteration.
+- the loop is ``linkgraph.iterate.iterate``: lineage truncated every
+  ``checkpoint_every`` supersteps by a rolling localCheckpoint, or a
+  durable snapshot per superstep (``pregel.pagerank_checkpointed``) —
+  without it the Catalyst plan doubles per iteration. With ``tol``,
+  max |Δrank| against the previous state is computed in each round's
+  plan and rides its checkpoint as an Observation.
 
 Storage: an uncached input is cached for the call (so an expensive
 derivation upstream runs once, not once per superstep), and every
@@ -42,51 +45,54 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _supersteps(
-    state: DataFrame,
-    step,
-    iterations: int,
-    checkpoint_every: int,
-    tol: float | None = None,
-) -> DataFrame:
-    """The join kernels' loop: ``state = step(state)`` per round, keyed
-    by ``src``. Lineage is cut by a rolling localCheckpoint every
-    ``checkpoint_every`` rounds and after the last; with ``tol`` every
-    round is rolled and the loop stops once max |Δrank| < tol (one
-    extra join per round). Every rolled generation but the returned
-    state is released before returning, and the returned state is a
-    rolled generation, so it outlives the tables it was derived from."""
-    from linkgraph.rolling import RollingCheckpoint
+def _step(sym: DataFrame, teleport: float, damping: float, weighted: bool = False):
+    """The undirected superstep with the degree in the state: one
+    ``sym ⋈ state`` join and one aggregate that also counts the next
+    out-degree (``weighted``: sums the next Σ weight, and rank flows in
+    proportion to weight)."""
+    share = F.col("rank") / F.col("outdeg")
+    if weighted:
+        share = F.col("rank") * F.col("weight") / F.col("outdeg")
 
-    roll = RollingCheckpoint()
+    def step(state: DataFrame, *_) -> DataFrame:
+        return sym.join(state, "src").groupBy(F.col("dst").alias("src")).agg(
+            (F.lit(teleport) + F.lit(damping) * F.sum(share)).alias("rank"),
+            (F.sum("weight") if weighted else F.count("*")).alias("outdeg"),
+        )
+
+    return step
+
+
+def _ranks(
+    start: DataFrame, step, iterations: int, checkpoint_every: int,
+    tol: float | None = None, **durable,
+) -> DataFrame:
+    """``iterate`` a state keyed by ``src``; ``durable`` is its sink
+    arguments. With ``tol`` every round checkpoints and the loop stops
+    once max |Δrank| < tol: the round's plan joins the previous state,
+    so the Δ rides the round's checkpoint."""
+    from linkgraph.iterate import iterate
+
+    def until(seen: dict) -> bool:
+        return seen["delta"] is not None and seen["delta"] < tol
+
+    watch = None
     if tol is not None:
-        # the Δ join reads the previous state next to the new one: an
-        # unrolled state would re-execute per reference
+        # the Δ join reads the previous state: an unrolled state would
+        # re-execute per reference
         checkpoint_every = 1
-    out = None
-    try:
-        if iterations == 0:
-            state = roll(state)  # outlive the tables it is derived from
-        for i in range(iterations):
-            new = step(state)
-            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-                new = roll(new)
-            if tol is not None:
-                delta = (
-                    new.alias("a")
-                    .join(state.alias("b"), "src")
-                    .agg(F.max(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                    .first()[0]
-                )
-                state = new
-                if delta is not None and delta < tol:
-                    break
-            else:
-                state = new
-        out = state
-    finally:
-        roll.release(keep=out)
-    return out.select(F.col("src").alias("vid"), "rank")
+        ranks = step
+
+        def step(state: DataFrame, *_) -> DataFrame:
+            return ranks(state).join(
+                state.select("src", F.col("rank").alias("_r0")), "src"
+            )
+
+        watch = [F.max(F.abs(F.col("rank") - F.col("_r0"))).alias("delta")]
+
+    return iterate(
+        start, step, iterations, checkpoint_every, watch, until, **durable
+    ).select(F.col("src").alias("vid"), "rank")
 
 
 def pagerank(
@@ -109,8 +115,8 @@ def pagerank(
     checkpoint. ``directed=True`` joins a cached ``edges ⋈ outdeg``
     table, counts n with a vertex distinct, and pays one job per
     superstep for the dangling mass when dangling vertices exist. With
-    ``tol`` set, stops early when max |Δrank| < tol (one extra join per
-    superstep).
+    ``tol`` set, stops early when max |Δrank| < tol (one extra join in
+    each superstep's plan, no extra job).
 
     ``init_ranks`` (DataFrame[vid, rank]) warm-starts the iteration —
     the incremental-edges story's second half: after new edges stream
@@ -138,8 +144,7 @@ def pagerank(
     """
     from pyspark.sql import Observation
 
-    from linkgraph.graph import vertices
-    from linkgraph.pregel import _degree_setup
+    from linkgraph.graph import _degree_table, symmetrize, vertices
     from linkgraph.rolling import _scanned, release
 
     source, cached = _scanned(edges, "src", "dst")
@@ -148,7 +153,8 @@ def pagerank(
         if directed:
             g = source
         else:
-            g, out_deg, stats = _degree_setup(source)
+            g = symmetrize(source)
+            out_deg, stats = _degree_table(g)
             n = stats["n"]
         if bucket_table is not None:
             from linkgraph.csr import drop_table_and_location
@@ -180,14 +186,9 @@ def pagerank(
             obs = Observation()
             seeded = (
                 state.join(
-                    init_ranks.select(
-                        F.col("vid").alias("src"), F.col("rank").alias("_r0")
-                    ),
-                    "src",
-                    "left",
+                    init_ranks.select(F.col("vid").alias("src"), "rank"), "src", "left"
                 )
-                .withColumn("rank", F.coalesce(F.col("_r0"), F.lit(1.0 / n)))
-                .drop("_r0")
+                .withColumn("rank", F.coalesce("rank", F.lit(1.0 / n)))
                 .observe(obs, F.sum("rank").alias("total"))
                 .localCheckpoint()
             )
@@ -202,7 +203,7 @@ def pagerank(
             # (messages + missing-vertex union), so roll every round
             checkpoint_every = 1
 
-            def step(ranks: DataFrame) -> DataFrame:
+            def step(ranks: DataFrame, *_) -> DataFrame:
                 dangling_term = 0.0
                 if has_dangling:
                     dangling_sum = (
@@ -224,17 +225,8 @@ def pagerank(
                 return new.unionByName(missing)
 
         else:
-
-            def step(state: DataFrame) -> DataFrame:
-                return g.join(state, "src").groupBy(F.col("dst").alias("src")).agg(
-                    (
-                        F.lit(teleport)
-                        + F.lit(damping) * F.sum(F.col("rank") / F.col("outdeg"))
-                    ).alias("rank"),
-                    F.count("*").alias("outdeg"),
-                )
-
-        return _supersteps(state, step, iterations, checkpoint_every, tol)
+            step = _step(g, teleport, damping)
+        return _ranks(state, step, iterations, checkpoint_every, tol)
     finally:
         release(out_deg, links, verts, seeded, cached)
 
@@ -256,7 +248,7 @@ def pagerank_weighted(
     Σ weight the way ``pagerank`` carries the degree: one join plus
     one aggregate per superstep. Returns ``DataFrame[vid, rank]``.
     """
-    from linkgraph.pregel import _degree_table
+    from linkgraph.graph import _degree_table
     from linkgraph.rolling import _scanned, release
 
     # the upstream wedges derivation (an events self-join) is
@@ -271,21 +263,10 @@ def pagerank_weighted(
         )
         out_w, stats = _degree_table(sym, F.sum("weight"))
         n = stats["n"]
-        teleport = (1.0 - damping) / n
-
-        def step(state: DataFrame) -> DataFrame:
-            return sym.join(state, "src").groupBy(F.col("dst").alias("src")).agg(
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * F.sum(F.col("rank") * F.col("weight") / F.col("outdeg"))
-                ).alias("rank"),
-                F.sum("weight").alias("outdeg"),
-            )
-
-        return _supersteps(
-            out_w.withColumn("rank", F.lit(1.0 / n)), step, iterations,
-            checkpoint_every,
+        return _ranks(
+            out_w.withColumn("rank", F.lit(1.0 / n)),
+            _step(sym, (1.0 - damping) / n, damping, weighted=True),
+            iterations, checkpoint_every,
         )
     finally:
         release(out_w, cached)
@@ -306,33 +287,79 @@ def pagerank_personalized(
     full vertex set is emitted, like the uniform PR. Same superstep
     shape as ``pagerank``: one join plus one aggregate that also counts
     the next out-degree. Returns ``DataFrame[vid, rank]``."""
-    from linkgraph.pregel import _degree_setup
-    from linkgraph.rolling import _scanned, release
+    from linkgraph.graph import _degree_scope
 
-    source, cached = _scanned(edges, "src", "dst")
-    out_deg = None
-    try:
-        sym, out_deg, _ = _degree_setup(source)
-        seed_set = {int(s) for s in seeds}
-        e_s = F.when(
-            F.col("src").isin(sorted(seed_set)), F.lit(1.0 / len(seed_set))
-        ).otherwise(F.lit(0.0))
+    seed_set = {int(s) for s in seeds}
+    e_s = F.when(
+        F.col("src").isin(sorted(seed_set)), F.lit(1.0 / len(seed_set))
+    ).otherwise(F.lit(0.0))
+    with _degree_scope(edges) as (sym, out_deg, _):
+        flow = _step(sym, 0.0, damping)
 
-        def step(state: DataFrame) -> DataFrame:
-            flow = sym.join(state, "src").groupBy(F.col("dst").alias("src")).agg(
-                (F.lit(damping) * F.sum(F.col("rank") / F.col("outdeg"))).alias(
-                    "flow"
-                ),
-                F.count("*").alias("outdeg"),
-            )
-            return flow.select(
-                "src",
-                ((F.lit(1.0 - damping) * e_s) + F.col("flow")).alias("rank"),
-                "outdeg",
+        def step(state: DataFrame, *_) -> DataFrame:
+            return flow(state).withColumn(
+                "rank", (F.lit(1.0 - damping) * e_s) + F.col("rank")
             )
 
-        return _supersteps(
+        return _ranks(
             out_deg.withColumn("rank", e_s), step, iterations, checkpoint_every
         )
-    finally:
-        release(out_deg, cached)
+
+
+def _checkpointed(
+    edges: DataFrame, ckpt, iterations: int, damping: float, resume: bool,
+    auto_salt_skew: float | None, n_salts: int,
+) -> DataFrame:
+    """``linkgraph.pregel.pagerank_checkpointed``: the undirected kernel
+    with ``ckpt`` as its sink. Only a salted run builds an edge side
+    of its own: the symmetrized edges with each hub destination's
+    src-derived ``_salt``, checkpointed, aggregated per (vid, salt) and
+    then per vid."""
+    from linkgraph.graph import _degree_scope
+    from linkgraph.rolling import release
+
+    links = None
+    with _degree_scope(edges) as (sym, out_deg, stats):
+        n, m2 = stats["n"], stats["m2"]
+        teleport = (1.0 - damping) / n
+        msg_skew = 0.0 if auto_salt_skew is None else stats["mx"] / (m2 / n)
+        salted = auto_salt_skew is not None and msg_skew > auto_salt_skew
+        if not salted:
+            step = _step(sym, teleport, damping)
+        else:
+            hubs = out_deg.where(
+                F.col("outdeg") > m2 / n * auto_salt_skew
+            ).select(F.col("src").alias("dst"), F.lit(True).alias("_hot"))
+            links = (
+                sym.join(F.broadcast(hubs), "dst", "left")
+                .select(
+                    "src", "dst",
+                    F.when(
+                        F.col("_hot").isNotNull(),
+                        F.pmod(F.xxhash64("src"), F.lit(n_salts)),
+                    ).otherwise(F.lit(0)).cast("int").alias("_salt"),
+                )
+                .localCheckpoint()
+            )
+
+            def step(state: DataFrame, *_) -> DataFrame:
+                partial = links.join(state, "src").groupBy(
+                    F.col("dst").alias("src"), "_salt"
+                ).agg(
+                    F.sum(F.col("rank") / F.col("outdeg")).alias("_pc"),
+                    F.count("*").alias("_k"),
+                )
+                return partial.groupBy("src").agg(
+                    (F.lit(teleport) + F.lit(damping) * F.sum("_pc")).alias("rank"),
+                    F.sum("_k").alias("outdeg"),
+                )
+
+        try:
+            return _ranks(
+                out_deg.withColumn("rank", F.lit(1.0 / n)), step, iterations, 1,
+                sink=ckpt, resume=resume,
+                counters={"edges_scanned": m2, "messages_sent": m2,
+                          "msg_skew": round(msg_skew, 4), "salted": salted},
+            )
+        finally:
+            release(links)

@@ -1,4 +1,4 @@
-"""Per-partition CSR blobs and the one gather-scatter superstep loop.
+"""Per-partition CSR blobs and the one gather-scatter superstep.
 
 The Spark mapping of the reference's ``graph_t`` prefix-sum CSR
 (``utils/graph.hpp``, built in ``utils/graph.cpp``): each *graph
@@ -8,7 +8,9 @@ indices)`` of raw little-endian int64 arrays. ``prepare_csr_blocks``
 writes the blobs to a table bucketed on partition (the superstep's blob
 scan then has zero exchange); ``pagerank_csr`` caches them instead.
 
-PageRank, CC and LPA run the same superstep (``_supersteps``):
+PageRank, CC and LPA run the same superstep (``_run``, a step that
+``linkgraph.iterate.iterate`` loops over, rolled or with a durable
+snapshot per round):
 
   1. state ⋈ routes sends each vertex's value to every partition that
      holds one of its out-edges (one shuffle sized |V|·RF, which is why
@@ -34,8 +36,6 @@ task, about 100 ms per task on a 4-vCPU VM, which the
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 import pandas as pd
@@ -225,108 +225,53 @@ def _label_counts(dst: np.ndarray, val: np.ndarray) -> pd.DataFrame:
     )
 
 
-def _supersteps(
+def _run(
     blocks: DataFrame,
     routes: DataFrame,
-    state: DataFrame,
+    start: DataFrame,
     value,
     combine,
     schema: str,
     finalize,
-    iterations: int,
-    checkpoint_every: int,
-    superstep_times: list | None = None,
-    ckpt=None,
-    resume: bool = True,
-    counters: dict | None = None,
-    converge: str | None = None,
+    rounds: int,
+    **loop,
 ) -> DataFrame:
-    """The one CSR superstep loop. Each round joins ``routes`` with
-    ``state``, routes ``value`` (a column of the joined row) to the
-    blocks, runs ``_gather`` + ``combine`` per block (partials of
-    ``schema``) and builds the next state with ``finalize(partials,
-    state)``. ``routes`` and every rolled generation but the returned
-    state are released before returning.
-
-    Lineage is cut by a rolling ``localCheckpoint`` every
-    ``checkpoint_every`` rounds and after the last, or with ``ckpt`` (a
-    ``linkgraph.pregel.CheckpointManager``) by a durable snapshot per
-    round carrying ``counters``; a rerun with the same run_id then
-    resumes from the highest complete superstep. ``converge`` names a
-    state column whose exact decimal sum rides every
-    ``checkpoint_every``-th round's checkpoint or snapshot as an
-    ``Observation``: the loop stops when the sum repeats (monotone
-    hash-min labels are then at their fixpoint). ``superstep_times``
-    receives per-round wall seconds (meaningful with
-    ``checkpoint_every=1``)."""
-    from pyspark.sql import Observation
-
-    from linkgraph.pregel import _warn_if_beyond
-    from linkgraph.rolling import RollingCheckpoint, release
-
-    roll = RollingCheckpoint()
+    """``iterate`` the CSR superstep from ``start``: each round joins
+    ``routes`` with the state, routes ``value`` (a column of the joined
+    row) to the blocks, runs ``_gather`` + ``combine`` per block
+    (partials of ``schema``) and builds the next state with
+    ``finalize(partials, state)``. ``loop`` is ``iterate``'s cadence,
+    stop test and sink arguments. ``routes`` is released on return."""
+    from linkgraph.iterate import iterate
+    from linkgraph.rolling import release
 
     def step(key, blk_pdf: pd.DataFrame, val_pdf: pd.DataFrame) -> pd.DataFrame:
         # both sides are never empty: routes come from the blobs, and the
         # state keeps every vertex (each one is some edge's destination)
         return combine(*_gather(blk_pdf, val_pdf))
 
-    out = None
+    def superstep(state: DataFrame, *_) -> DataFrame:
+        routed = routes.join(state, "vid").select(
+            F.explode("parts").alias("part"), "vid", value.alias("value")
+        )
+        partials = (
+            blocks.groupby("partition")
+            .cogroup(routed.groupby("part"))
+            .applyInPandas(step, schema=schema)
+        )
+        return finalize(partials, state)
+
     try:
-        start = ckpt.latest() if ckpt is not None and resume else None
-        if start is not None:
-            _warn_if_beyond(ckpt, start, iterations)
-            state = ckpt.read(start)
-        elif ckpt is not None:
-            state = ckpt.write(
-                0, state,
-                {"edges_scanned": 0, "messages_sent": 0,
-                 "max_partition_skew": 0.0, "wall_ms": 0.0},
-            )
-        elif iterations == 0:
-            state = roll(state)  # outlive the routes it is derived from
-        prev_sum = None
-        for i in range(start or 0, iterations):
-            t0 = time.perf_counter()
-            routed = routes.join(state, "vid").select(
-                F.explode("parts").alias("part"), "vid", value.alias("value")
-            )
-            partials = (
-                blocks.groupby("partition")
-                .cogroup(routed.groupby("part"))
-                .applyInPandas(step, schema=schema)
-            )
-            state = finalize(partials, state)
-            at_checkpoint = (i + 1) % checkpoint_every == 0 or i == iterations - 1
-            obs = None
-            if converge is not None and at_checkpoint:
-                obs = Observation()
-                state = state.observe(
-                    obs, F.sum(F.col(converge).cast("decimal(38,0)")).alias("s")
-                )
-            if ckpt is not None:
-                # max_partition_skew is folded into the snapshot write
-                state = ckpt.write(i + 1, state, counters or {}, t0=t0)
-            elif at_checkpoint:
-                state = roll(state)
-            if superstep_times is not None:
-                superstep_times.append(time.perf_counter() - t0)
-            if obs is not None:
-                if obs.get["s"] == prev_sum:
-                    break
-                prev_sum = obs.get["s"]
-        out = state
+        return iterate(start, superstep, rounds, **loop)
     finally:
-        roll.release(keep=out)
         release(routes)
-    return out
 
 
 def _pagerank(
     blocks: DataFrame, k: int, source: str, iterations: int, damping: float,
     **loop,
 ) -> DataFrame:
-    """PageRank over a blobs DataFrame; ``loop`` goes to ``_supersteps``."""
+    """PageRank over a blobs DataFrame; ``loop`` goes to ``iterate``."""
     routes, stats = _routes(blocks, k, source)
     n, m2 = stats["n"], stats["m2"]
     teleport = (1.0 - damping) / n
@@ -336,14 +281,14 @@ def _pagerank(
             (F.lit(teleport) + F.lit(damping) * F.sum("partial")).alias("rank")
         )
 
-    return _supersteps(
+    return _run(
         blocks, routes, routes.select("vid", F.lit(1.0 / n).alias("rank")),
         # one routed double per vertex: the gather then moves a single value
         value=F.col("rank") / F.col("outdeg"),
         combine=_fold(np.add, 0.0),
         schema="vid long, partial double",
         finalize=finalize,
-        iterations=iterations,
+        rounds=iterations,
         counters={"edges_scanned": m2, "messages_sent": m2},
         **loop,
     ).select("vid", "rank")
@@ -370,8 +315,8 @@ def pagerank_csr_blocks(
     highest complete superstep."""
     return _pagerank(
         edges.sparkSession.table(blocks_table), k, blocks_table, iterations,
-        damping, checkpoint_every=checkpoint_every,
-        superstep_times=superstep_times, ckpt=ckpt, resume=resume,
+        damping, every=checkpoint_every, times=superstep_times, sink=ckpt,
+        resume=resume,
     )
 
 
@@ -395,7 +340,7 @@ def pagerank_csr(
     try:
         return _pagerank(
             blobs, k, f"{strategy} blobs", iterations, damping,
-            checkpoint_every=checkpoint_every, superstep_times=superstep_times,
+            every=checkpoint_every, times=superstep_times,
         )
     finally:
         release(blobs)
@@ -411,29 +356,30 @@ def cc_csr_blocks(
 ) -> DataFrame:
     """Hash-min connected components over the CSR blobs in
     ``blocks_table``; without ``fixed_iterations`` the loop stops at the
-    fixpoint. Integer min is exact, so results equal the join-based
-    ``connected_components`` bit-for-bit at the same round count
+    first round that changes no label, the stop rule of the join-based
+    ``connected_components``: the finalize carries each vertex's previous
+    label as ``own``. Integer min is exact, so results equal the
+    join-based kernel bit-for-bit at the same round count
     (tests/test_csr.py)."""
+    from linkgraph.algos.cc import _min_label, _watch
+
     blocks = edges.sparkSession.table(blocks_table)
     routes, _ = _routes(blocks, k, blocks_table)
 
     def finalize(partials: DataFrame, labels: DataFrame) -> DataFrame:
-        return (
-            labels.select("vid", F.col("component").alias("partial"))
-            .unionByName(partials)
-            .groupBy("vid")
-            .agg(F.min("partial").alias("component"))
-        )
+        return _min_label(partials.withColumnRenamed("partial", "component"), labels)
 
-    return _supersteps(
+    converge = fixed_iterations is None
+    return _run(
         blocks, routes, routes.select("vid", F.col("vid").alias("component")),
         value=F.col("component"),
         combine=_fold(np.minimum, np.iinfo(np.int64).max),
         schema="vid long, partial long",
         finalize=finalize,
-        iterations=max_iterations if fixed_iterations is None else fixed_iterations,
-        checkpoint_every=checkpoint_every,
-        converge="component" if fixed_iterations is None else None,
+        rounds=max_iterations if converge else fixed_iterations,
+        every=checkpoint_every,
+        watch=_watch() if converge else None,
+        until=lambda seen: seen["changed"] == 0,
     ).select("vid", "component")
 
 
@@ -449,26 +395,20 @@ def lpa_csr_blocks(
     deterministic tie-break) runs over the summed partial counts only.
     Integer counts are exact ⇒ results equal ``label_propagation``
     bit-for-bit at the same round count (tests/test_csr.py)."""
-    from pyspark.sql import Window
+    from linkgraph.algos.lpa import _adopt
 
     blocks = edges.sparkSession.table(blocks_table)
     routes, _ = _routes(blocks, k, blocks_table)
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
 
     def finalize(partials: DataFrame, labels: DataFrame) -> DataFrame:
-        counts = partials.groupBy("vid", "label").agg(F.sum("cnt").alias("cnt"))
-        return (
-            counts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", "label")
-        )
+        return _adopt(partials.groupBy("vid", "label").agg(F.sum("cnt").alias("cnt")))
 
-    return _supersteps(
+    return _run(
         blocks, routes, routes.select("vid", F.col("vid").alias("label")),
         value=F.col("label"),
         combine=_label_counts,
         schema="vid long, label long, cnt long",
         finalize=finalize,
-        iterations=iterations,
-        checkpoint_every=checkpoint_every,
+        rounds=iterations,
+        every=checkpoint_every,
     ).select("vid", "label")

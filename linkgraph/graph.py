@@ -17,6 +17,8 @@ two join keys are ever read).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -286,3 +288,50 @@ def dense_vertex_ids(edges: DataFrame, n_parts: int = 32) -> DataFrame:
             )
 
     return v.mapInPandas(enumerate_parts, schema="vid long, idx long")
+
+
+@contextmanager
+def _degree_scope(edges: DataFrame):
+    """For the length of a kernel call: ``edges``' symmetrized ``(src,
+    dst)`` projection (lazy) and its ``_degree_table``. The projection
+    is cached unless the caller has cached it
+    (``linkgraph.rolling._scanned``); both are released on exit. The
+    edge list is symmetrized, so the table's keys are exactly the vertex
+    set (n = its row count), the sum of out-degrees is the number of
+    directed darts a superstep scans, and a vertex's in-degree equals
+    its out-degree."""
+    from linkgraph.rolling import _scanned, release
+
+    source, cached = _scanned(edges, "src", "dst")
+    out_deg = None
+    try:
+        sym = symmetrize(source)
+        out_deg, stats = _degree_table(sym)
+        yield sym, out_deg, stats
+    finally:
+        release(out_deg, cached)
+
+
+def _degree_table(sym: DataFrame, degree=None) -> tuple[DataFrame, dict]:
+    """The out-degree table ``(src, outdeg)`` of ``sym`` cut with
+    ``localCheckpoint`` (the caller releases it), and that table's
+    statistics ``n``, ``m2`` and ``mx`` (the maximum degree), which ride
+    the checkpoint as an Observation: zero jobs beyond the checkpoint
+    itself. ``degree`` is the per-vertex aggregate (default: the edge
+    count; ``F.sum("weight")`` gives the weighted degree)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    out_deg = (
+        sym.groupBy("src").agg(
+            (F.count("*") if degree is None else degree).alias("outdeg")
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("outdeg").alias("m2"),
+            F.max("outdeg").alias("mx"),
+        )
+        .localCheckpoint()
+    )
+    return out_deg, obs.get

@@ -725,146 +725,149 @@ def _hdrf_chunked(
     # (init_vstate) or known-large → permanent co-partitioned-join path.
     state_rows_ub: int | None = 0 if init_vstate is None else None
     results = []
-    for c in range(num_chunks):
-        if not chunk_sizes[c]:
-            continue
-        # Per-task budget: the GLOBAL cap's remaining headroom split
-        # across the T parallel groups — guarantees final loads ≤
-        # cap + T while leaving early chunks free to follow the score
-        # (mid-stream balance is the bal term's job, exactly as in the
-        # reference's sequential pass; a cumulative quota here would
-        # force tiny warm-up chunks to spray edges across partitions,
-        # measurably wrecking RF).
-        budget = np.maximum(1, np.ceil((cap - loads) / n_tasks)).astype(
-            np.int64
-        )
-        task_key = (
-            F.xxhash64("src", F.lit(7919))
-            if route == "src"
-            else F.xxhash64("src", "dst", F.lit(7919))
-        )
-        # project _chunk away: applyInPandas ships every column to the
-        # Python worker (guide §4.1 — pass only what the function needs).
-        # The group id is relabeled through _spread_group_labels so the
-        # T groups land in T distinct shuffle partitions — the raw
-        # 0..T-1 ids hash-collide and serialize Python groups (§2.5).
-        chunk = (
-            chunked.where(F.col("_chunk") == c)
-            .withColumn(
-                "_task",
-                F.element_at(
-                    F.array(*[F.lit(v) for v in spread_ids]),
-                    (F.pmod(task_key, F.lit(n_tasks)) + 1).cast("int"),
-                ),
+    try:
+        for c in range(num_chunks):
+            if not chunk_sizes[c]:
+                continue
+            # Per-task budget: the GLOBAL cap's remaining headroom split
+            # across the T parallel groups — guarantees final loads ≤
+            # cap + T while leaving early chunks free to follow the score
+            # (mid-stream balance is the bal term's job, exactly as in the
+            # reference's sequential pass; a cumulative quota here would
+            # force tiny warm-up chunks to spray edges across partitions,
+            # measurably wrecking RF).
+            budget = np.maximum(1, np.ceil((cap - loads) / n_tasks)).astype(
+                np.int64
             )
-            .select("src", "dst", "_task")
-        )
-        if vstate is None:
-            joined = (
-                chunk.withColumn("src_pdeg", F.lit(None).cast("long"))
-                .withColumn("src_mir", F.lit(None).cast("array<long>"))
-                .withColumn("dst_pdeg", F.lit(None).cast("long"))
-                .withColumn("dst_mir", F.lit(None).cast("array<long>"))
+            task_key = (
+                F.xxhash64("src", F.lit(7919))
+                if route == "src"
+                else F.xxhash64("src", "dst", F.lit(7919))
             )
-        else:
-            s_state = vstate.select(
-                F.col("vid").alias("src"),
-                F.col("pdeg").alias("src_pdeg"),
-                F.col("mirrors").alias("src_mir"),
+            # project _chunk away: applyInPandas ships every column to the
+            # Python worker (guide §4.1 — pass only what the function needs).
+            # The group id is relabeled through _spread_group_labels so the
+            # T groups land in T distinct shuffle partitions — the raw
+            # 0..T-1 ids hash-collide and serialize Python groups (§2.5).
+            chunk = (
+                chunked.where(F.col("_chunk") == c)
+                .withColumn(
+                    "_task",
+                    F.element_at(
+                        F.array(*[F.lit(v) for v in spread_ids]),
+                        (F.pmod(task_key, F.lit(n_tasks)) + 1).cast("int"),
+                    ),
+                )
+                .select("src", "dst", "_task")
             )
-            d_state = vstate.select(
-                F.col("vid").alias("dst"),
-                F.col("pdeg").alias("dst_pdeg"),
-                F.col("mirrors").alias("dst_mir"),
-            )
-            if state_rows_ub is not None and state_rows_ub <= bcast_rows_cap:
-                s_state = F.broadcast(s_state)
-                d_state = F.broadcast(d_state)
-            joined = chunk.join(s_state, "src", "left").join(d_state, "dst", "left")
+            if vstate is None:
+                joined = (
+                    chunk.withColumn("src_pdeg", F.lit(None).cast("long"))
+                    .withColumn("src_mir", F.lit(None).cast("array<long>"))
+                    .withColumn("dst_pdeg", F.lit(None).cast("long"))
+                    .withColumn("dst_mir", F.lit(None).cast("array<long>"))
+                )
+            else:
+                s_state = vstate.select(
+                    F.col("vid").alias("src"),
+                    F.col("pdeg").alias("src_pdeg"),
+                    F.col("mirrors").alias("src_mir"),
+                )
+                d_state = vstate.select(
+                    F.col("vid").alias("dst"),
+                    F.col("pdeg").alias("dst_pdeg"),
+                    F.col("mirrors").alias("dst_mir"),
+                )
+                if state_rows_ub is not None and state_rows_ub <= bcast_rows_cap:
+                    s_state = F.broadcast(s_state)
+                    d_state = F.broadcast(d_state)
+                joined = chunk.join(s_state, "src", "left").join(d_state, "dst", "left")
 
-        # Per-partition load counts ride the checkpoint action as an
-        # Observation (k sum-expressions) instead of a separate
-        # collect job per chunk (guide §1/§2: one less job × C chunks).
-        from pyspark.sql import Observation
+            # Per-partition load counts ride the checkpoint action as an
+            # Observation (k sum-expressions) instead of a separate
+            # collect job per chunk (guide §1/§2: one less job × C chunks).
+            from pyspark.sql import Observation
 
-        obs = Observation()
-        assigned = (
-            joined.withColumn("_ord", F.xxhash64("src", "dst", F.lit(985)))
-            # explicit repartition: AQE never coalesces a user-specified
-            # repartition, and groupBy reuses the exchange (same hash
-            # distribution) — so with the spread labels every group gets
-            # its own task and the Python runners execute fully parallel
-            .repartition(n_shuffle, "_task")
-            .groupBy("_task")
-            .applyInPandas(
-                _make_chunk_runner(k, lamb, cap, budget, loads.copy(), mode),
-                schema="src long, dst long, partition long",
+            obs = Observation()
+            assigned = (
+                joined.withColumn("_ord", F.xxhash64("src", "dst", F.lit(985)))
+                # explicit repartition: AQE never coalesces a user-specified
+                # repartition, and groupBy reuses the exchange (same hash
+                # distribution) — so with the spread labels every group gets
+                # its own task and the Python runners execute fully parallel
+                .repartition(n_shuffle, "_task")
+                .groupBy("_task")
+                .applyInPandas(
+                    _make_chunk_runner(k, lamb, cap, budget, loads.copy(), mode),
+                    schema="src long, dst long, partition long",
+                )
+                .observe(
+                    obs,
+                    *[
+                        F.sum((F.col("partition") == p).cast("long")).alias(f"l{p}")
+                        for p in range(k)
+                    ],
+                )
+                .localCheckpoint(eager=True)
             )
-            .observe(
-                obs,
-                *[
-                    F.sum((F.col("partition") == p).cast("long")).alias(f"l{p}")
-                    for p in range(k)
-                ],
-            )
-            .localCheckpoint(eager=True)
-        )
-        results.append(assigned)
+            results.append(assigned)
 
-        # state merge in ONE union + groupBy (identical result to the
-        # former delta-aggregate + full-outer join — pdeg sums add up,
-        # mirrors is the sorted distinct union — with one fewer shuffle
-        # stage and a simpler plan; guide §2.4)
-        touched = assigned.select(
-            F.col("src").alias("vid"),
-            F.lit(1).cast("long").alias("pdeg"),
-            F.array("partition").alias("mirrors"),
-        ).unionAll(
-            assigned.select(
-                F.col("dst").alias("vid"),
+            # state merge in ONE union + groupBy (identical result to the
+            # former delta-aggregate + full-outer join — pdeg sums add up,
+            # mirrors is the sorted distinct union — with one fewer shuffle
+            # stage and a simpler plan; guide §2.4)
+            touched = assigned.select(
+                F.col("src").alias("vid"),
                 F.lit(1).cast("long").alias("pdeg"),
                 F.array("partition").alias("mirrors"),
+            ).unionAll(
+                assigned.select(
+                    F.col("dst").alias("vid"),
+                    F.lit(1).cast("long").alias("pdeg"),
+                    F.array("partition").alias("mirrors"),
+                )
             )
-        )
-        merged = touched if vstate is None else vstate.unionByName(touched)
-        vstate = merged.groupBy("vid").agg(
-            F.sum("pdeg").alias("pdeg"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("mirrors")))
-            ).alias("mirrors"),
-        )
-        # The merge always rolls LAZILY when it can — it then
-        # materializes inside the NEXT chunk's join job (broadcast
-        # build or co-partitioned join) instead of as its own job
-        # (every shuffle job here costs ~1s of fixed overhead
-        # regardless of bytes — measured, OPTIMIZATION_r06.md — so
-        # per-chunk job count is the wall). Lazy is safe: chunk c+1
-        # always consumes vstate_c before the roller frees
-        # vstate_{c-1}'s parent generation. In broadcast mode the gate
-        # rides the row-count UPPER BOUND; only when the bound crosses
-        # the cap does one eager observed merge refresh it with the
-        # exact count — if that is genuinely over the cap, the loop
-        # permanently reverts to the co-partitioned-join path (which at
-        # 100 TB is what runs from chunk 0).
-        if state_rows_ub is None:
-            vstate = roll_state(vstate, eager=False)
-        else:
-            state_rows_ub += 2 * chunk_sizes[c]
-            if state_rows_ub <= bcast_rows_cap:
+            merged = touched if vstate is None else vstate.unionByName(touched)
+            vstate = merged.groupBy("vid").agg(
+                F.sum("pdeg").alias("pdeg"),
+                F.array_sort(
+                    F.array_distinct(F.flatten(F.collect_list("mirrors")))
+                ).alias("mirrors"),
+            )
+            # The merge always rolls LAZILY when it can — it then
+            # materializes inside the NEXT chunk's join job (broadcast
+            # build or co-partitioned join) instead of as its own job
+            # (every shuffle job here costs ~1s of fixed overhead
+            # regardless of bytes — measured, OPTIMIZATION_r06.md — so
+            # per-chunk job count is the wall). Lazy is safe: chunk c+1
+            # always consumes vstate_c before the roller frees
+            # vstate_{c-1}'s parent generation. In broadcast mode the gate
+            # rides the row-count UPPER BOUND; only when the bound crosses
+            # the cap does one eager observed merge refresh it with the
+            # exact count — if that is genuinely over the cap, the loop
+            # permanently reverts to the co-partitioned-join path (which at
+            # 100 TB is what runs from chunk 0).
+            if state_rows_ub is None:
                 vstate = roll_state(vstate, eager=False)
             else:
-                obs_s = Observation()
-                vstate = roll_state(
-                    vstate.observe(obs_s, F.count(F.lit(1)).alias("n"))
-                )
-                exact = obs_s.get["n"]
-                state_rows_ub = exact if exact <= bcast_rows_cap else None
+                state_rows_ub += 2 * chunk_sizes[c]
+                if state_rows_ub <= bcast_rows_cap:
+                    vstate = roll_state(vstate, eager=False)
+                else:
+                    obs_s = Observation()
+                    vstate = roll_state(
+                        vstate.observe(obs_s, F.count(F.lit(1)).alias("n"))
+                    )
+                    exact = obs_s.get["n"]
+                    state_rows_ub = exact if exact <= bcast_rows_cap else None
 
-        chunk_loads = obs.get  # populated by the eager checkpoint
-        for p in range(k):
-            loads[p] += chunk_loads[f"l{p}"]
-
-    release(owned)
+            chunk_loads = obs.get  # populated by the eager checkpoint
+            for p in range(k):
+                loads[p] += chunk_loads[f"l{p}"]
+    finally:
+        # the output reads only the chunk checkpoints in ``results``
+        roll_state.release()
+        release(owned)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

@@ -277,7 +277,10 @@ def test_pagerank_kernels_release_storage(spark, edges_df):
             e, iterations=4, bucket_table="t_pr_release", n_buckets=4
         ),
         "weighted": lambda: pagerank_weighted(w, iterations=3),
+        "weighted-0": lambda: pagerank_weighted(w, iterations=0),
         "personalized": lambda: pagerank_personalized(e, [1, 2], iterations=3),
+        "personalized-0": lambda: pagerank_personalized(e, [1, 2], iterations=0),
+        "tol-0": lambda: pagerank(e, iterations=0, tol=1e-8),
     }
     try:
         for name, run in runs.items():
@@ -378,9 +381,16 @@ def test_cc_lpa_release_storage(spark, edges_df):
         "fixed_iterations": lambda: connected_components(e, fixed_iterations=3),
         "init_labels": lambda: connected_components(e, init_labels=warm),
         "pointer_jumping": lambda: connected_components(e, pointer_jumping=True),
+        "default_0": lambda: connected_components(e, max_iterations=0),
+        "fixed_0": lambda: connected_components(e, fixed_iterations=0),
+        "init_labels_0": lambda: connected_components(
+            e, fixed_iterations=0, init_labels=warm
+        ),
+        "lpa_0": lambda: label_propagation(e, iterations=0),
         "lpa_1": lambda: label_propagation(e, iterations=1),
         "lpa_4": lambda: label_propagation(e, iterations=4),
         "lpa_weighted": lambda: label_propagation_weighted(w, iterations=2),
+        "lpa_weighted_0": lambda: label_propagation_weighted(w, iterations=0),
     }
     for name, run in runs.items():
         before = _persisted(spark)

@@ -86,53 +86,63 @@ def test_pagerank_csr_blocks_matches(spark, edges_df):
     spark.sql("DROP TABLE IF EXISTS t_csr_blobs")
 
 
-def test_cc_csr_blocks_equals_join_based(spark, edges_df):
-    """CC over CSR blobs must equal the join-based hash-min result
-    bit-for-bit at the same round count (integer min is exact), and
-    at convergence must equal the Python oracle components."""
+def _labels(df, col: str = "component") -> dict:
+    return {r["vid"]: r[col] for r in df.collect()}
+
+
+def test_cc_csr_blocks_equals_join_based(spark, edges_df, tmp_path):
+    """CC over CSR blobs and durable CC must equal the join-based
+    hash-min result bit-for-bit at the same round count (integer min is
+    exact), and at convergence must equal the Python oracle components;
+    durable CC marks converged the superstep at which join CC's
+    convergence mode stops (the first that changes no label)."""
     from linkgraph.algos.cc import connected_components
     from linkgraph.csr import cc_csr_blocks, prepare_csr_blocks
     from linkgraph.oracle.numpy_ref import components_py
+    from linkgraph.pregel import CheckpointManager, cc_checkpointed
     from linkgraph.synth import graph_edges
 
     edges = graph_edges("powerlaw_ba", n=200, m=2, seed=7)
     e = edges_df(edges)
     prepare_csr_blocks(e, k=4, strategy="grid", blocks_table="t_cc_blocks")
-    got = {
-        r["vid"]: r["component"]
-        for r in cc_csr_blocks(e, 4, "t_cc_blocks", fixed_iterations=6).collect()
-    }
-    want = {
-        r["vid"]: r["component"]
-        for r in connected_components(e, fixed_iterations=6).collect()
-    }
-    assert got == want
-    conv = {
-        r["vid"]: r["component"]
-        for r in cc_csr_blocks(e, 4, "t_cc_blocks", max_iterations=40).collect()
-    }
+    for rounds in (2, 6):
+        want = _labels(connected_components(e, fixed_iterations=rounds))
+        assert _labels(
+            cc_csr_blocks(e, 4, "t_cc_blocks", fixed_iterations=rounds)
+        ) == want, rounds
+        ckpt = CheckpointManager(spark, str(tmp_path), f"cc-{rounds}")
+        assert _labels(
+            cc_checkpointed(spark, e, ckpt, max_iterations=rounds)
+        ) == want, rounds
+    conv = _labels(cc_csr_blocks(e, 4, "t_cc_blocks", max_iterations=40))
     assert conv == components_py(edges)
+    ckpt = CheckpointManager(spark, str(tmp_path), "cc-conv")
+    assert _labels(cc_checkpointed(spark, e, ckpt)) == conv
+    s = ckpt.latest()
+    assert ckpt.record(s)["converged"]
+    # join CC's convergence mode stops at round s: round s - 1 is the
+    # first to reach the fixpoint
+    assert _labels(connected_components(e, fixed_iterations=s - 1)) == conv
+    assert _labels(connected_components(e, fixed_iterations=s - 2)) != conv
 
 
-def test_lpa_csr_blocks_equals_join_based(spark, edges_df):
-    """LPA over CSR blobs: partial counts + global sum + deterministic
-    argmax must equal the join-based result bit-for-bit."""
+def test_lpa_csr_blocks_equals_join_based(spark, edges_df, tmp_path):
+    """LPA over CSR blobs (partial counts + global sum + deterministic
+    argmax) and durable LPA must equal the join-based result
+    bit-for-bit."""
     from linkgraph.algos.lpa import label_propagation
     from linkgraph.csr import lpa_csr_blocks, prepare_csr_blocks
+    from linkgraph.pregel import CheckpointManager, lpa_checkpointed
     from linkgraph.synth import graph_edges
 
     edges = graph_edges("two_cliques_bridge")
     e = edges_df(edges)
     prepare_csr_blocks(e, k=4, strategy="grid", blocks_table="t_lpa_blocks")
-    got = {
-        r["vid"]: r["label"]
-        for r in lpa_csr_blocks(e, 4, "t_lpa_blocks", iterations=4).collect()
-    }
-    want = {
-        r["vid"]: r["label"]
-        for r in label_propagation(e, iterations=4).collect()
-    }
+    want = _labels(label_propagation(e, iterations=4), "label")
+    got = _labels(lpa_csr_blocks(e, 4, "t_lpa_blocks", iterations=4), "label")
     assert got == want
+    ckpt = CheckpointManager(spark, str(tmp_path), "lpa")
+    assert _labels(lpa_checkpointed(spark, e, ckpt, iterations=4), "label") == want
 
 
 def test_pagerank_csr_checkpointed_resumes(spark, edges_df, tmp_path):
@@ -227,14 +237,24 @@ def test_csr_kernels_release_storage(spark, edges_df, tmp_path):
     prepare_csr_blocks(e, k=4, strategy="grid", blocks_table="t_csr_release")
     runs = {
         "in-memory": lambda: pagerank_csr(e, k=4, iterations=3),
+        "in-memory-0": lambda: pagerank_csr(e, k=4, iterations=0),
         "blocks": lambda: pagerank_csr_blocks(e, 4, "t_csr_release", iterations=3),
         "blocks-0": lambda: pagerank_csr_blocks(e, 4, "t_csr_release", iterations=0),
         "ckpt": lambda: pagerank_csr_blocks(
             e, 4, "t_csr_release", iterations=2,
             ckpt=CheckpointManager(spark, str(tmp_path), "csr-release"),
         ),
+        "ckpt-0": lambda: pagerank_csr_blocks(
+            e, 4, "t_csr_release", iterations=0,
+            ckpt=CheckpointManager(spark, str(tmp_path), "csr-release-0"),
+        ),
         "cc": lambda: cc_csr_blocks(e, 4, "t_csr_release"),
+        "cc-0": lambda: cc_csr_blocks(e, 4, "t_csr_release", max_iterations=0),
+        "cc-fixed-0": lambda: cc_csr_blocks(
+            e, 4, "t_csr_release", fixed_iterations=0
+        ),
         "lpa": lambda: lpa_csr_blocks(e, 4, "t_csr_release", iterations=2),
+        "lpa-0": lambda: lpa_csr_blocks(e, 4, "t_csr_release", iterations=0),
     }
     for name, run in runs.items():
         before = _persisted(spark)

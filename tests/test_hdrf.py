@@ -83,10 +83,12 @@ def test_chunked_job_count_pinned(spark, edges_df, powerlaw, monkeypatch):
     and a whole call CHUNKED_CALL_JOBS (output forced). The input is a
     distinct, as extraction's is: a cache over a plan with an exchange
     is filled by a job of its own, so caching the input again would show
-    here."""
+    here. After the call only the returned chunk checkpoints stay
+    persisted: the rolled vertex state is released."""
     sc = spark.sparkContext
     e = edges_df(powerlaw).distinct().cache()
     e.count()
+    before = sc._jsc.getPersistentRDDs().size()
     stock = rolling.fill_observed
 
     def counted(df, *metrics):
@@ -101,9 +103,11 @@ def test_chunked_job_count_pinned(spark, edges_df, powerlaw, monkeypatch):
     try:
         p = hdrf_spark(e, 8, exact=False, num_chunks=CHUNKED_CALL_CHUNKS)
         p.write.format("noop").mode("overwrite").save()
+        held = sc._jsc.getPersistentRDDs().size()
     finally:
         sc.setJobGroup(None, None)
         e.unpersist()
+    assert held == before + CHUNKED_CALL_CHUNKS
     prepass = len(sc.statusTracker().getJobIdsForGroup("hdrf-prepass"))
     rest = len(sc.statusTracker().getJobIdsForGroup("hdrf-call"))
     assert prepass == CHUNKED_PREPASS_JOBS

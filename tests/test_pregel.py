@@ -19,19 +19,24 @@ from linkgraph.synth import graph_edges
 
 # Jobs pagerank_checkpointed launches on a cached input in the test
 # session (local[4], 8 shuffle partitions): setup (out-degree checkpoint,
-# edge-side checkpoint, superstep-0 snapshot) and each further superstep
-# (broadcast of the ranks, message shuffle, snapshot write)
-PR_SETUP_JOBS = 5
+# superstep-0 snapshot) and each further superstep (broadcast of the
+# ranks, message shuffle, snapshot write)
+PR_SETUP_JOBS = 3
 PR_SUPERSTEP_JOBS = 3
 # cc_checkpointed in the same session: setup (out-degree checkpoint,
-# superstep-0 snapshot with its label sum) and each superstep (message
-# shuffle, snapshot write with the label sum riding it)
-CC_SETUP_JOBS = 4
+# superstep-0 snapshot), the join-free identity superstep 1 (message
+# shuffle, snapshot write with the changed count riding it) and each
+# later superstep (broadcast of the labels, message shuffle, snapshot
+# write)
+CC_SETUP_JOBS = 3
+CC_FIRST_SUPERSTEP_JOBS = 2
 CC_SUPERSTEP_JOBS = 3
 # lpa_checkpointed in the same session: setup (out-degree checkpoint,
-# superstep-0 snapshot) and each superstep, the first included (the
-# input is read through rolling._scanned, so no superstep fills a cache)
+# superstep-0 snapshot), the join-free identity superstep 1 and each
+# later superstep (the input is read through rolling._scanned, so no
+# superstep fills a cache)
 LPA_SETUP_JOBS = 3
+LPA_FIRST_SUPERSTEP_JOBS = 3
 LPA_SUPERSTEP_JOBS = 4
 
 
@@ -227,6 +232,21 @@ def test_warns_when_checkpoint_beyond_requested(spark, edges_df, ckpt_dir):
         assert any("already holds superstep" in str(c.message) for c in caught)
 
 
+def test_resume_refuses_an_old_snapshot_layout(spark, edges_df, ckpt_dir):
+    """A snapshot written in the ``(vid, rank)`` layout of before the
+    degree moved into the state is refused on resume with an error that
+    names the run and the way out, before any superstep runs."""
+    edges = [(i, (i + 1) % 20) for i in range(20)]
+    ckpt = CheckpointManager(spark, ckpt_dir, "old-layout")
+    old = spark.createDataFrame(
+        [(v, 1 / 20) for v in range(20)], "vid long, rank double"
+    )
+    ckpt.write(2, old, {"edges_scanned": 40, "messages_sent": 40})
+    with pytest.raises(ValueError, match=r"old-layout superstep=2 .*resume=False"):
+        pagerank_checkpointed(spark, edges_df(edges), ckpt, iterations=4)
+    assert ckpt.latest() == 2
+
+
 def _cached(df):
     df = df.cache()
     df.count()
@@ -335,11 +355,14 @@ def test_durable_kernels_release_storage(spark, edges_df, ckpt_dir):
     e = edges_df(star)
     runs = {
         "pagerank": lambda ck: pagerank_checkpointed(spark, e, ck, iterations=2),
+        "pagerank-0": lambda ck: pagerank_checkpointed(spark, e, ck, iterations=0),
         "salted": lambda ck: pagerank_checkpointed(
             spark, e, ck, iterations=2, auto_salt_skew=5.0
         ),
         "cc": lambda ck: cc_checkpointed(spark, e, ck),
+        "cc-0": lambda ck: cc_checkpointed(spark, e, ck, max_iterations=0),
         "lpa": lambda ck: lpa_checkpointed(spark, e, ck, iterations=2),
+        "lpa-0": lambda ck: lpa_checkpointed(spark, e, ck, iterations=0),
     }
     for name, run in runs.items():
         ckpt = CheckpointManager(spark, ckpt_dir, f"release-{name}")
@@ -376,8 +399,9 @@ def test_pagerank_job_count_pinned(spark, edges_df, ckpt_dir):
 
 
 def test_cc_job_count_pinned(spark, edges_df, ckpt_dir):
-    """The fixpoint test rides the snapshot write: one CC superstep
-    costs CC_SUPERSTEP_JOBS jobs and setup at most CC_SETUP_JOBS."""
+    """The fixpoint test rides the snapshot write: superstep 1 costs
+    CC_FIRST_SUPERSTEP_JOBS jobs, a later one CC_SUPERSTEP_JOBS and setup
+    at most CC_SETUP_JOBS."""
     sc = spark.sparkContext
     e = _cached(edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)))
 
@@ -396,16 +420,16 @@ def test_cc_job_count_pinned(spark, edges_df, ckpt_dir):
     e.unpersist()
     assert three - two == CC_SUPERSTEP_JOBS
     assert two - one == CC_SUPERSTEP_JOBS
-    assert one - setup == CC_SUPERSTEP_JOBS
-    assert one - CC_SUPERSTEP_JOBS <= CC_SETUP_JOBS
+    assert one - setup == CC_FIRST_SUPERSTEP_JOBS
+    assert setup <= CC_SETUP_JOBS
 
 
 @pytest.mark.parametrize("cached", [True, False])
 def test_lpa_job_count_pinned(spark, edges_df, ckpt_dir, cached):
-    """Superstep 1 costs what supersteps 2 and 3 cost, LPA_SUPERSTEP_JOBS
-    jobs, over a cached input and over one the kernel caches itself
-    (whose setup fills that cache); over a cached input setup costs at
-    most LPA_SETUP_JOBS."""
+    """Superstep 1 costs LPA_FIRST_SUPERSTEP_JOBS jobs and supersteps 2
+    and 3 LPA_SUPERSTEP_JOBS, over a cached input and over one the
+    kernel caches itself (whose setup fills that cache); over a cached
+    input setup costs at most LPA_SETUP_JOBS."""
     sc = spark.sparkContext
     e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5))
     if cached:
@@ -425,7 +449,7 @@ def test_lpa_job_count_pinned(spark, edges_df, ckpt_dir, cached):
 
     setup, one, two, three = jobs(0), jobs(1), jobs(2), jobs(3)
     e.unpersist()
-    assert one - setup == LPA_SUPERSTEP_JOBS
+    assert one - setup == LPA_FIRST_SUPERSTEP_JOBS
     assert two - one == LPA_SUPERSTEP_JOBS
     assert three - two == LPA_SUPERSTEP_JOBS
     assert setup <= LPA_SETUP_JOBS or not cached

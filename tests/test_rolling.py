@@ -39,30 +39,60 @@ def test_rolling_checkpoint_values_survive(spark):
     assert df.agg(F.sum("v")).first()[0] == sum(range(10)) + 40
 
 
-def test_kernels_keep_a_callers_equal_plan_cache(spark):
-    """A kernel borrows a ``(src, dst)`` projection its caller cached
-    and frees nothing of it: releasing a cache drops every entry with
-    an equal plan, the caller's included. The edge table has a column
-    more, so its own plan is not the cached one."""
+def test_kernels_keep_a_callers_equal_plan_cache(spark, tmp_path):
+    """A kernel borrows a ``(src, dst)`` (or, weighted, ``(src, dst,
+    weight)``) projection its caller cached and frees nothing of it:
+    releasing a cache drops every entry with an equal plan, the
+    caller's included. The edge table has a column more, so its own
+    plan is not the cached one."""
     from linkgraph.algos.cc import connected_components
     from linkgraph.algos.lpa import label_propagation
-    from linkgraph.algos.pagerank import pagerank
+    from linkgraph.algos.pagerank import (
+        pagerank,
+        pagerank_personalized,
+        pagerank_weighted,
+    )
+    from linkgraph.pregel import (
+        CheckpointManager,
+        cc_checkpointed,
+        lpa_checkpointed,
+        pagerank_checkpointed,
+    )
     from linkgraph.synth import graph_edges
 
     e = spark.createDataFrame(
-        [(s, t, 1) for s, t in graph_edges("powerlaw_ba", n=60, m=2, seed=3)],
-        "src long, dst long, weight long",
+        [(s, t, 1, 0) for s, t in graph_edges("powerlaw_ba", n=60, m=2, seed=3)],
+        "src long, dst long, weight long, pad long",
     )
     mine = e.select("src", "dst").cache()
     mine.count()
+    mine_w = e.select("src", "dst", "weight").cache()
+    mine_w.count()
+
+    def ckpt(name):
+        return CheckpointManager(spark, str(tmp_path), name)
+
     runs = {
         "pagerank": lambda: pagerank(e, iterations=2),
+        "pagerank_weighted": lambda: pagerank_weighted(e, iterations=2),
+        "pagerank_personalized": lambda: pagerank_personalized(e, [1], iterations=2),
         "connected_components": lambda: connected_components(e),
         "label_propagation": lambda: label_propagation(e, iterations=1),
+        "pagerank_checkpointed": lambda: pagerank_checkpointed(
+            spark, e, ckpt("pr"), iterations=2
+        ),
+        "cc_checkpointed": lambda: cc_checkpointed(spark, e, ckpt("cc")),
+        "lpa_checkpointed": lambda: lpa_checkpointed(
+            spark, e, ckpt("lpa"), iterations=1
+        ),
     }
     try:
         for name, run in runs.items():
             assert run().count() == 60, name
             assert e.select("src", "dst").storageLevel != StorageLevel.NONE, name
+            assert (
+                e.select("src", "dst", "weight").storageLevel != StorageLevel.NONE
+            ), name
     finally:
         mine.unpersist()
+        mine_w.unpersist()
