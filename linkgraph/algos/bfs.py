@@ -1,5 +1,7 @@
 """Multi-source BFS distances (unweighted shortest paths) — the
-fourth classic Pregel kernel next to PageRank/CC/LPA.
+fourth classic Pregel kernel next to PageRank/CC/LPA — and ``_relax``,
+the one frontier relaxation step BFS, landmark BFS, weighted SSSP
+(``algos/sssp.py``) and topological levels (``algos/dag.py``) share.
 
 dist(v) starts at 0 on the source set; each round propagates
 min(dist(u) + 1) over neighbors and folds it with the current
@@ -7,22 +9,91 @@ distance — integer min, so results are exact and the unrolled SQL
 oracle matches bit-for-bit at a fixed round count. Unreached vertices
 simply don't appear (the frontier never visits them).
 
-Scale shape per round: one join + one partial-aggregated min — the CC
-superstep budget — but the join's left side is the FRONTIER (vertices
-whose distance improved last round), not the whole reached set, so
-per-round edge fan-out is |frontier|-bound: late rounds touching a
-handful of fringe vertices cost a handful of joins, not |reached|
-re-propagations. Exact: unit-weight min is monotone, so a vertex that
-didn't improve last round generates exactly the candidate distances
-it already generated before — dropping it changes nothing. Both the
-distance table and the frontier are rolled through localCheckpoint
-every round (each is referenced twice per round).
+The rounds run in ``linkgraph.iterate.iterate``. The state is one
+table ``(keys…, value, fresh)``; ``fresh`` marks the rows whose value
+improved last round, and they are the frontier. A round joins the
+cached, pre-partitioned darts to the frontier, aggregates one
+candidate per key (``min`` or ``max`` of value + weight) and
+full-outer-joins it to the state, keeping the better value and
+recomputing ``fresh``; the loop checkpoints that one table. Per-round
+edge fan-out is |frontier|-bound: late rounds touching a handful of
+fringe vertices cost a handful of joins, not |reached|
+re-propagations. Exact: the fold is monotone, so a vertex that didn't
+improve last round generates exactly the candidates it already
+generated before — dropping it changes nothing. The frontier size,
+``count_if(fresh)``, rides each round's checkpoint as the loop's
+watch; BFS's convergence mode stops when it reads 0.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _relax(
+    darts: DataFrame,
+    start: DataFrame,
+    keys: tuple[str, ...],
+    value: str,
+    rounds: int,
+    longest: bool = False,
+    weight: str | None = None,
+    converge: bool = False,
+    counts: list[int] | None = None,
+) -> DataFrame:
+    """``rounds`` frontier relaxations of ``start`` ``(keys…, value)``,
+    every row of it on the first frontier, over ``darts[src, dst(,
+    weight)]`` (module docstring). ``keys`` ends in ``vid``, the key
+    the darts join on; the ones before it (a landmark) ride along.
+    Each candidate is value + ``weight`` (+1 without one), folded
+    with min, or max when ``longest``. ``counts`` receives each
+    round's frontier size; ``converge`` stops at an empty frontier.
+    The darts are cached here for the call and released on return."""
+    from linkgraph.graph import join_ready
+    from linkgraph.iterate import iterate
+    from linkgraph.rolling import release
+
+    agg, fold = (F.max, F.greatest) if longest else (F.min, F.least)
+    step_w = F.col(weight) if weight else F.lit(1)
+    # per-round frontier joins reuse the cached edge-side partitioning
+    edge = join_ready(darts, "src").cache()
+
+    def step(state: DataFrame, s: int, _) -> DataFrame:
+        front = state.where("fresh")
+        cand = (
+            edge.join(front, edge["src"] == front["vid"])
+            .select(
+                *keys[:-1],
+                F.col("dst").alias("vid"),
+                (F.col(value) + step_w).alias("_cand"),
+            )
+            .groupBy(*keys)
+            .agg(agg("_cand").alias("_cand"))
+        )
+        old, new = F.col(value), F.col("_cand")
+        gain = new > old if longest else new < old
+        return state.join(cand, list(keys), "full_outer").select(
+            *keys,
+            fold(old, new).alias(value),
+            (new.isNotNull() & (old.isNull() | gain)).alias("fresh"),
+        )
+
+    def until(values: dict) -> bool:
+        if counts is not None:
+            counts.append(values["n"])
+        return converge and values["n"] == 0
+
+    watch = converge or counts is not None
+    try:
+        out = iterate(
+            start.withColumn("fresh", F.lit(True)), step, rounds,
+            watch=[F.count_if("fresh").alias("n")] if watch else None,
+            until=until,
+        )
+    finally:
+        release(edge)
+    return out.select(*keys, value)
 
 
 def landmark_distances(
@@ -40,38 +111,13 @@ def landmark_distances(
     closeness centrality estimates, Bourgain embeddings) at 100 TB,
     where per-landmark sequential sweeps would multiply the superstep
     count by |landmarks|."""
-    from linkgraph.graph import join_ready, symmetrize
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.graph import symmetrize
 
-    spark = edges.sparkSession
-    roll = RollingCheckpoint()
-    roll_f = RollingCheckpoint()
-    # per-round frontier joins reuse the cached edge-side partitioning
-    sym = join_ready(symmetrize(edges), "src").cache()
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in landmarks], "lm long, vid long, dist long"
+    start = edges.sparkSession.createDataFrame(
+        [(s, s, 0) for s in sorted({int(s) for s in landmarks})],
+        "lm long, vid long, dist long",
     )
-    frontier = dist
-    for _ in range(fixed_iterations):
-        nbr = sym.join(frontier, sym["src"] == frontier["vid"]).select(
-            "lm", F.col("dst").alias("vid"), (F.col("dist") + 1).alias("dist")
-        )
-        cand = nbr.groupBy("lm", "vid").agg(F.min("dist").alias("dist"))
-        frontier = roll_f(
-            cand.join(
-                dist.select("lm", "vid", F.col("dist").alias("_old")),
-                ["lm", "vid"],
-                "left",
-            )
-            .where(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .select("lm", "vid", "dist")
-        )
-        dist = roll(
-            frontier.unionByName(dist)
-            .groupBy("lm", "vid")
-            .agg(F.min("dist").alias("dist"))
-        )
-    return dist
+    return _relax(symmetrize(edges), start, ("lm", "vid"), "dist", fixed_iterations)
 
 
 def harmonic_centrality(
@@ -121,49 +167,18 @@ def bfs_distances(
     reachable from ``sources`` (sources themselves at dist 0).
     ``frontier_counts`` (optional) collects the per-round frontier
     sizes — the scale evidence that late rounds shrink."""
-    from linkgraph.graph import join_ready, symmetrize
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.graph import symmetrize
 
-    spark = edges.sparkSession
-    roll = RollingCheckpoint()
-    roll_f = RollingCheckpoint()
-    # per-round frontier joins reuse the cached edge-side partitioning
-    sym = join_ready(symmetrize(edges), "src").cache()
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in sources], "vid long, dist long"
-    )
-    frontier = dist  # round 1 propagates from the sources
-    rounds = fixed_iterations if fixed_iterations is not None else max_iterations
     if frontier_counts is not None:
         frontier_counts.append(len(sources))
-    for _ in range(rounds):
-        # propagate from the frontier only (delta); candidates a
-        # non-frontier vertex would re-generate already lost the min
-        # fold in an earlier round — dropping them is exact
-        nbr = sym.join(frontier, sym["src"] == frontier["vid"]).select(
-            F.col("dst").alias("vid"), (F.col("dist") + 1).alias("dist")
-        )
-        cand = nbr.groupBy("vid").agg(F.min("dist").alias("dist"))
-        frontier = roll_f(
-            cand.join(
-                dist.select("vid", F.col("dist").alias("_old")), "vid", "left"
-            )
-            .where(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .select("vid", "dist")
-        )
-        dist = roll(
-            frontier.unionByName(dist)
-            .groupBy("vid")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if frontier_counts is not None or fixed_iterations is None:
-            n_new = frontier.count()
-            if frontier_counts is not None:
-                frontier_counts.append(n_new)
-            # empty frontier ⇔ fixpoint (min is monotone)
-            if fixed_iterations is None and n_new == 0:
-                break
-    return dist
+    start = edges.sparkSession.createDataFrame(
+        [(s, 0) for s in sorted({int(s) for s in sources})], "vid long, dist long"
+    )
+    return _relax(
+        symmetrize(edges), start, ("vid",), "dist",
+        fixed_iterations if fixed_iterations is not None else max_iterations,
+        converge=fixed_iterations is None, counts=frontier_counts,
+    )
 
 
 def distance_histogram(

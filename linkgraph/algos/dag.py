@@ -16,6 +16,9 @@ every edge once (Bellman-Ford style), so round k discovers exactly the
 paths of length k: propagating only the vertices whose level IMPROVED
 last round (frontier delta) is complete, and the fixed round count
 makes the result bit-equal to the unrolled cumulative-max SQL oracle.
+The rounds are ``algos/bfs._relax`` steps on
+``linkgraph.iterate.iterate`` — BFS's relaxation over the directed
+darts with a max fold, from every vertex at level 0.
 """
 
 from __future__ import annotations
@@ -30,39 +33,13 @@ def topo_levels(edges: DataFrame, max_depth: int = 6) -> DataFrame:
 
     Scale shape: per round one co-partitioned frontier-to-edges join +
     a MAX aggregate (map-side partial combine collapses hub fan-in
-    before the shuffle). The frontier only ever shrinks relative to
-    the improved set, and rounds are fixed — no driver-side graph
-    state, no convergence actions.
+    before the shuffle) + the fold into the level table. The frontier
+    only ever shrinks relative to the improved set, and rounds are
+    fixed — no driver-side graph state, no convergence actions.
     """
-    from linkgraph.graph import join_ready
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.algos.bfs import _relax
+    from linkgraph.graph import vertices
 
-    roll = RollingCheckpoint()
-    roll_f = RollingCheckpoint()
-    # one upfront shuffle+sort; each round's frontier join reuses the
-    # cached partitioning/ordering of the edge side (guide §2.4)
-    e = join_ready(edges.select("src", "dst"), "src").cache()
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    lv = roll(verts.select("vid", F.lit(0).cast("long").alias("level")))
-    frontier = lv
-    for _ in range(max_depth):
-        cand = (
-            frontier.join(e, frontier["vid"] == e["src"])
-            .select(F.col("dst").alias("vid"), (F.col("level") + 1).alias("level"))
-            .groupBy("vid")
-            .agg(F.max("level").alias("level"))
-        )
-        frontier = roll_f(
-            cand.join(lv.select("vid", F.col("level").alias("_old")), "vid")
-            .where(F.col("level") > F.col("_old"))
-            .select("vid", "level")
-        )
-        lv = roll(
-            frontier.unionByName(lv).groupBy("vid").agg(F.max("level").alias("level"))
-        )
-    e.unpersist()
-    return lv.select("vid", F.col("level").cast("long").alias("level"))
+    start = vertices(edges).withColumn("level", F.lit(0).cast("long"))
+    darts = edges.select("src", "dst")
+    return _relax(darts, start, ("vid",), "level", max_depth, longest=True)

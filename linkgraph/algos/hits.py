@@ -22,6 +22,13 @@ Vertices with no in-edges have auth 0 (resp. no out-edges → hub 0);
 they never contribute to either update, so the loop iterates over the
 aggregate supports only and the zero rows are restored by one final
 left join against the vertex set.
+
+Storage: that final join is returned as a ``localCheckpoint``, the one
+stored RDD a call leaves (freed with ``rolling.release``). The input's
+``(src, dst)`` projection is cached for the call only when the caller
+has not cached it (``linkgraph.rolling._scanned``); it, the two
+join-ready edge views, the vertex set and both vectors' rolled
+generations are released on return.
 """
 
 from __future__ import annotations
@@ -37,9 +44,9 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     from pyspark.sql import Observation
 
     from linkgraph.graph import join_ready
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.rolling import RollingCheckpoint, _scanned, release
 
-    de = edges.select("src", "dst").cache()
+    de, cached = _scanned(edges, "src", "dst")
     # the auth half-step joins on src, the hub half-step on dst — two
     # join-ready cached views so neither half-step re-shuffles the
     # edge side per iteration (guide §2.4)
@@ -53,42 +60,48 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     )
     roll_a = RollingCheckpoint()
     roll_h = RollingCheckpoint()
-    # hub_0 = 1 on the out-support (only hubs of edge sources are ever
-    # read by the auth update)
-    hub = de.select(F.col("src").alias("vid")).distinct().withColumn(
-        "hub", F.lit(1.0)
-    )
-    auth = None
-    for _ in range(iterations):
-        # L1 normalizers ride the checkpoint as Observations (the
-        # scc.py pattern) — two fewer .first() jobs per iteration
-        obs_a = Observation()
-        raw_a = roll_a(
-            de_src.join(hub, de_src["src"] == hub["vid"])
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("auth"))
-            .withColumnRenamed("dst", "vid")
-            .observe(obs_a, F.sum("auth").alias("s"))
+    try:
+        # hub_0 = 1 on the out-support (only hubs of edge sources are
+        # ever read by the auth update)
+        hub = de.select(F.col("src").alias("vid")).distinct().withColumn(
+            "hub", F.lit(1.0)
         )
-        norm_a = obs_a.get["s"]
-        auth = raw_a.select("vid", (F.col("auth") / F.lit(norm_a)).alias("auth"))
-        obs_h = Observation()
-        raw_h = roll_h(
-            de_dst.join(auth, de_dst["dst"] == auth["vid"])
-            .groupBy("src")
-            .agg(F.sum("auth").alias("hub"))
-            .withColumnRenamed("src", "vid")
-            .observe(obs_h, F.sum("hub").alias("s"))
+        auth = None
+        for _ in range(iterations):
+            # L1 normalizers ride the checkpoint as Observations (the
+            # scc.py pattern) — two fewer .first() jobs per iteration
+            obs_a = Observation()
+            raw_a = roll_a(
+                de_src.join(hub, de_src["src"] == hub["vid"])
+                .groupBy("dst")
+                .agg(F.sum("hub").alias("auth"))
+                .withColumnRenamed("dst", "vid")
+                .observe(obs_a, F.sum("auth").alias("s"))
+            )
+            norm_a = obs_a.get["s"]
+            auth = raw_a.select("vid", (F.col("auth") / F.lit(norm_a)).alias("auth"))
+            obs_h = Observation()
+            raw_h = roll_h(
+                de_dst.join(auth, de_dst["dst"] == auth["vid"])
+                .groupBy("src")
+                .agg(F.sum("auth").alias("hub"))
+                .withColumnRenamed("src", "vid")
+                .observe(obs_h, F.sum("hub").alias("s"))
+            )
+            norm_h = obs_h.get["s"]
+            hub = raw_h.select("vid", (F.col("hub") / F.lit(norm_h)).alias("hub"))
+        # computed before the finally frees what it reads
+        return (
+            verts.join(auth, "vid", "left")
+            .join(hub, "vid", "left")
+            .select(
+                "vid",
+                F.coalesce("auth", F.lit(0.0)).alias("auth"),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            )
+            .localCheckpoint()
         )
-        norm_h = obs_h.get["s"]
-        hub = raw_h.select("vid", (F.col("hub") / F.lit(norm_h)).alias("hub"))
-    out = (
-        verts.join(auth, "vid", "left")
-        .join(hub, "vid", "left")
-        .select(
-            "vid",
-            F.coalesce("auth", F.lit(0.0)).alias("auth"),
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-        )
-    )
-    return out
+    finally:
+        roll_a.release()
+        roll_h.release()
+        release(verts, de_dst, de_src, cached)

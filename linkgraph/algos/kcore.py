@@ -10,9 +10,12 @@ Scale shape per round: two semi-joins of the (cached) symmetric edge
 list against the alive set (shuffles keyed by src/dst) + one
 partial-aggregated count — the same budget as a CC superstep. Rounds
 are bounded by the peel depth (≤ max degree, in practice tiny on
-link graphs). The alive set is rolled through localCheckpoint every
-round because the plan references it twice (src and dst filters) —
-uncheckpointed it would re-execute 2^rounds (SURVEY.md §4).
+link graphs). The peel is the step of ``linkgraph.iterate.iterate``,
+which checkpoints the alive set every round: the plan references it
+twice (src and dst filters), and uncheckpointed it would re-execute
+2^rounds (SURVEY.md §4). The survivor count rides that checkpoint as
+the loop's watch; the loop stops at the first round that leaves it
+unchanged.
 
 ``fixed_iterations`` runs exactly N peel rounds without a convergence
 check — deterministic regardless of convergence; the driver gate
@@ -34,7 +37,8 @@ def k_core(
     """Returns ``DataFrame[vid: long, core_degree: long]`` — the
     vertices of the k-core with their in-core degrees."""
     from linkgraph.graph import join_ready, symmetrize, vertices
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.iterate import iterate
+    from linkgraph.rolling import release
 
     rounds = fixed_iterations if fixed_iterations is not None else max_iterations
     if rounds < 1:
@@ -42,17 +46,14 @@ def k_core(
         # 0, violating the cd >= k contract (and the unrolled SQL
         # oracle has no round-0 degree column) — reject instead
         raise ValueError("k_core needs at least one peel round")
-    roll = RollingCheckpoint()
     # join_ready("dst"): the first per-round semi-join (on dst) reuses
     # the cached partitioning/ordering, and joining dst BEFORE src
     # leaves the second join's output partitioned by src so the
     # groupBy("src") needs no exchange — one |E| shuffle per peel
     # round instead of three (guide §2.4)
     sym = join_ready(symmetrize(edges), "dst").cache()
-    alive = vertices(edges)
-    prev_n = None
-    out = None
-    for _ in range(rounds):
+
+    def peel(alive: DataFrame, s: int, _) -> DataFrame:
         asrc = alive.select(F.col("vid").alias("src"))
         adst = alive.select(F.col("vid").alias("dst"))
         deg = (
@@ -61,23 +62,24 @@ def k_core(
             .groupBy("src")
             .agg(F.count("*").cast("long").alias("core_degree"))
         )
-        survivors = deg.where(F.col("core_degree") >= k).select(
+        return deg.where(F.col("core_degree") >= k).select(
             F.col("src").alias("vid"), "core_degree"
         )
-        obs = None
-        if fixed_iterations is None:
-            # piggyback the convergence count on the peel itself: the
-            # eager localCheckpoint below is the action that populates
-            # the Observation — zero extra jobs per round
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            survivors = survivors.observe(obs, F.count(F.lit(1)).alias("n"))
-        out = roll(survivors)
-        alive = out.select("vid")
-        if obs is not None:
-            n = obs.get["n"]
-            if prev_n == n:
-                break
-            prev_n = n
-    return out
+    seen = {"n": None}
+
+    def until(values: dict) -> bool:
+        stable = values["n"] == seen["n"]
+        seen["n"] = values["n"]
+        return stable
+
+    converge = fixed_iterations is None
+    try:
+        return iterate(
+            vertices(edges).withColumn("core_degree", F.lit(0).cast("long")),
+            peel, rounds,
+            watch=[F.count(F.lit(1)).alias("n")] if converge else None,
+            until=until,
+        )
+    finally:
+        release(sym)

@@ -8,14 +8,17 @@ counts of ``graph.weighted_edges_from_events`` — so every arithmetic
 step is exact and the unrolled SQL oracle matches bit-for-bit at a
 fixed round count).
 
-Scale shape per round: one join + one partial-aggregated min, with the
-join's left side the FRONTIER (vertices whose cost improved last
-round) — the same delta argument as unweighted BFS: min-plus is
-monotone, so a vertex that didn't improve re-generates only candidate
-costs that already lost an earlier fold. Unlike BFS, a vertex can
-improve more than once (a longer-hop cheaper path arriving later
-re-enters the frontier) — exactly Bellman-Ford's relaxation order,
-still |frontier|-bound per round.
+The rounds are ``algos/bfs._relax`` steps on
+``linkgraph.iterate.iterate``, the relaxation BFS runs, with each
+dart's weight as its step: one join of the frontier (vertices whose
+cost improved last round) to the weighted darts, one partial-aggregated
+min, one fold into the ``(vid, cost, fresh)`` state, one checkpoint.
+The same delta argument as unweighted BFS holds: min-plus is monotone,
+so a vertex that didn't improve re-generates only candidate costs that
+already lost an earlier fold. Unlike BFS, a vertex can improve more
+than once (a longer-hop cheaper path arriving later re-enters the
+frontier) — exactly Bellman-Ford's relaxation order, still
+|frontier|-bound per round.
 """
 
 from __future__ import annotations
@@ -32,42 +35,12 @@ def sssp_weighted(
     """Returns ``DataFrame[vid: long, cost: long]`` — the cheapest
     path cost from the nearest source (multi-source fold, exact
     integer min) for every vertex reached within the round budget."""
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.algos.bfs import _relax
 
-    spark = wedges.sparkSession
-    roll = RollingCheckpoint()
-    roll_f = RollingCheckpoint()
-    from linkgraph.graph import join_ready
-
-    # per-round frontier joins reuse the cached edge-side partitioning
-    wsym = join_ready(
-        wedges.select("src", "dst", "weight").unionAll(
-            wedges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-            )
-        ),
-        "src",
-    ).cache()
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in sources], "vid long, cost long"
+    darts = wedges.select("src", "dst", "weight").unionAll(
+        wedges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     )
-    frontier = dist
-    for _ in range(fixed_iterations):
-        nbr = wsym.join(frontier, wsym["src"] == frontier["vid"]).select(
-            F.col("dst").alias("vid"),
-            (F.col("cost") + F.col("weight")).alias("cost"),
-        )
-        cand = nbr.groupBy("vid").agg(F.min("cost").alias("cost"))
-        frontier = roll_f(
-            cand.join(
-                dist.select("vid", F.col("cost").alias("_old")), "vid", "left"
-            )
-            .where(F.col("_old").isNull() | (F.col("cost") < F.col("_old")))
-            .select("vid", "cost")
-        )
-        dist = roll(
-            frontier.unionByName(dist)
-            .groupBy("vid")
-            .agg(F.min("cost").alias("cost"))
-        )
-    return dist
+    start = wedges.sparkSession.createDataFrame(
+        [(s, 0) for s in sorted({int(s) for s in sources})], "vid long, cost long"
+    )
+    return _relax(darts, start, ("vid",), "cost", fixed_iterations, weight="weight")

@@ -17,8 +17,13 @@ before the shuffle — a 10^8-degree hub never ships its whole
 neighbor list into a single task. Dead ends (isolated
 vertices can't occur on a symmetrized edge list, but a walk could in
 principle hit one on filtered graphs) terminate the walk early via
-the inner join. The frontier is rolled through localCheckpoint each
-step (single reference, but lineage still grows linearly).
+the inner join.
+
+The steps run in ``linkgraph.iterate.iterate``. The state is the
+output so far, ``(start_vid, step, vid)`` (node2vec also carries each
+position's ``prev``): step s reads the rows of step s − 1 as its
+frontier and appends the new positions, and the loop checkpoints that
+one table per step.
 """
 
 from __future__ import annotations
@@ -40,21 +45,14 @@ def random_walks(
     partially aggregates map-side."""
     from linkgraph.graph import join_ready, symmetrize, vertices
     from linkgraph.hashing import md5_prefix_hash
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.iterate import iterate
+    from linkgraph.rolling import release
 
-    # two rollers: the frontier's old generations are freed as the walk
-    # advances, so the growing output union must materialize into its
-    # OWN checkpoint each step — a union over freed frontier blocks
-    # would hit checkpointRDDBlockIdNotFound at collect time
-    roll = RollingCheckpoint()
-    roll_out = RollingCheckpoint()
     # per-step frontier join reuses the cached edge-side partitioning
     sym = join_ready(symmetrize(edges), "src").cache()
-    cur = vertices(edges).select(
-        F.col("vid").alias("start_vid"), F.col("vid").alias("vid")
-    )
-    out = cur.withColumn("step", F.lit(0).cast("long"))
-    for s in range(1, walk_len + 1):
+
+    def step(walks: DataFrame, s: int, _) -> DataFrame:
+        cur = walks.where(F.col("step") == s - 1)
         nxt = (
             cur.join(sym, cur["vid"] == sym["src"])
             .withColumn("h", md5_prefix_hash("src", s, "dst", seed))
@@ -71,11 +69,17 @@ def random_walks(
             step_plans.append(
                 nxt._jdf.queryExecution().executedPlan().toString()
             )
-        cur = roll(nxt)
-        out = roll_out(
-            out.unionByName(cur.withColumn("step", F.lit(s).cast("long")))
+        return walks.unionByName(
+            nxt.select("start_vid", F.lit(s).cast("long").alias("step"), "vid")
         )
-    return out.select("start_vid", "step", "vid")
+
+    try:
+        start = vertices(edges).select(
+            F.col("vid").alias("start_vid"), F.lit(0).cast("long").alias("step"), "vid"
+        )
+        return iterate(start, step, walk_len)
+    finally:
+        release(sym)
 
 
 def _step_hash(v_col, s: int, u_col, j, seed: int):
@@ -111,28 +115,21 @@ def node2vec_walks(
     triangle-enumeration budget, not a window.
     """
     from linkgraph.graph import join_ready, symmetrize, vertices
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.iterate import iterate
+    from linkgraph.rolling import release
 
     BIG = 1 << 33  # sentinel above any 32-bit md5 prefix
-    roll = RollingCheckpoint()
-    roll_out = RollingCheckpoint()
     # both per-step edge-side joins reuse cached partitioning: sym by
     # the walk-frontier key, adj by the (prev, dst) bias-lookup pair
     sym = join_ready(symmetrize(edges), "src").cache()
-    cur = vertices(edges).select(
-        F.col("vid").alias("start_vid"),
-        F.col("vid").alias("prev"),
-        F.col("vid").alias("vid"),
-    )
-    out = cur.select(
-        "start_vid", F.lit(0).cast("long").alias("step"), "vid"
-    )
     adj = join_ready(
         sym.select(F.col("src").alias("_a"), F.col("dst").alias("_b")),
         "_a",
         "_b",
     ).cache()
-    for s in range(1, walk_len + 1):
+
+    def step(walks: DataFrame, s: int, _) -> DataFrame:
+        cur = walks.where(F.col("step") == s - 1)
         cand = cur.join(sym, cur["vid"] == sym["src"])
         if s == 1:
             # first-order: every neighbor weight 1 (single ticket)
@@ -170,18 +167,22 @@ def node2vec_walks(
                 F.struct("key", "dst"),
             ).alias("m")
         )
-        cur = roll(
+        return walks.unionByName(
             nxt.select(
                 "start_vid",
-                F.col("m.prev").alias("prev"),
+                F.lit(s).cast("long").alias("step"),
                 F.col("m.vid").alias("vid"),
+                F.col("m.prev").alias("prev"),
             )
         )
-        out = roll_out(
-            out.unionByName(
-                cur.select(
-                    "start_vid", F.lit(s).cast("long").alias("step"), "vid"
-                )
-            )
+
+    try:
+        start = vertices(edges).select(
+            F.col("vid").alias("start_vid"),
+            F.lit(0).cast("long").alias("step"),
+            "vid",
+            F.col("vid").alias("prev"),
         )
-    return out.select("start_vid", "step", "vid")
+        return iterate(start, step, walk_len).select("start_vid", "step", "vid")
+    finally:
+        release(adj, sym)

@@ -497,6 +497,135 @@ def test_triangle_job_count_pinned(spark, edges_df):
     assert counts <= TRI_COUNT_JOBS
 
 
+def _frontier_graphs(spark, edges_df):
+    """The kernel inputs the frontier-family tests share: the ``powerlaw_ba``
+    edges, the same edges weighted, and oriented ``src < dst`` for
+    ``topo_levels``."""
+    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=5)
+    e = edges_df(edges)
+    w = spark.createDataFrame(
+        [(s, t, 1 + (s + t) % 3) for s, t in edges], "src long, dst long, weight long"
+    )
+    dag = edges_df([(min(s, t), max(s, t)) for s, t in edges])
+    return e, w, dag
+
+
+def test_frontier_kernels_release_storage(spark, edges_df):
+    """The frontier kernels, k-core, both walks and HITS release their
+    edge-side caches and every rolled generation but the one they return:
+    after a call the persisted-RDD count is at most one above its start,
+    and the result is still readable."""
+    from linkgraph.algos.bfs import (
+        bfs_distances,
+        harmonic_centrality,
+        landmark_distances,
+    )
+    from linkgraph.algos.dag import topo_levels
+    from linkgraph.algos.hits import hits
+    from linkgraph.algos.kcore import k_core
+    from linkgraph.algos.sssp import sssp_weighted
+    from linkgraph.algos.walks import node2vec_walks, random_walks
+
+    e, w, dag = _frontier_graphs(spark, edges_df)
+    runs = {
+        "bfs_fixed": (lambda: bfs_distances(e, [1, 7], fixed_iterations=3), None),
+        "bfs_converged": (lambda: bfs_distances(e, [1, 7]), 120),
+        "bfs_0": (lambda: bfs_distances(e, [1, 7], fixed_iterations=0), 2),
+        "landmark_distances": (lambda: landmark_distances(e, [1, 7, 30]), 360),
+        "harmonic_centrality": (lambda: harmonic_centrality(e, [1, 7, 30]), 120),
+        "sssp_weighted": (lambda: sssp_weighted(w, [1, 7]), 120),
+        "topo_levels": (lambda: topo_levels(dag, max_depth=3), 120),
+        "k_core_fixed": (lambda: k_core(e, k=2, fixed_iterations=2), 120),
+        "k_core_converged": (lambda: k_core(e, k=2), 120),
+        "random_walks": (lambda: random_walks(e, walk_len=2), 360),
+        "random_walks_0": (lambda: random_walks(e, walk_len=0), 120),
+        "node2vec_walks": (lambda: node2vec_walks(e, walk_len=2), 360),
+        "hits": (lambda: hits(e, iterations=2), 120),
+    }
+    for name, (run, rows) in runs.items():
+        before = _persisted(spark)
+        out = run()
+        assert _persisted(spark) <= before + 1, name
+        got = out.count()
+        assert rows is None or got == rows, name
+
+
+# Jobs per round in the test session (local[4], 8 shuffle partitions) on
+# a cached input. A relaxation round (BFS, landmark BFS, SSSP, topo
+# levels): the frontier-to-darts join, the candidate aggregate, the fold
+# into the state and the round's one checkpoint. A random-walk step: the
+# darts join, the argmin aggregate and the checkpoint; node2vec's
+# second-order bias joins a second edge-side table, one job more. A
+# k-core peel: two semi-joins, the degree count and the checkpoint.
+RELAX_ROUND_JOBS = 4
+WALK_STEP_JOBS = 3
+NODE2VEC_STEP_JOBS = WALK_STEP_JOBS + 1
+KCORE_ROUND_JOBS = 5
+
+
+def _round_jobs(spark, name: str, run) -> list[int]:
+    """Jobs ``run(r)`` launches for r = 2, 3, 4, as r-to-r differences."""
+    sc = spark.sparkContext
+
+    def jobs(r: int) -> int:
+        group = f"round-jobs-{name}-{r}"
+        sc.setJobGroup(group, f"{name} job count")
+        try:
+            run(r)
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    two, three, four = jobs(2), jobs(3), jobs(4)
+    return [three - two, four - three]
+
+
+@pytest.mark.parametrize("kernel", ["bfs", "landmark", "sssp", "topo"])
+def test_relax_round_job_count_pinned(spark, edges_df, kernel):
+    """A relaxation round costs RELAX_ROUND_JOBS jobs on every kernel
+    that shares the step: a change that adds one must say why."""
+    from linkgraph.algos.bfs import bfs_distances, landmark_distances
+    from linkgraph.algos.dag import topo_levels
+    from linkgraph.algos.sssp import sssp_weighted
+
+    e, w, dag = (df.cache() for df in _frontier_graphs(spark, edges_df))
+    for df in (e, w, dag):
+        df.count()
+    runs = {
+        "bfs": lambda r: bfs_distances(e, [1, 7], fixed_iterations=r),
+        "landmark": lambda r: landmark_distances(e, [1, 7, 30], fixed_iterations=r),
+        "sssp": lambda r: sssp_weighted(w, [1, 7], fixed_iterations=r),
+        "topo": lambda r: topo_levels(dag, max_depth=r),
+    }
+    try:
+        assert _round_jobs(spark, kernel, runs[kernel]) == [RELAX_ROUND_JOBS] * 2
+    finally:
+        for df in (e, w, dag):
+            df.unpersist()
+
+
+def test_walk_and_k_core_round_job_count_pinned(spark, edges_df):
+    """A walk step costs WALK_STEP_JOBS (node2vec NODE2VEC_STEP_JOBS)
+    and a k-core peel KCORE_ROUND_JOBS: a change that adds a job to
+    either must say why."""
+    from linkgraph.algos.kcore import k_core
+    from linkgraph.algos.walks import node2vec_walks, random_walks
+
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)).cache()
+    e.count()
+    try:
+        walks = _round_jobs(spark, "walks", lambda r: random_walks(e, walk_len=r))
+        n2v = _round_jobs(spark, "node2vec", lambda r: node2vec_walks(e, walk_len=r))
+        peel = _round_jobs(
+            spark, "k_core", lambda r: k_core(e, k=3, fixed_iterations=r)
+        )
+    finally:
+        e.unpersist()
+    assert walks == [WALK_STEP_JOBS] * 2
+    assert n2v == [NODE2VEC_STEP_JOBS] * 2
+    assert peel == [KCORE_ROUND_JOBS] * 2
+
+
 def test_k_core_clique_with_tail(spark, edges_df):
     """A 5-clique with a pendant chain: the 3-core is exactly the
     clique (in-core degree 4 each); the chain peels away by CASCADE
