@@ -40,12 +40,16 @@ from pyspark.sql import functions as F
 def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     """Returns ``DataFrame[vid: long, auth: double, hub: double]`` for
     every vertex of the directed graph ``edges[src, dst]``, L1
-    normalization (Σ auth = Σ hub = 1 over the support)."""
+    normalization (Σ auth = Σ hub = 1 over the support). Raises
+    ``ValueError`` unless ``iterations`` ≥ 1."""
     from pyspark.sql import Observation
 
     from linkgraph.graph import join_ready
     from linkgraph.rolling import RollingCheckpoint, _scanned, release
 
+    if iterations < 1:
+        # no half-step has run, so there is no authority vector to join
+        raise ValueError("hits needs at least one iteration")
     de, cached = _scanned(edges, "src", "dst")
     # the auth half-step joins on src, the hub half-step on dst — two
     # join-ready cached views so neither half-step re-shuffles the

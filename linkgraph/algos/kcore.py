@@ -37,7 +37,7 @@ def k_core(
     """Returns ``DataFrame[vid: long, core_degree: long]`` — the
     vertices of the k-core with their in-core degrees."""
     from linkgraph.graph import join_ready, symmetrize, vertices
-    from linkgraph.iterate import iterate
+    from linkgraph.iterate import iterate, unchanged
     from linkgraph.rolling import release
 
     rounds = fixed_iterations if fixed_iterations is not None else max_iterations
@@ -66,20 +66,13 @@ def k_core(
             F.col("src").alias("vid"), "core_degree"
         )
 
-    seen = {"n": None}
-
-    def until(values: dict) -> bool:
-        stable = values["n"] == seen["n"]
-        seen["n"] = values["n"]
-        return stable
-
     converge = fixed_iterations is None
     try:
         return iterate(
             vertices(edges).withColumn("core_degree", F.lit(0).cast("long")),
             peel, rounds,
             watch=[F.count(F.lit(1)).alias("n")] if converge else None,
-            until=until,
+            until=unchanged("n"),
         )
     finally:
         release(sym)

@@ -31,7 +31,16 @@ edge list against the shrinking active set + one partial-aggregated
 min (plan-audited: a hub's adjacency collapses map-side, never one
 task). The active set is rolled through localCheckpoint every round
 (it is referenced twice per round; uncheckpointed the plan
-re-executes 2^rounds — SURVEY.md §4).
+re-executes 2^rounds — SURVEY.md §4), and so are the winners so far.
+Every rolled generation but the returned winners, and the edge cache,
+is released on return.
+
+The rounds stay a hand-rolled loop. A port onto
+``linkgraph.iterate.iterate`` with one state table ``(vid, h, _r)``
+(``_r`` null while active) cut MIS to 12 jobs a round (from 14) and
+coloring to 7 (from 11) with identical rows, but on a 40-vertex path in
+falling priority order (local[4]) its rounds slowed superlinearly at a
+flat job count: 16 MIS rounds took 318 s, against 13 s for this loop.
 """
 
 from __future__ import annotations
@@ -68,13 +77,14 @@ def _local_min_rounds(
     neighbors when ``remove_neighbors``). Raises on round exhaustion
     with vertices still active unless ``allow_partial``."""
     from linkgraph.graph import join_ready, symmetrize, vertices
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.rolling import RollingCheckpoint, release
 
     roll = RollingCheckpoint()
     roll_out = RollingCheckpoint()
     # per-round joins hit sym on src first (and the dst join's output
     # already feeds groupBy(dst) exchange-free) — join-ready cache
     sym = join_ready(symmetrize(edges), "src").cache()
+    result = None
     try:
         active = roll(
             vertices(edges).select(
@@ -123,9 +133,12 @@ def _local_min_rounds(
                     f"{what} did not converge in {rounds} rounds; "
                     "raise max_rounds or pass allow_partial=True"
                 )
-        return out
+        result = out
     finally:
-        sym.unpersist()
+        roll.release()
+        roll_out.release(keep=result)
+        release(sym)
+    return result
 
 
 def maximal_independent_set(

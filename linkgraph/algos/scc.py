@@ -18,15 +18,18 @@ Outer round:
 3. Emit (vid, scc = color) for {v : b(v) = color(v)}, peel the
    settled vertices, repeat on the remainder.
 
-Both phases run through one shared min-label propagation with
-POINTER JUMPING: besides the edge message, each round folds
-color(color(v)) — valid because min-ancestor (and min-descendant)
-labels compose transitively — so a phase converges in O(log diameter)
-rounds, not O(diameter) (the plain loop measurably fails to converge
-within 60 rounds on the sf0.01 order-sequence graph, whose forward
-depth exceeds it; jumping converges in ~12). Convergence is detected
-by the exact decimal label sum carried as an ``Observation`` on the
-eager localCheckpoint — zero extra jobs per round.
+Both phases are CC's hash-min fixpoint (``cc._hash_min`` on
+``linkgraph.iterate.iterate``), run over directed edges with pointer
+jumping every round: after the edge message, each round compresses
+color(v) ← color(color(v)) — valid because min-ancestor (and
+min-descendant) labels compose transitively — so a phase converges in
+O(log diameter) rounds, not O(diameter) (the plain loop measurably
+fails to converge within 60 rounds on the sf0.01 order-sequence graph,
+whose forward depth exceeds it; jumping converges in ~12). The phase
+stops at the first round that changes no label, CC's changed-label
+count riding each round's checkpoint. Every vertex starts as its own
+label: on directed edges a source-only vertex receives no message, so
+CC's join-free identity round does not apply.
 
 Because the emitted label is the SCC's minimum vid — a canonical
 graph property independent of iteration schedule — the driver gate
@@ -45,8 +48,11 @@ Scale shape: each propagation round is two shuffle joins (edge
 message + jump) and one partial-aggregated min — the pointer-jumping
 CC superstep budget. Each outer round settles at least every current
 pivot plus the trimmed periphery; link graphs settle in 2-4 outer
-rounds (the giant SCC goes first, the DAG-ish remainder trims). All
-iterated tables roll through localCheckpoint.
+rounds (the giant SCC goes first, the DAG-ish remainder trims). The
+outer loop's tables (remaining edges, vertices, trimmed singletons,
+result) roll through localCheckpoint; every generation but the
+returned result, each phase's labels and the reversed edge cache are
+released on return.
 """
 
 from __future__ import annotations
@@ -55,43 +61,16 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def _min_label_propagate(
-    edges: DataFrame,
-    verts: DataFrame,
-    roll,
-    max_rounds: int,
-) -> DataFrame:
-    """Fixpoint of color(v) = min({v} ∪ {color(u): (u,v) ∈ edges}),
-    accelerated by pointer jumping (color(color(v)) is always a valid
-    label because the min-label relation is transitive). Returns
-    DataFrame[vid, color]."""
-    labels = roll(verts.withColumn("color", F.col("vid")))
-    prev_sum = None
-    for _ in range(max_rounds):
-        msg = edges.join(labels, edges["src"] == labels["vid"]).select(
-            F.col("dst").alias("vid"), "color"
-        )
-        jump = labels.join(
-            labels.select(
-                F.col("vid").alias("c_vid"), F.col("color").alias("c_color")
-            ),
-            F.col("color") == F.col("c_vid"),
-        ).select("vid", F.col("c_color").alias("color"))
-        obs = Observation()
-        labels = roll(
-            msg.unionByName(jump)
-            .unionByName(labels.select("vid", "color"))
-            .groupBy("vid")
-            .agg(F.min("color").alias("color"))
-            .observe(
-                obs,
-                F.sum(F.col("color").cast("decimal(38,0)")).alias("s"),
-            )
-        )
-        s = obs.get["s"]
-        if s == prev_sum:  # labels are monotone non-increasing
-            break
-        prev_sum = s
+def _phase(edges: DataFrame, verts: DataFrame, max_inner: int) -> DataFrame:
+    """color(v) = min({v} ∪ {color(u): (u, v) ∈ edges}) at its fixpoint
+    (at most ``max_inner`` rounds) → DataFrame[vid, component], the
+    loop's last rolled generation (free it with ``rolling.release``)."""
+    from linkgraph.algos.cc import _hash_min
+
+    labels, _ = _hash_min(
+        edges, verts.withColumn("component", F.col("vid")), max_inner,
+        converge=True, pointer_jumping=True, every=1, identity=False,
+    )
     return labels
 
 
@@ -101,152 +80,150 @@ def strongly_connected_components(
     """``edges``: DIRECTED DataFrame[src, dst]. Returns
     ``DataFrame[vid: long, scc: long]`` with scc = min vid of the
     strongly connected component."""
-    from linkgraph.rolling import RollingCheckpoint
+    from linkgraph.graph import join_ready
+    from linkgraph.rolling import RollingCheckpoint, release
 
     roll_e = RollingCheckpoint()
     roll_v = RollingCheckpoint()
-    roll_c = RollingCheckpoint()
-    roll_b = RollingCheckpoint()
     roll_t = RollingCheckpoint()
     roll_out = RollingCheckpoint()
-
-    from linkgraph.graph import join_ready
-
-    # remaining is joined on src by EVERY forward-propagation round —
-    # hash-partition + sort it once per outer round so those joins
-    # reuse the checkpointed partitioning/ordering (guide §2.4)
-    remaining = roll_e(join_ready(edges.select("src", "dst").distinct(), "src"))
-    # vertex-count Observations ride every verts checkpoint so the
-    # per-round emptiness checks cost zero extra jobs (guide §1.5)
-    obs_v = Observation()
-    verts = roll_v(
-        remaining.select(F.col("src").alias("vid"))
-        .unionByName(remaining.select(F.col("dst").alias("vid")))
-        .distinct()
-        .observe(obs_v, F.count(F.lit(1)).alias("n"))
-    )
-    verts_n = obs_v.get["n"]
-    result: DataFrame | None = None
-    for _ in range(max_outer):
-        if verts_n == 0:
-            break
-        # -- TRIM: a vertex with no incoming (or no outgoing) edge in
-        # the remaining graph is on no cycle — a singleton SCC. Peel
-        # those cheaply (two anti-joins per pass, no propagation)
-        # before the coloring phases; this is what keeps DAG chains /
-        # bowtie periphery from costing one full outer round per
-        # vertex (classic FW-BW-Trim).
-        for _ in range(3):
-            srcs = remaining.select(F.col("src").alias("vid")).distinct()
-            dsts = remaining.select(F.col("dst").alias("vid")).distinct()
-            obs = Observation()
-            trivial = roll_t(
-                verts.join(srcs, "vid", "left_anti")
-                .unionByName(verts.join(dsts, "vid", "left_anti"))
-                .distinct()
-                .select("vid", F.col("vid").alias("scc"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            if obs.get["n"] == 0:
+    colors = back = rev = result = out = None
+    try:
+        # remaining is joined on src by EVERY forward-propagation round —
+        # hash-partition + sort it once per outer round so those joins
+        # reuse the checkpointed partitioning/ordering (guide §2.4)
+        remaining = roll_e(join_ready(edges.select("src", "dst").distinct(), "src"))
+        # vertex-count Observations ride every verts checkpoint so the
+        # per-round emptiness checks cost zero extra jobs (guide §1.5)
+        obs_v = Observation()
+        verts = roll_v(
+            remaining.select(F.col("src").alias("vid"))
+            .unionByName(remaining.select(F.col("dst").alias("vid")))
+            .distinct()
+            .observe(obs_v, F.count(F.lit(1)).alias("n"))
+        )
+        verts_n = obs_v.get["n"]
+        for _ in range(max_outer):
+            if verts_n == 0:
                 break
-            result = roll_out(
-                trivial
-                if result is None
-                else result.unionByName(trivial)
+            # -- TRIM: a vertex with no incoming (or no outgoing) edge in
+            # the remaining graph is on no cycle — a singleton SCC. Peel
+            # those cheaply (two anti-joins per pass, no propagation)
+            # before the coloring phases; this is what keeps DAG chains /
+            # bowtie periphery from costing one full outer round per
+            # vertex (classic FW-BW-Trim).
+            for _ in range(3):
+                srcs = remaining.select(F.col("src").alias("vid")).distinct()
+                dsts = remaining.select(F.col("dst").alias("vid")).distinct()
+                obs = Observation()
+                trivial = roll_t(
+                    verts.join(srcs, "vid", "left_anti")
+                    .unionByName(verts.join(dsts, "vid", "left_anti"))
+                    .distinct()
+                    .select("vid", F.col("vid").alias("scc"))
+                    .observe(obs, F.count(F.lit(1)).alias("n"))
+                )
+                if obs.get["n"] == 0:
+                    break
+                result = roll_out(
+                    trivial
+                    if result is None
+                    else result.unionByName(trivial)
+                )
+                tv = result.select("vid")  # cumulative settled — anti-join safe
+                obs_v = Observation()
+                verts = roll_v(
+                    verts.join(tv, "vid", "left_anti").observe(
+                        obs_v, F.count(F.lit(1)).alias("n")
+                    )
+                )
+                verts_n = obs_v.get["n"]
+                # anti-join dst first, then src: the src anti-join's output
+                # keeps src hash-partitioning, so the next propagation's
+                # edge joins need no exchange (anti-joins commute)
+                remaining = roll_e(
+                    remaining.join(
+                        tv.select(F.col("vid").alias("dst")), "dst", "left_anti"
+                    ).join(
+                        tv.select(F.col("vid").alias("src")), "src", "left_anti"
+                    )
+                )
+            if verts_n == 0:
+                break
+            # -- forward: color = min ancestor ----------------------------
+            colors = _phase(remaining, verts, max_inner)
+            # -- same-color edge subgraph (the only edges SCCs can use) ---
+            ce = (
+                remaining.join(
+                    colors.select(
+                        F.col("vid").alias("src"), F.col("component").alias("c_src")
+                    ),
+                    "src",
+                )
+                .join(
+                    colors.select(
+                        F.col("vid").alias("dst"), F.col("component").alias("c_dst")
+                    ),
+                    "dst",
+                )
+                .where(F.col("c_src") == F.col("c_dst"))
+                .select("src", "dst")
             )
-            tv = result.select("vid")  # cumulative settled — anti-join safe
+            # -- backward: b = min descendant within the color class ------
+            # (labels flow against edge direction: orient dst→src); cache
+            # the REVERSED view join-ready so every backward round reuses
+            # its partitioning/ordering instead of re-shuffling it
+            rev = join_ready(
+                ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                "src",
+            ).cache()
+            back = _phase(rev, verts, max_inner)
+            # b(v) = color(v) ⟺ v reaches its pivot ⟺ v ∈ SCC(pivot)
+            # (the pivot is the strict minimum vid of its color class)
+            settled = (
+                colors.join(back.select("vid", F.col("component").alias("b")), "vid")
+                .where(F.col("b") == F.col("component"))
+                .select("vid", F.col("component").alias("scc"))
+            )
+            # ALWAYS materialize the accumulator into its own roller —
+            # settled lazily references the phases' labels, freed next
+            result = roll_out(
+                settled if result is None else result.unionByName(settled)
+            )
+            release(colors, back, rev)
+            # -- peel the settled vertices --------------------------------
+            done = result.select("vid")
             obs_v = Observation()
             verts = roll_v(
-                verts.join(tv, "vid", "left_anti").observe(
+                verts.join(done, "vid", "left_anti").observe(
                     obs_v, F.count(F.lit(1)).alias("n")
                 )
             )
             verts_n = obs_v.get["n"]
-            # anti-join dst first, then src: the src anti-join's output
-            # keeps src hash-partitioning, so the next propagation's
-            # edge joins need no exchange (anti-joins commute)
             remaining = roll_e(
                 remaining.join(
-                    tv.select(F.col("vid").alias("dst")), "dst", "left_anti"
+                    done.select(F.col("vid").alias("dst")), "dst", "left_anti"
                 ).join(
-                    tv.select(F.col("vid").alias("src")), "src", "left_anti"
+                    done.select(F.col("vid").alias("src")), "src", "left_anti"
                 )
             )
-        if verts_n == 0:
-            break
-        # -- forward: color = min ancestor ----------------------------
-        colors = _min_label_propagate(remaining, verts, roll_c, max_inner)
-        # -- same-color edge subgraph (the only edges SCCs can use) ---
-        ce = (
-            remaining.join(
-                colors.select(
-                    F.col("vid").alias("src"), F.col("color").alias("c_src")
-                ),
-                "src",
-            )
-            .join(
-                colors.select(
-                    F.col("vid").alias("dst"), F.col("color").alias("c_dst")
-                ),
-                "dst",
-            )
-            .where(F.col("c_src") == F.col("c_dst"))
-            .select("src", "dst")
-        )
-        # -- backward: b = min descendant within the color class ------
-        # (labels flow against edge direction: orient dst→src); cache
-        # the REVERSED view join-ready so every backward round reuses
-        # its partitioning/ordering instead of re-shuffling it
-        rev = join_ready(
-            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            "src",
-        ).cache()
-        back = _min_label_propagate(rev, verts, roll_b, max_inner)
-        # b(v) = color(v) ⟺ v reaches its pivot ⟺ v ∈ SCC(pivot)
-        # (the pivot is the strict minimum vid of its color class)
-        settled = (
-            colors.join(
-                back.select("vid", F.col("color").alias("b")), "vid"
-            )
-            .where(F.col("b") == F.col("color"))
-            .select("vid", F.col("color").alias("scc"))
-        )
-        # ALWAYS materialize the accumulator into its own roller —
-        # settled lazily references roller generations that the next
-        # outer round will free (the checkpointRDDBlockIdNotFound
-        # gotcha from random_walks)
-        result = roll_out(
-            settled if result is None else result.unionByName(settled)
-        )
-        # -- peel the settled vertices --------------------------------
-        done = result.select("vid")
-        obs_v = Observation()
-        verts = roll_v(
-            verts.join(done, "vid", "left_anti").observe(
-                obs_v, F.count(F.lit(1)).alias("n")
-            )
-        )
-        verts_n = obs_v.get["n"]
-        remaining = roll_e(
-            remaining.join(
-                done.select(F.col("vid").alias("dst")), "dst", "left_anti"
-            ).join(
-                done.select(F.col("vid").alias("src")), "src", "left_anti"
-            )
-        )
-        rev.unpersist()
-    else:
-        # the loop ran out of rounds with work left — NEVER return a
-        # silently-incomplete labeling (code-review finding: on an
-        # adversarial shape one SCC can settle per round)
-        if verts_n != 0:
-            raise RuntimeError(
-                "strongly_connected_components: max_outer="
-                f"{max_outer} exhausted with unsettled vertices — "
-                "raise max_outer (each round peels trim-able "
-                "periphery + every pivot SCC)"
-            )
-    if result is None:  # empty edge list
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "vid long, scc long")
-    return result
+        else:
+            # the loop ran out of rounds with work left — NEVER return a
+            # silently-incomplete labeling (code-review finding: on an
+            # adversarial shape one SCC can settle per round)
+            if verts_n != 0:
+                raise RuntimeError(
+                    "strongly_connected_components: max_outer="
+                    f"{max_outer} exhausted with unsettled vertices — "
+                    "raise max_outer (each round peels trim-able "
+                    "periphery + every pivot SCC)"
+                )
+        out = result
+    finally:
+        for roll in (roll_e, roll_v, roll_t):
+            roll.release()
+        roll_out.release(keep=out)
+        release(colors, back, rev)
+    if out is None:  # empty edge list
+        return edges.sparkSession.createDataFrame([], "vid long, scc long")
+    return out

@@ -8,13 +8,16 @@ reached once a round removes nothing and a fixed round count ≥ the
 peel depth is exact (same argument as the k-core driver gate).
 
 Scale shape per round: one degree-oriented adjacency over the
-surviving edge set, checkpointed (``triangles._adjacency`` — wedge
+surviving edge set, checkpointed (``triangles._adjacency_rows`` — wedge
 fan-out bounded by oriented out-degree, O(√m) even on power-law
 graphs); one per-edge ``common`` row per base edge, turned into its
 three support pairs by a single ``inline`` and a partial-aggregated
-count; one join back to the edge set. The survivors are rolled through
-localCheckpoint every round, and the round's adjacency is released
-once that roll has run.
+count; one join back to the edge set. The peel is the step of
+``linkgraph.iterate.iterate``: the round's adjacency is the step's
+``cut`` and the survivors are the loop's checkpoint, and both are
+released like any rolled generation. In convergence mode the survivor
+count rides that checkpoint as the loop's watch; the loop stops at the
+first round that leaves it unchanged (as in ``algos/kcore.py``).
 """
 
 from __future__ import annotations
@@ -77,30 +80,23 @@ def k_truss(
     """Edges of the k-truss → ``DataFrame[src, dst]`` (canonical
     src < dst). ``fixed_rounds`` runs exactly that many peel rounds
     (driver-gate mode — exact once ≥ the peel depth); otherwise peels
-    until a round removes no edge (one count action per round). Every
-    rolled generation but the returned one is released on return."""
-    from linkgraph.algos.triangles import _adjacency
-    from linkgraph.rolling import RollingCheckpoint
+    until a round removes no edge. Every rolled generation but the
+    returned one is released on return."""
+    from linkgraph.algos.triangles import _adjacency_rows
+    from linkgraph.iterate import iterate, unchanged
 
-    roll = RollingCheckpoint()
-    e = edges.select("src", "dst")
-    n_prev = None if fixed_rounds is not None else e.count()
-    rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    out = None
-    try:
-        for _ in range(rounds):
-            with _adjacency(e) as adj:
-                e = roll(
-                    e.join(_support(adj), ["src", "dst"])
-                    .where(F.col("supp") >= k - 2)
-                    .select("src", "dst")
-                )
-            if fixed_rounds is None:
-                n = e.count()
-                if n == n_prev:
-                    break
-                n_prev = n
-        out = e
-    finally:
-        roll.release(keep=out)
-    return out
+    def peel(e: DataFrame, s: int, cut) -> DataFrame:
+        adj = cut(_adjacency_rows(e, degree_oriented=True))
+        return (
+            e.join(_support(adj), ["src", "dst"])
+            .where(F.col("supp") >= k - 2)
+            .select("src", "dst")
+        )
+
+    converge = fixed_rounds is None
+    return iterate(
+        edges.select("src", "dst"), peel,
+        max_rounds if converge else fixed_rounds,
+        watch=[F.count(F.lit(1)).alias("n")] if converge else None,
+        until=unchanged("n"),
+    )

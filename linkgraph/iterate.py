@@ -121,3 +121,17 @@ def iterate(
     finally:
         roll.release(keep=out)
     return out
+
+
+def unchanged(key: str) -> Callable[[dict], bool]:
+    """An ``until`` that stops at the first checkpoint whose watched
+    ``key`` equals the previous checkpoint's (a peel's survivor count:
+    k-core, k-truss)."""
+    last = {}
+
+    def until(values: dict) -> bool:
+        stable = values[key] == last.get(key)
+        last[key] = values[key]
+        return stable
+
+    return until

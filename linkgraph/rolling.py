@@ -11,7 +11,7 @@ loop, so freeing it is safe.
 The checkpointed blocks belong to the *internal* JVM RDD wrapped by
 the returned Dataset's ``LogicalRDD`` plan node — ``DataFrame.rdd``
 derives a fresh (never-persisted) RDD, so unpersisting that is a
-no-op. We grab the JVM handle off the analyzed plan and unpersist it
+no-op. We grab the JVM handle off the optimized plan and unpersist it
 directly (verified: the persistent-RDD map shrinks by exactly the
 freed id each superstep).
 
@@ -36,9 +36,12 @@ from pyspark.sql import Column, DataFrame, Observation
 
 def _checkpointed_jrdd(df: DataFrame):
     """The persisted JVM RDD behind a localCheckpointed DataFrame, or
-    None if the plan isn't the expected ``LogicalRDD`` shape."""
+    None if the plan isn't the expected ``LogicalRDD`` shape. The
+    optimized plan is read, so a projection onto the checkpoint's own
+    columns (``_hash_min``'s return) counts; a cached DataFrame's
+    optimized plan is its cache entry, never a ``LogicalRDD``."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
+        plan = df._jdf.queryExecution().optimizedPlan()
         if plan.getClass().getSimpleName() != "LogicalRDD":
             return None
         return plan.rdd()

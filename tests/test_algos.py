@@ -510,11 +510,20 @@ def _frontier_graphs(spark, edges_df):
     return e, w, dag
 
 
+def _scc_graph(edges_df):
+    """The ``powerlaw_ba`` edges plus every third one reversed: a
+    directed graph with cycles, so SCC runs both of its phases."""
+    edges = graph_edges("powerlaw_ba", n=120, m=2, seed=5)
+    return edges_df(edges + [(t, s) for s, t in edges[::3]])
+
+
 def test_frontier_kernels_release_storage(spark, edges_df):
     """The frontier kernels, k-core, both walks and HITS release their
     edge-side caches and every rolled generation but the one they return:
     after a call the persisted-RDD count is at most one above its start,
-    and the result is still readable."""
+    and the result is still readable. So do the peel and label kernels:
+    MIS, coloring, SCC and landmark betweenness."""
+    from linkgraph.algos.betweenness import betweenness_landmark
     from linkgraph.algos.bfs import (
         bfs_distances,
         harmonic_centrality,
@@ -523,10 +532,13 @@ def test_frontier_kernels_release_storage(spark, edges_df):
     from linkgraph.algos.dag import topo_levels
     from linkgraph.algos.hits import hits
     from linkgraph.algos.kcore import k_core
+    from linkgraph.algos.mis import greedy_coloring, maximal_independent_set
+    from linkgraph.algos.scc import strongly_connected_components
     from linkgraph.algos.sssp import sssp_weighted
     from linkgraph.algos.walks import node2vec_walks, random_walks
 
     e, w, dag = _frontier_graphs(spark, edges_df)
+    directed = _scc_graph(edges_df)
     runs = {
         "bfs_fixed": (lambda: bfs_distances(e, [1, 7], fixed_iterations=3), None),
         "bfs_converged": (lambda: bfs_distances(e, [1, 7]), 120),
@@ -541,6 +553,16 @@ def test_frontier_kernels_release_storage(spark, edges_df):
         "random_walks_0": (lambda: random_walks(e, walk_len=0), 120),
         "node2vec_walks": (lambda: node2vec_walks(e, walk_len=2), 360),
         "hits": (lambda: hits(e, iterations=2), 120),
+        "mis": (lambda: maximal_independent_set(e), 70),
+        "mis_partial": (
+            lambda: maximal_independent_set(e, fixed_iterations=2, allow_partial=True),
+            68,
+        ),
+        "greedy_coloring": (lambda: greedy_coloring(e), 120),
+        "scc": (lambda: strongly_connected_components(directed), 120),
+        "betweenness_landmark": (
+            lambda: betweenness_landmark(e, [1, 7, 30], depth=4), 120
+        ),
     }
     for name, (run, rows) in runs.items():
         before = _persisted(spark)
@@ -561,6 +583,16 @@ RELAX_ROUND_JOBS = 4
 WALK_STEP_JOBS = 3
 NODE2VEC_STEP_JOBS = WALK_STEP_JOBS + 1
 KCORE_ROUND_JOBS = 5
+# A MIS or coloring round (on _priority_path, whose rounds all have the
+# same shape): the local-min aggregate, the winners' checkpoint, the
+# active set's checkpoint and its emptiness check; MIS also finds the
+# winners' neighbours. A k-truss peel builds and checkpoints
+# the surviving edges' degree-oriented adjacency, counts the support
+# and checkpoints the survivors. SCC: one whole call on _scc_graph.
+MIS_ROUND_JOBS = 14
+COLORING_ROUND_JOBS = 11
+KTRUSS_ROUND_JOBS = 13
+SCC_CALL_JOBS = 182
 
 
 def _round_jobs(spark, name: str, run) -> list[int]:
@@ -624,6 +656,67 @@ def test_walk_and_k_core_round_job_count_pinned(spark, edges_df):
     assert walks == [WALK_STEP_JOBS] * 2
     assert n2v == [NODE2VEC_STEP_JOBS] * 2
     assert peel == [KCORE_ROUND_JOBS] * 2
+
+
+def _priority_path(n: int = 40, seed: int = 985) -> list[tuple[int, int]]:
+    """A path through 0..n-1 in falling ``mis._priority`` order: each
+    local-min round has one winner, the path's last vertex, so MIS and
+    coloring run about n/2 and n rounds of the same shape."""
+    import hashlib
+
+    def h(v: int) -> int:
+        return int(hashlib.md5(f"{v}:{seed}".encode()).hexdigest()[:15], 16)
+
+    order = sorted(range(n), key=h, reverse=True)
+    return list(zip(order, order[1:]))
+
+
+def test_peel_and_label_job_counts_pinned(spark, edges_df):
+    """A MIS round costs MIS_ROUND_JOBS, a coloring round
+    COLORING_ROUND_JOBS, a k-truss peel KTRUSS_ROUND_JOBS and an SCC
+    call at most SCC_CALL_JOBS: a change that adds a job must say why."""
+    from linkgraph.algos.mis import greedy_coloring, maximal_independent_set
+    from linkgraph.algos.scc import strongly_connected_components
+    from linkgraph.algos.truss import k_truss
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    e = edges_df(graph_edges("powerlaw_ba", n=120, m=2, seed=5)).cache()
+    path = edges_df(_priority_path()).cache()
+    directed = _scc_graph(edges_df).cache()
+    for df in (e, path, directed):
+        df.count()
+    sc = spark.sparkContext
+    try:
+        mis = _round_jobs(
+            spark, "mis",
+            lambda r: noop(
+                maximal_independent_set(path, fixed_iterations=r, allow_partial=True)
+            ),
+        )
+        coloring = _round_jobs(
+            spark, "coloring",
+            lambda r: noop(
+                greedy_coloring(path, fixed_iterations=r, allow_partial=True)
+            ),
+        )
+        truss = _round_jobs(
+            spark, "k_truss", lambda r: noop(k_truss(e, k=3, fixed_rounds=r))
+        )
+        sc.setJobGroup("scc-call-jobs", "scc job count")
+        try:
+            noop(strongly_connected_components(directed))
+        finally:
+            sc.setJobGroup(None, None)
+        scc = len(sc.statusTracker().getJobIdsForGroup("scc-call-jobs"))
+    finally:
+        for df in (e, path, directed):
+            df.unpersist()
+    assert mis == [MIS_ROUND_JOBS] * 2
+    assert coloring == [COLORING_ROUND_JOBS] * 2
+    assert truss == [KTRUSS_ROUND_JOBS] * 2
+    assert scc <= SCC_CALL_JOBS, scc
 
 
 def test_k_core_clique_with_tail(spark, edges_df):
@@ -1090,6 +1183,16 @@ def test_label_propagation_weighted_prefers_heavy_edge(spark):
     assert got[2] == 0  # weight-5 vote beats weight-1 vote
     assert got[1] == 0  # 0's vote (1) ties 2's vote (1) → min label 0
     assert got[0] == 2  # neighbor 2 votes with weight 5, neighbor 1 with 1
+
+
+def test_hits_rejects_zero_iterations(spark, edges_df):
+    """No half-step at 0 iterations leaves no authority vector to
+    return: ``hits`` rejects it with a ValueError, as ``k_core`` rejects
+    0 peel rounds."""
+    from linkgraph.algos.hits import hits
+
+    with pytest.raises(ValueError, match="at least one iteration"):
+        hits(edges_df([(1, 2), (2, 3)]), iterations=0)
 
 
 def test_hits_hand_computed(spark, edges_df):

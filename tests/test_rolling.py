@@ -102,11 +102,9 @@ def test_kernels_keep_a_callers_equal_plan_cache(spark, tmp_path):
 # RollingCheckpoint; every other loop runs in linkgraph/iterate.py. The
 # list shrinks as loops move onto iterate.
 HAND_ROLLED = {
-    "algos/betweenness.py",
     "algos/hits.py",
     "algos/mis.py",
     "algos/scc.py",
-    "algos/truss.py",
     "partition/hdrf.py",
     "partition/ne.py",
     "pipeline/similarity.py",

@@ -5,7 +5,9 @@ docstring.
     python tools/count_loc.py linkgraph                # total
     python tools/count_loc.py linkgraph/pregel.py ...  # per file + total
 
-A directory is walked for ``*.py`` files.
+A directory is walked for ``*.py`` files. With no path, ``-h``,
+``--help`` or a path that does not exist it prints this text and
+exits 2.
 """
 
 from __future__ import annotations
@@ -41,6 +43,9 @@ def code_lines(path: Path) -> int:
 
 
 def main(args: list[str]) -> None:
+    if not args or any(a in ("-h", "--help") or not Path(a).exists() for a in args):
+        print(__doc__.strip(), file=sys.stderr)
+        sys.exit(2)
     total = 0
     for arg in args:
         root = Path(arg)
